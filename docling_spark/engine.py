@@ -11,11 +11,14 @@ North-rule machinery (SURVEY.md §3.4, §4):
 - **Arrow-batched extraction** via ``mapInPandas`` - one Python invocation
   per record batch, never per row; heavy state (none today, model caches
   later) would live in per-executor module globals.
-- **Per-partition lineage/metrics**: each task emits (partition_id,
-  doc_count, byte_count, failure list) rows to a metrics table.
-- **Checkpoint manifest + resume**: output is written per url-hash bucket;
-  a manifest records committed buckets; resume anti-joins pending buckets
-  against the manifest.
+- **Per-partition lineage/metrics**: (partition_id, doc_count,
+  byte_count, failure list) rows aggregated from the results' own
+  columns.
+- **Checkpoint manifest + resume**: the input is read once and staged by
+  url-hash commit group; each group's output is written as a unit, then
+  committed by a driver-side manifest file (no Spark job); resume skips
+  the committed buckets. Spark jobs do only the extraction work, plus one
+  staging pass and one metrics pass per run.
 
 Reference lifecycle being mirrored: ``DocumentConverter.convert_all``
 (``/root/reference/docling/document_converter.py:505-590``) with structured
@@ -27,11 +30,15 @@ from __future__ import annotations
 
 import json
 import time
+import uuid
 from typing import Iterable, Iterator, Optional
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -420,10 +427,12 @@ def extract_pages(
     return cols.mapInPandas(fn, schema=schema)
 
 
-def partition_metrics(results: DataFrame) -> DataFrame:
-    """Per-partition lineage rows (north rule): doc/byte counts + failures."""
+def partition_metrics(results: DataFrame,
+                      by: tuple[str, ...] = ("partition_id",)) -> DataFrame:
+    """Per-partition lineage rows (north rule): doc/byte counts + failures,
+    one row per ``by`` key (the checkpointed run adds its commit group)."""
     return (
-        results.groupBy("partition_id")
+        results.groupBy(*by)
         .agg(
             F.count(F.lit(1)).alias("doc_count"),
             F.sum("html_bytes").alias("byte_count"),
@@ -439,15 +448,34 @@ def partition_metrics(results: DataFrame) -> DataFrame:
 
 # ----------------------------------------------------- checkpointed runs
 
+# One row per committed bucket; the driver writes it, Spark reads it.
+MANIFEST_SCHEMA = StructType([
+    StructField("bucket", IntegerType(), False),
+    StructField("committed_at", DoubleType(), False),
+])
+
+# results/ as read back: the extraction columns plus the commit group.
+RESULTS_SCHEMA = StructType(
+    EXTRACT_SCHEMA.fields + [StructField("grp", IntegerType(), True)])
+
+
 class CheckpointedExtraction:
     """Bucket-wise extraction with a commit manifest enabling resume.
 
     The input is split into ``num_buckets`` disjoint buckets by
-    ``pmod(xxhash64(url), num_buckets)``. Buckets are processed in groups;
-    after each group's output lands, the manifest gains one row per bucket
-    (atomic-enough for parquet-on-posix; an Iceberg snapshot commit in
-    production). ``run()`` anti-joins pending buckets against the manifest,
-    so a re-run after a crash resumes from the last committed group.
+    ``pmod(xxhash64(url), num_buckets)``, and the buckets into fixed commit
+    groups of ``group_size``. ``run()`` reads the input ONCE: the pending
+    groups' ``(url, html)`` are staged into ``staged/``, partitioned by
+    group, so each group's extraction reads only its own directory. After
+    a group's results land, the driver appends the group's manifest rows
+    as one parquet file through the Hadoop FileSystem (an Iceberg snapshot
+    commit in production) - no Spark job per commit. Per-partition metrics
+    are written once, at the end of the run, from one pass over
+    ``results/``; then ``staged/`` is deleted. A re-run skips the buckets
+    the manifest holds, so it resumes from the last committed group.
+
+    Layout under ``out_dir``: ``results/grp=<gid>``, ``metrics/grp=<gid>``,
+    ``manifest/`` and, while a run is in flight, ``staged/grp=<gid>``.
     """
 
     def __init__(self, spark: SparkSession, out_dir: str,
@@ -459,67 +487,115 @@ class CheckpointedExtraction:
         self.results_path = f"{self.out_dir}/results"
         self.metrics_path = f"{self.out_dir}/metrics"
         self.manifest_path = f"{self.out_dir}/manifest"
+        self.staged_path = f"{self.out_dir}/staged"
+
+    def _hadoop(self, path: str):
+        """``path`` and the Hadoop FileSystem that Spark reads it with, so
+        a scheme-qualified output (``file://``, ``s3a://``) resolves the
+        same way for the driver's own reads and writes."""
+        jvm_path = self.spark._jvm.org.apache.hadoop.fs.Path(path)
+        conf = self.spark._jsparkSession.sessionState().newHadoopConf()
+        return jvm_path.getFileSystem(conf), jvm_path
 
     def committed_buckets(self) -> set[int]:
-        import pathlib
-        if not pathlib.Path(self.manifest_path).exists():
+        fs, path = self._hadoop(self.manifest_path)
+        if not fs.exists(path):
             return set()
+        rows = self.spark.read.schema(MANIFEST_SCHEMA).parquet(
+            self.manifest_path).collect()
+        return {r["bucket"] for r in rows}
+
+    def _commit(self, gid: int, buckets: list[int]) -> None:
+        """Append the group's manifest rows as ONE parquet file, without a
+        Spark job. It is written under a ``_``-prefixed name, which Spark's
+        readers skip, and then renamed into place: a crash can lose the
+        whole group's commit but never expose half of it."""
+        sink = pa.BufferOutputStream()
+        pq.write_table(pa.Table.from_pydict(
+            {"bucket": buckets, "committed_at": [time.time()] * len(buckets)},
+            schema=to_arrow_schema(MANIFEST_SCHEMA)), sink)
+        name = f"commit-{gid}-{uuid.uuid4().hex}.parquet"
+        fs, tmp = self._hadoop(f"{self.manifest_path}/_{name}")
+        out = fs.create(tmp, False)
         try:
-            rows = self.spark.read.parquet(self.manifest_path).collect()
-            return {r["bucket"] for r in rows}
-        except Exception:
-            return set()
+            out.write(sink.getvalue().to_pybytes())
+        finally:
+            out.close()
+        _, final = self._hadoop(f"{self.manifest_path}/{name}")
+        if not fs.rename(tmp, final):
+            raise IOError(f"manifest commit rename failed: {tmp} -> {final}")
 
     def run(self, pages: DataFrame, skew_threshold: int = 1 << 20) -> dict:
         done = self.committed_buckets()
-        bucketed = pages.withColumn(
-            "bucket", F.pmod(F.xxhash64("url"), F.lit(self.num_buckets)))
-        processed = []
+        size = self.group_size
         # Groups are a FIXED partition of range(num_buckets) — never derived
         # from the order-dependent pending list — so a retried group always
         # lands on the same grp=<gid> directory even after a partial commit
         # (a torn manifest write must not shift group boundaries).
-        for gid in range(0, self.num_buckets, self.group_size):
-            full_group = list(range(gid, min(gid + self.group_size,
-                                             self.num_buckets)))
-            group = [b for b in full_group if b not in done]
-            if not group:
-                continue
-            # Re-extract the WHOLE fixed group, not just its pending subset:
-            # grp=<gid> is overwritten as a unit, so it must always hold the
-            # full group's rows or a torn manifest would silently drop the
-            # already-committed buckets' output on resume.
-            part = bucketed.where(
-                F.col("bucket").isin(full_group)).drop("bucket")
-            results = extract_pages(part, skew_threshold=skew_threshold)
-            # Idempotent commit protocol: each group's results land in a
-            # key=value subdirectory with overwrite semantics, so a crash
-            # between the results write and the manifest write leaves a
-            # directory that the resumed run simply overwrites - no
-            # duplicate rows, no inflated metrics. (An Iceberg snapshot
-            # commit in production.) Readers of results_path see `grp` as
-            # a discovered partition column.
-            grp_results = f"{self.results_path}/grp={gid}"
-            results.write.mode("overwrite").parquet(grp_results)
-            # Metrics come from ONE scan of the group's own output - never
-            # a re-read of everything committed so far.
-            metrics = partition_metrics(
-                self.spark.read.parquet(grp_results))
-            metrics.write.mode("overwrite").parquet(
-                f"{self.metrics_path}/grp={gid}")
-            manifest = self.spark.createDataFrame(
-                [(b, time.time()) for b in group], "bucket int, committed_at double")
-            # coalesce(1): the group commit is ONE parquet file, so it is
-            # atomic-enough on posix rename semantics — a crash can lose the
-            # whole group's manifest row-set but never half of it.
-            manifest.coalesce(1).write.mode("append").parquet(
-                self.manifest_path)
-            processed.extend(group)
+        pending = {}
+        for gid in range(0, self.num_buckets, size):
+            group = [b for b in range(gid, min(gid + size, self.num_buckets))
+                     if b not in done]
+            if group:
+                pending[gid] = group
+        processed = []
+        if pending:
+            # One pass over the input stages every pending group; each
+            # group's read below is pruned to its own directory.
+            bucket = F.pmod(F.xxhash64("url"), F.lit(self.num_buckets))
+            staged = (pages.select("url", "html")
+                      .withColumn("grp", (bucket - bucket % size).cast("int"))
+                      .where(F.col("grp").isin(list(pending))))
+            staged.write.mode("overwrite").partitionBy("grp").parquet(
+                self.staged_path)
+            # The explicit schema also covers an input with no rows, which
+            # leaves no grp=<gid> directory to infer it from.
+            staged = self.spark.read.schema(staged.schema).parquet(
+                self.staged_path)
+            for gid, group in pending.items():
+                # Re-extract the WHOLE fixed group, not just its pending
+                # subset: grp=<gid> is overwritten as a unit, so it must
+                # always hold the full group's rows or a torn manifest would
+                # silently drop the already-committed buckets' output on
+                # resume.
+                results = extract_pages(staged.where(F.col("grp") == gid),
+                                        skew_threshold=skew_threshold)
+                # Idempotent commit protocol: each group's results land in a
+                # key=value subdirectory with overwrite semantics, so a
+                # crash between the results write and the manifest commit
+                # leaves a directory that the resumed run simply overwrites
+                # - no duplicate rows, no inflated metrics. Readers of
+                # results_path see `grp` as a discovered partition column.
+                results.write.mode("overwrite").parquet(
+                    f"{self.results_path}/grp={gid}")
+                self._commit(gid, group)
+                processed.extend(group)
+        self._write_metrics(pending)
+        fs, path = self._hadoop(self.staged_path)
+        fs.delete(path, True)
         return {
             "resumed_from": sorted(done),
             "processed": processed,
             "total_buckets": self.num_buckets,
         }
+
+    def _write_metrics(self, pending: dict) -> None:
+        """Replace ``metrics/grp=<gid>`` for every group extracted in this
+        run, and for any committed group whose metrics a crashed run never
+        wrote, from one column-pruned pass over their results."""
+        fs, path = self._hadoop(self.metrics_path)
+        have = ({s.getPath().getName() for s in fs.listStatus(path)}
+                if fs.exists(path) else set())
+        todo = [gid for gid in range(0, self.num_buckets, self.group_size)
+                if gid in pending or f"grp={gid}" not in have]
+        if not todo:
+            return
+        for gid in todo:
+            fs.delete(self._hadoop(f"{self.metrics_path}/grp={gid}")[1], True)
+        results = self.spark.read.schema(RESULTS_SCHEMA).parquet(
+            self.results_path).where(F.col("grp").isin(todo))
+        partition_metrics(results, by=("grp", "partition_id")).write.mode(
+            "append").partitionBy("grp").parquet(self.metrics_path)
 
 
 # ------------------------------------------------------------- utilities

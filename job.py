@@ -11,8 +11,11 @@ Submit with:
 
 The job is resumable: re-submitting with the same --output continues from
 the last committed bucket group (engine.CheckpointedExtraction manifest).
-Per-partition lineage rows land in <output>/metrics; results in
-<output>/results partitioned by commit bucket.
+Results land in <output>/results partitioned by commit group, each group
+as it commits. Per-partition lineage rows land in <output>/metrics once,
+at the end of the run. The input is read once into the transient
+<output>/staged, deleted at the end of the run, so the output needs
+scratch space about equal to the pending input.
 """
 
 from __future__ import annotations

@@ -2,7 +2,11 @@
 parallelism invariance (SURVEY.md §7 v2 machinery)."""
 
 import pathlib
+import shutil
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from docling_spark import engine, pages as pages_mod
@@ -72,6 +76,66 @@ def test_checkpoint_resume(spark, tmp_path):
     assert r2["processed"] == []
     assert sorted(r2["resumed_from"]) == [0, 1, 2, 3]
     assert spark.read.parquet(ck.results_path).count() == 40
+    # metrics land at the end of a run: a crash after the last commit but
+    # before them is healed by the next run without re-extracting
+    shutil.rmtree(ck.metrics_path)
+    r3 = ck2.run(pages)
+    assert r3["processed"] == []
+    assert _metrics_docs(spark, ck) == 40
+
+
+def _metrics_docs(spark, ck):
+    return spark.read.parquet(ck.metrics_path).agg(
+        F.sum("doc_count")).first()[0]
+
+
+def test_checkpoint_resume_on_uri_output(spark, tmp_path):
+    """A scheme-qualified output resumes too: the manifest is looked up
+    through the Hadoop FileSystem Spark reads it with, not a local path."""
+    pages = _pages(spark, 40)
+    out = (tmp_path / "uri").as_uri()
+    assert out.startswith("file://")
+    r1 = engine.CheckpointedExtraction(spark, out, num_buckets=4,
+                                       group_size=2).run(pages)
+    assert sorted(r1["processed"]) == [0, 1, 2, 3]
+    ck = engine.CheckpointedExtraction(spark, out, num_buckets=4,
+                                       group_size=2)
+    r2 = ck.run(pages)
+    assert r2["processed"] == []
+    assert sorted(r2["resumed_from"]) == [0, 1, 2, 3]
+    assert spark.read.parquet(ck.results_path).count() == 40
+
+
+def test_checkpoint_jobs_per_commit_group(spark, tmp_path):
+    """Staging, metrics and manifest commits are per run, not per group:
+    doubling the commit groups adds at most one extraction write's jobs
+    per extra group.  The caller's job group and description are left
+    untouched, so a caller can attribute every job of the run."""
+    pages = _pages(spark, 40)
+    sc = spark.sparkContext
+
+    def jobs(action) -> int:
+        tag = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(tag, tag)
+        try:
+            action()
+            assert sc.getLocalProperty("spark.job.description") == tag
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    def run(groups):
+        out = str(tmp_path / f"g{groups}")
+        ck = engine.CheckpointedExtraction(spark, out, num_buckets=4,
+                                           group_size=4 // groups)
+        return lambda: ck.run(pages)
+
+    write = jobs(lambda: engine.extract_pages(pages).write.parquet(
+        str(tmp_path / "write")))
+    assert write > 0
+    g, g2 = jobs(run(2)), jobs(run(4))
+    assert g2 - g <= 2 * write, (g, g2, write)
 
 
 def test_checkpoint_torn_manifest_resume(spark, tmp_path):
@@ -90,11 +154,15 @@ def test_checkpoint_torn_manifest_resume(spark, tmp_path):
     # is now half-committed) but leave the results directory intact
     mf = spark.read.parquet(ck.manifest_path)
     kept = mf.where("bucket <> 1")
-    import shutil
     tmp_mf = str(tmp_path / "mf_tmp")
     kept.coalesce(1).write.mode("overwrite").parquet(tmp_mf)
     shutil.rmtree(ck.manifest_path)
     shutil.move(tmp_mf, ck.manifest_path)
+    # a commit torn before its rename leaves a `_`-prefixed temp file that
+    # readers must not see
+    pq.write_table(pa.table({"bucket": pa.array([1], pa.int32()),
+                             "committed_at": [0.0]}),
+                   f"{ck.manifest_path}/_commit-torn.parquet")
     ck2 = engine.CheckpointedExtraction(spark, out, num_buckets=4,
                                         group_size=2)
     assert sorted(ck2.committed_buckets()) == [0, 2, 3]
@@ -105,6 +173,24 @@ def test_checkpoint_torn_manifest_resume(spark, tmp_path):
     res = spark.read.parquet(ck.results_path)
     assert res.count() == 40
     assert res.select("url").distinct().count() == 40
+    # the re-extracted group's metrics replace, not add to, the old ones
+    assert _metrics_docs(spark, ck) == 40
+    assert not (tmp_path / "torn" / "staged").exists()
+    assert sorted(ck2.committed_buckets()) == [0, 1, 2, 3]
+
+
+def test_checkpoint_empty_pages(spark, tmp_path):
+    """An empty pages table stages no group directory at all; every bucket
+    still commits and results/ reads back empty with the full schema."""
+    pages = spark.createDataFrame([], "url string, html binary")
+    ck = engine.CheckpointedExtraction(spark, str(tmp_path / "empty"),
+                                       num_buckets=4, group_size=2)
+    r = ck.run(pages)
+    assert r["processed"] == [0, 1, 2, 3]
+    assert ck.committed_buckets() == {0, 1, 2, 3}
+    res = spark.read.parquet(ck.results_path)
+    assert res.count() == 0
+    assert set(engine.EXTRACT_SCHEMA.fieldNames()) <= set(res.columns)
 
 
 def test_parallelism_invariance(spark):
