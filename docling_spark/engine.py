@@ -9,8 +9,10 @@ North-rule machinery (SURVEY.md §3.4, §4):
   share an Arrow batch with the bulk), then unioned back.  AQE only fixes
   join/shuffle skew, not map-side payload skew, so this is done explicitly.
 - **Arrow-batched extraction** via ``mapInPandas`` - one Python invocation
-  per record batch, never per row; heavy state (none today, model caches
-  later) would live in per-executor module globals.
+  per record batch, never per row. Each document is converted by the
+  first matching row of one ordered format table (extension plus content
+  sniff); per-format side inputs travel as one ``{format: {basename:
+  value}}`` map, and each optional export adds one column.
 - **Per-partition lineage/metrics**: (partition_id, doc_count,
   byte_count, failure list) rows aggregated from the results' own
   columns.
@@ -28,7 +30,7 @@ document NEVER fails the task; it yields status='failure' + error message.
 
 from __future__ import annotations
 
-import json
+import functools
 import time
 import uuid
 from typing import Iterable, Iterator, Optional
@@ -77,61 +79,153 @@ METRICS_SCHEMA = StructType([
 ])
 
 
-def _extract_batches(batches: Iterable[pd.DataFrame],
-                     ebcdic_layouts: Optional[dict] = None,
-                     xbrl_taxonomies: Optional[dict] = None,
-                     latex_inputs: Optional[dict] = None,
-                     with_doctags: bool = False,
-                     with_html: bool = False,
-                     pdf_passwords: Optional[dict] = None
-                     ) -> Iterator[pd.DataFrame]:
-    r"""mapInPandas worker: one call per Arrow batch; per-doc error envelope.
+# The formats that take a side input, and the optional export columns.
+SIDE_INPUT_FORMATS = ("pdf", "ebcdic", "xbrl", "latex")
+EXTRA_EXPORTS = ("doctags", "html")
 
-    ``ebcdic_layouts`` maps a url basename (without extension) to its
-    copybook layout JSON - EBCDIC payloads are undecodable without one, so
-    the engine takes the mapping as a small broadcastable dict (the Spark
-    analog of the reference's sidecar ``.layout.json`` files).
-    ``xbrl_taxonomies`` maps a url basename to a {path: bytes} taxonomy
-    mapping (the reference's taxonomy-package directory option).
-    ``latex_inputs`` maps a url basename to a {filename: bytes} mapping
-    for \input/\include resolution (multi-file arXiv projects).
-    """
-    # Imports inside the function so the closure ships cleanly to executors.
-    import hashlib
 
-    from pyspark import TaskContext
+def _check_options(side_inputs: Optional[dict],
+                   extra_exports: tuple[str, ...]) -> tuple[str, ...]:
+    """Reject unknown side-input formats and export names; return the
+    requested exports in ``EXTRA_EXPORTS`` order."""
+    for what, given, known in (
+            ("side_inputs", side_inputs or {}, SIDE_INPUT_FORMATS),
+            ("extra_exports", extra_exports, EXTRA_EXPORTS)):
+        bad = sorted(set(given) - set(known))
+        if bad:
+            raise ValueError(f"unknown {what} {bad}; expected {known}")
+    return tuple(e for e in EXTRA_EXPORTS if e in extra_exports)
 
+
+def _format_table() -> list:
+    """The ordered ``(format, matches(ext, raw), convert(raw, name, tail,
+    binary_hash, side))`` rows; the first match converts the document.
+    ``html``, the Common-Crawl default, matches everything and stays last."""
+    # Imports inside the function so the worker ships cleanly to executors.
+    from .boxnote import convert_boxnote
+    from .deepseekocr import convert_deepseekocr
+    from .ebcdic import convert_ebcdic
     from .extractor import HtmlExtractor
     from .formats import (convert_asciidoc, convert_csv, convert_email,
                           convert_epub, convert_markdown, convert_vtt)
-    from .boxnote import convert_boxnote
     from .jats import convert_jats, looks_like_jats
     from .latex import convert_latex
-    from .uspto import convert_uspto, looks_like_uspto
+    from .legacy import convert_xls
+    from .metsgbs import convert_metsgbs, looks_like_metsgbs
     from .msexcel import convert_xlsx
     from .mspptx import convert_pptx
     from .msword import convert_docx
     from .odf import convert_odf
-    from .deepseekocr import convert_deepseekocr
+    from .pdfdoc import convert_pdf
+    from .pptbin import convert_ppt
+    from .uspto import convert_uspto, looks_like_uspto
     from .vlmparsers import (convert_chandra, convert_dots, sniff_chandra,
                              sniff_dots)
-    from .ebcdic import convert_ebcdic
-    from .metsgbs import convert_metsgbs, looks_like_metsgbs
-    from .pdfdoc import convert_pdf
+    from .worddoc import convert_doc
     from .xbrl import convert_xbrl, looks_like_xbrl
+
+    html = HtmlExtractor()
+    ole = b"\xd0\xcf\x11\xe0"
+
+    def ext_in(*exts):
+        return lambda ext, raw: ext in exts
+
+    def plain(convert):
+        return lambda raw, name, tail, bh, side: convert(
+            raw, name=name, filename=tail, binary_hash=bh)
+
+    def ebcdic(raw, name, tail, bh, layout):
+        if layout is None:
+            raise ValueError(f"no EBCDIC layout registered for {tail!r}")
+        return convert_ebcdic(raw, layout, name=tail, filename=tail,
+                              binary_hash=bh)
+
+    return [
+        # encrypted PDFs take their password from the side input; ""
+        # opens the common owner-restricted, empty-user-password case
+        ("pdf", lambda ext, raw: ext == "pdf" or raw[:5] == b"%PDF-",
+         lambda raw, name, tail, bh, pw: convert_pdf(
+             raw, name=name, filename=tail, binary_hash=bh,
+             password=pw or "")),
+        ("deepseekocr", lambda ext, raw: ext == "md" and (
+            b"<|ref|>" in raw[:65536] or b"<|det|>" in raw[:65536]),
+         plain(convert_deepseekocr)),
+        ("ebcdic", ext_in("ebc"), ebcdic),
+        ("md", ext_in("md"), plain(convert_markdown)),
+        ("csv", ext_in("csv"), plain(convert_csv)),
+        ("vtt", ext_in("vtt"), plain(convert_vtt)),
+        ("epub", ext_in("epub"), plain(convert_epub)),
+        ("eml", ext_in("eml"), plain(convert_email)),
+        ("asciidoc", ext_in("adoc", "asciidoc"), plain(convert_asciidoc)),
+        ("docx", ext_in("docx"), plain(convert_docx)),
+        ("xlsx", ext_in("xlsx", "xlsm"), plain(convert_xlsx)),
+        ("xls", ext_in("xls"), plain(convert_xls)),
+        ("doc", lambda ext, raw: ext == "doc" and raw[:4] == ole,
+         plain(convert_doc)),
+        ("ppt", lambda ext, raw: ext == "ppt" and raw[:4] == ole,
+         plain(convert_ppt)),
+        ("pptx", ext_in("pptx"), plain(convert_pptx)),
+        ("odf", ext_in("odt", "ods", "odp"), plain(convert_odf)),
+        ("metsgbs", lambda ext, raw: ext in ("gz", "tgz")
+         and raw[:2] == b"\x1f\x8b" and looks_like_metsgbs(raw),
+         plain(convert_metsgbs)),
+        ("xbrl", lambda ext, raw: ext == "xml" and looks_like_xbrl(raw),
+         lambda raw, name, tail, bh, tax: convert_xbrl(
+             raw, taxonomy=tax or {}, name=name, filename=tail,
+             binary_hash=bh)),
+        ("jats", lambda ext, raw: ext in ("nxml", "jats") or (
+            ext == "xml" and looks_like_jats(raw)), plain(convert_jats)),
+        ("uspto", lambda ext, raw: ext in ("xml", "txt")
+         and looks_like_uspto(raw),
+         lambda raw, name, tail, bh, side: convert_uspto(
+             raw, name=tail, filename=tail, binary_hash=bh)),
+        ("boxnote", ext_in("boxnote"), plain(convert_boxnote)),
+        # chandra-ocr-2 VLM output: top-level divs with data-bbox and
+        # data-label in a 0-1000 grid
+        ("chandra", lambda ext, raw: ext in ("html", "htm")
+         and sniff_chandra(raw),
+         lambda raw, name, tail, bh, side: convert_chandra(
+             raw, name=name, filename=tail)),
+        # dots.ocr VLM output: a JSON array of {bbox, category, text}
+        ("dots", lambda ext, raw: ext == "json" and sniff_dots(raw),
+         lambda raw, name, tail, bh, side: convert_dots(
+             raw, name=name, filename=tail)),
+        ("latex", ext_in("tex"),
+         lambda raw, name, tail, bh, inputs: convert_latex(
+             raw, name=name, filename=tail, binary_hash=bh, inputs=inputs)),
+        ("html", lambda ext, raw: True,
+         lambda raw, name, tail, bh, side: html.convert(
+             raw, name=name, filename=name + ".html", binary_hash=bh)),
+    ]
+
+
+def _extract_batches(batches: Iterable[pd.DataFrame],
+                     side_inputs: Optional[dict] = None,
+                     extra_exports: tuple[str, ...] = ()
+                     ) -> Iterator[pd.DataFrame]:
+    """mapInPandas worker: one call per Arrow batch, one row per document
+    (a failure envelope when its conversion or any export raises). The
+    options are those of ``extract_pages``."""
+    import hashlib
+
+    from pyspark import TaskContext
+
     from .serialize import (to_doctags, to_indented_text, to_json,
                             to_markdown)
+    from .serialize_html import to_html
 
+    exporters = {"doctags": to_doctags, "html": to_html}
+    names = _check_options(side_inputs, extra_exports)
+    exports = [exporters[e] for e in names]
+    columns = EXTRACT_SCHEMA.fieldNames() + list(names)
+    side_inputs = side_inputs or {}
+    no_exports = (None,) * len(exports)
     tc = TaskContext.get()
     pid = tc.partitionId() if tc is not None else -1
-    extractor = HtmlExtractor()
+    table = _format_table()
 
     for pdf in batches:
-        out = {k.name: [] for k in EXTRACT_SCHEMA.fields}
-        if with_doctags:
-            out["doctags"] = []
-        if with_html:
-            out["html"] = []
+        rows = []
         for url, html in zip(pdf["url"].values, pdf["html"].values):
             # Coercion stays INSIDE the try: a row with an unexpected type
             # (string html, None url) must become a failure envelope, never
@@ -140,11 +234,9 @@ def _extract_batches(batches: Iterable[pd.DataFrame],
             url = "" if url is None else str(url)
             t0 = time.perf_counter()
             try:
-                if html is None:
-                    raw = b""
-                elif isinstance(html, (bytes, bytearray, memoryview)):
+                if isinstance(html, (bytes, bytearray, memoryview)):
                     raw = bytes(html)
-                else:
+                elif html is not None:
                     raw = str(html).encode("utf-8")
                 tail = url.rsplit("/", 1)[-1].split("#")[0] or "page"
                 ext = (tail.rsplit(".", 1)[-1].lower()
@@ -153,153 +245,27 @@ def _extract_batches(batches: Iterable[pd.DataFrame],
                 # reference-compatible document hash: sha256(bytes) mod 2^64
                 bh = int.from_bytes(
                     hashlib.sha256(raw).digest()[-8:], "big")
-                # format dispatch by extension (html default, the
-                # Common-Crawl case); md/csv share the model/serializers
-                if ext == "pdf" or raw[:5] == b"%PDF-":
-                    # encrypted PDFs: per-doc password from the
-                    # broadcastable mapping; default "" covers the
-                    # common owner-restricted empty-user-password case
-                    pw = ((pdf_passwords or {}).get(name)
-                          or (pdf_passwords or {}).get(tail) or "")
-                    doc = convert_pdf(raw, name=name,
-                                      filename=tail, binary_hash=bh,
-                                      password=pw)
-                elif ext == "md" and (b"<|ref|>" in raw[:65536]
-                                      or b"<|det|>" in raw[:65536]):
-                    # DeepSeek-OCR annotated markdown (content sniff on
-                    # the grounding markers)
-                    doc = convert_deepseekocr(raw, name=name,
-                                              filename=tail, binary_hash=bh)
-                elif ext == "ebc" and ebcdic_layouts is not None:
-                    layout = (ebcdic_layouts.get(name)
-                              or ebcdic_layouts.get(tail))
-                    if layout is None:
-                        raise ValueError(
-                            f"no EBCDIC layout registered for {tail!r}")
-                    doc = convert_ebcdic(raw, layout, name=tail,
-                                         filename=tail, binary_hash=bh)
-                elif ext == "md":
-                    doc = convert_markdown(raw, name=name,
-                                           filename=tail, binary_hash=bh)
-                elif ext == "csv":
-                    doc = convert_csv(raw, name=name,
-                                      filename=tail, binary_hash=bh)
-                elif ext == "vtt":
-                    doc = convert_vtt(raw, name=name,
-                                      filename=tail, binary_hash=bh)
-                elif ext == "epub":
-                    doc = convert_epub(raw, name=name,
-                                       filename=tail, binary_hash=bh)
-                elif ext == "eml":
-                    doc = convert_email(raw, name=name,
-                                        filename=tail, binary_hash=bh)
-                elif ext in ("adoc", "asciidoc"):
-                    doc = convert_asciidoc(raw, name=name,
-                                           filename=tail, binary_hash=bh)
-                elif ext == "docx":
-                    doc = convert_docx(raw, name=name,
-                                       filename=tail, binary_hash=bh)
-                elif ext in ("xlsx", "xlsm"):
-                    doc = convert_xlsx(raw, name=name,
-                                       filename=tail, binary_hash=bh)
-                elif ext == "xls":
-                    from .legacy import convert_xls
-                    doc = convert_xls(raw, name=name,
-                                      filename=tail, binary_hash=bh)
-                elif ext == "doc" and raw[:4] == b"\xd0\xcf\x11\xe0":
-                    from .worddoc import convert_doc
-                    doc = convert_doc(raw, name=name,
-                                      filename=tail, binary_hash=bh)
-                elif ext == "ppt" and raw[:4] == b"\xd0\xcf\x11\xe0":
-                    from .pptbin import convert_ppt
-                    doc = convert_ppt(raw, name=name,
-                                      filename=tail, binary_hash=bh)
-                elif ext == "pptx":
-                    doc = convert_pptx(raw, name=name,
-                                       filename=tail, binary_hash=bh)
-                elif ext in ("odt", "ods", "odp"):
-                    doc = convert_odf(raw, name=name,
-                                      filename=tail, binary_hash=bh)
-                elif (ext in ("gz", "tgz") and raw[:2] == b"\x1f\x8b"
-                      and looks_like_metsgbs(raw)):
-                    doc = convert_metsgbs(raw, name=name,
-                                          filename=tail, binary_hash=bh)
-                elif ext == "xml" and looks_like_xbrl(raw):
-                    tax = ((xbrl_taxonomies or {}).get(name)
-                           or (xbrl_taxonomies or {}).get(tail) or {})
-                    doc = convert_xbrl(raw, taxonomy=tax, name=name,
-                                       filename=tail, binary_hash=bh)
-                elif ext in ("nxml", "jats") or (
-                        ext == "xml" and looks_like_jats(raw)):
-                    doc = convert_jats(raw, name=name,
-                                       filename=tail, binary_hash=bh)
-                elif ext in ("xml", "txt") and looks_like_uspto(raw):
-                    doc = convert_uspto(raw, name=tail,
-                                        filename=tail, binary_hash=bh)
-                elif ext == "boxnote":
-                    doc = convert_boxnote(raw, name=name,
-                                          filename=tail, binary_hash=bh)
-                elif ext in ("html", "htm") and sniff_chandra(raw):
-                    # chandra-ocr-2 VLM output: top-level divs with
-                    # data-bbox/data-label in a 0-1000 grid
-                    doc = convert_chandra(raw, name=name, filename=tail)
-                elif ext == "json" and sniff_dots(raw):
-                    # dots.ocr/dots.mocr VLM output: JSON array of
-                    # {bbox, category, text} layout elements
-                    doc = convert_dots(raw, name=name, filename=tail)
-                elif ext == "tex":
-                    lx = ((latex_inputs or {}).get(name)
-                          or (latex_inputs or {}).get(tail))
-                    doc = convert_latex(raw, name=name,
-                                        filename=tail, binary_hash=bh,
-                                        inputs=lx)
-                else:
-                    doc = extractor.convert(raw, name=name,
-                                            filename=name + ".html",
-                                            binary_hash=bh)
+                for fmt, matches, convert in table:
+                    if matches(ext, raw):
+                        break
+                side = side_inputs.get(fmt) or {}
+                doc = convert(raw, name, tail, bh,
+                              side.get(name) or side.get(tail))
                 t1 = time.perf_counter()
                 md = to_markdown(doc)
                 itxt = to_indented_text(doc)
                 doc_json = to_json(doc)
                 t2 = time.perf_counter()
-                out["url"].append(url)
-                out["status"].append("success")
-                out["doc_json"].append(doc_json)
-                out["md"].append(md)
-                out["itxt"].append(itxt)
-                out["n_texts"].append(len(doc.texts))
-                out["n_tables"].append(len(doc.tables))
-                out["n_pictures"].append(len(doc.pictures))
-                out["n_pages"].append(len(doc.pages))
-                out["html_bytes"].append(len(raw))
-                out["parse_ms"].append((t1 - t0) * 1e3)
-                out["serialize_ms"].append((t2 - t1) * 1e3)
-                out["error"].append(None)
-                if with_doctags:
-                    out["doctags"].append(to_doctags(doc))
-                if with_html:
-                    from .serialize_html import to_html
-                    out["html"].append(to_html(doc))
+                row = (url, "success", doc_json, md, itxt, len(doc.texts),
+                       len(doc.tables), len(doc.pictures), len(doc.pages),
+                       len(raw), (t1 - t0) * 1e3, (t2 - t1) * 1e3, None,
+                       pid, *(export(doc) for export in exports))
             except Exception as exc:  # never fail the task for one doc
-                out["url"].append(url)
-                out["status"].append("failure")
-                out["doc_json"].append(None)
-                out["md"].append(None)
-                out["itxt"].append(None)
-                out["n_texts"].append(0)
-                out["n_tables"].append(0)
-                out["n_pictures"].append(0)
-                out["n_pages"].append(0)
-                out["html_bytes"].append(len(raw))
-                out["parse_ms"].append((time.perf_counter() - t0) * 1e3)
-                out["serialize_ms"].append(0.0)
-                out["error"].append(f"{type(exc).__name__}: {exc}")
-                if with_doctags:
-                    out["doctags"].append(None)
-                if with_html:
-                    out["html"].append(None)
-            out["partition_id"].append(pid)
-        yield pd.DataFrame(out)
+                row = (url, "failure", None, None, None, 0, 0, 0, 0,
+                       len(raw), (time.perf_counter() - t0) * 1e3, 0.0,
+                       f"{type(exc).__name__}: {exc}", pid, *no_exports)
+            rows.append(row)
+        yield pd.DataFrame(rows, columns=columns)
 
 
 def load_pages(spark, source: str, fmt: str = "auto") -> DataFrame:
@@ -382,48 +348,31 @@ def extract_pages(
     num_partitions: Optional[int] = None,
     skew_threshold: int = 1 << 20,
     repartition: bool = True,
-    ebcdic_layouts: Optional[dict] = None,
-    xbrl_taxonomies: Optional[dict] = None,
-    latex_inputs: Optional[dict] = None,
-    with_doctags: bool = False,
-    with_html: bool = False,
-    pdf_passwords: Optional[dict] = None,
+    side_inputs: Optional[dict] = None,
+    extra_exports: tuple[str, ...] = (),
 ) -> DataFrame:
     """The main job: pages(url, html, ...) -> extraction results.
 
     Column pruning: only (url, html) are shipped into the Python workers -
-    Catalyst prunes the parquet scan down to those two columns.
-    ``ebcdic_layouts`` ({basename: layout json}) rides the UDF closure -
-    a driver-side dict small enough to broadcast with the task.
-    ``with_doctags`` adds a DocTags export column (reference OutputFormat
-    doctags; serialize.to_doctags) - opt-in so the default schema stays
-    stable for downstream consumers. ``with_html`` likewise adds the
-    standalone-page HTML export (serialize_html.to_html, reference
-    OutputFormat html).
+    Catalyst prunes the parquet scan down to those two columns. Each
+    document goes to the first matching row of ``_format_table``.
+    ``side_inputs`` maps a ``SIDE_INPUT_FORMATS`` name to ``{basename:
+    value}``: pdf passwords, EBCDIC copybook layouts, XBRL ``{path: bytes}``
+    taxonomies, LaTeX ``{filename: bytes}`` input files. The basename is
+    tried without, then with, its extension. The map rides the worker
+    function to the executors, so it must be small. ``extra_exports`` adds
+    a nullable string column after ``EXTRACT_SCHEMA`` per named export
+    (``"doctags"``, ``"html"``); md, itxt and json are always emitted.
+    Unknown format or export names raise ``ValueError``.
     """
+    names = _check_options(side_inputs, extra_exports)
     cols = pages.select("url", "html")
     if repartition:
         cols = partition_pages(cols, num_partitions, skew_threshold)
-    schema = EXTRACT_SCHEMA
-    extra_fields = []
-    if with_doctags:
-        extra_fields.append(StructField("doctags", StringType(), True))
-    if with_html:
-        extra_fields.append(StructField("html", StringType(), True))
-    if extra_fields:
-        schema = StructType(EXTRACT_SCHEMA.fields + extra_fields)
-    if ebcdic_layouts is None and xbrl_taxonomies is None \
-            and latex_inputs is None and not with_doctags \
-            and not with_html and pdf_passwords is None:
-        fn = _extract_batches
-    else:
-        def fn(batches, _lay=ebcdic_layouts, _tax=xbrl_taxonomies,
-               _lx=latex_inputs, _dt=with_doctags, _wh=with_html,
-               _pw=pdf_passwords):
-            return _extract_batches(batches, ebcdic_layouts=_lay,
-                                    xbrl_taxonomies=_tax,
-                                    latex_inputs=_lx, with_doctags=_dt,
-                                    with_html=_wh, pdf_passwords=_pw)
+    schema = StructType(EXTRACT_SCHEMA.fields + [
+        StructField(n, StringType(), True) for n in names])
+    fn = functools.partial(_extract_batches, side_inputs=side_inputs,
+                           extra_exports=names)
     return cols.mapInPandas(fn, schema=schema)
 
 

@@ -249,7 +249,7 @@ def test_extract_pages_with_doctags_column(spark):
              b"<html><body><h1>T</h1><p>hello world</p></body></html>")]
     df = spark.createDataFrame(rows, "url string, html binary")
     out = engine.extract_pages(df, repartition=False,
-                               with_doctags=True).collect()[0]
+                               extra_exports=("doctags",)).collect()[0]
     assert out["status"] == "success"
     dt = out["doctags"]
     assert dt.startswith("<doctag>") and dt.endswith("</doctag>")
@@ -280,7 +280,7 @@ def test_extract_pages_with_html_column(spark):
              b"<html><body><h2>T</h2><p>hello</p></body></html>")]
     df = spark.createDataFrame(rows, "url string, html binary")
     out = engine.extract_pages(df, repartition=False,
-                               with_html=True).collect()[0]
+                               extra_exports=("html",)).collect()[0]
     assert out["status"] == "success"
     page = out["html"]
     assert page.startswith("<!DOCTYPE html>")
