@@ -43,8 +43,6 @@ def main() -> int:
                     help="url-hash commit buckets (resume granularity)")
     ap.add_argument("--group-size", type=int, default=16,
                     help="buckets per commit group")
-    ap.add_argument("--skew-threshold", type=int, default=1 << 20,
-                    help="html bytes above which a row is skew-split")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -84,7 +82,7 @@ def main() -> int:
     ck = engine.CheckpointedExtraction(
         spark, args.output, num_buckets=args.buckets,
         group_size=args.group_size)
-    stats = ck.run(pages, skew_threshold=args.skew_threshold)
+    stats = ck.run(pages)
     elapsed = time.time() - t0
 
     results = spark.read.parquet(ck.results_path)
