@@ -2,8 +2,8 @@
 
 North-rule machinery (SURVEY.md §3.4, §4):
 
-- **Salted repartition** by ``xxhash64(url)`` so hot hosts spread evenly
-  across tasks at any cluster size.
+- **Round-robin repartition** (``partition_pages``) so every task gets
+  the same number of rows, whatever the mix of hosts in the urls.
 - **Explicit skew split**: rows with ``length(html) > skew_threshold``
   are routed to their own fine-grained partitions (oversized blobs never
   share an Arrow batch with the bulk), then unioned back.  AQE only fixes
@@ -17,8 +17,9 @@ North-rule machinery (SURVEY.md §3.4, §4):
   byte_count, failure list) rows aggregated from the results' own
   columns.
 - **Checkpoint manifest + resume**: the input is read once and staged by
-  url-hash commit group; ``GROUPS_IN_FLIGHT`` groups run at a time, each
-  reading its staged files without a shuffle. Each group's output is
+  url-hash commit group; when the groups can fill the task slots, staging
+  is rebalanced so a small group is one file. Groups run concurrently,
+  each reading its staged files without a shuffle. Each group's output is
   written as a unit, then committed by a driver-side manifest file (no
   Spark job); resume skips the committed buckets. Spark jobs do only the
   extraction work, one job per group, plus one staging pass and one
@@ -402,15 +403,13 @@ def partition_metrics(results: DataFrame,
 
 # ----------------------------------------------------- checkpointed runs
 
-# Commit groups extracted at once. One group alone leaves cores idle: every
-# Python task pays a fixed ~0.24 CPU-s before our code runs (0.21 of it in
-# Spark's per-task importlib.invalidate_caches(), which re-reads
-# pyspark.zip's directory for each of ~16 zipimporters), and each group
-# waits on its own straggler. A run of 16 groups over 1,200 crawl pages on
-# a 4-vCPU VM took a median 13.0 s one group at a time, 10.2 s two, 9.8 s
-# four and 9.5 s sixteen at a time: past four the gain is within noise,
-# while each group in flight holds a driver thread and a running job.
-GROUPS_IN_FLIGHT = 4
+# Commit groups extracted at once, at least. One group alone leaves cores
+# idle: every Python task pays a fixed cost before engine code runs (README
+# "Scale design"), and each group waits on its own straggler. A run of 16
+# one-task groups over 1,200 crawl pages on a 4-vCPU VM (4 interleaved
+# reps) took a median 15.3 s with 2 in flight, 9.6 s with 4 and 9.0 s with
+# 8, inside the 8.0-11.2 s spread of 4.
+MIN_GROUPS_IN_FLIGHT = 4
 
 # One row per committed bucket; the driver writes it, Spark reads it.
 MANIFEST_SCHEMA = StructType([
@@ -430,11 +429,16 @@ class CheckpointedExtraction:
     ``pmod(xxhash64(url), num_buckets)``, and the buckets into fixed commit
     groups of ``group_size``. ``run()`` reads the input ONCE: the pending
     groups' ``(url, html)`` are staged into ``staged/``, partitioned by
-    group. Groups then run ``GROUPS_IN_FLIGHT`` at a time, in threads that
+    group. Groups run ``_groups_in_flight()`` at a time, in threads that
     carry the caller's job group, description and tags. Each group's
-    extraction reads only its own directory, with no shuffle: its
-    parallelism is the staged files' read splits. After a group's results
-    land, the driver appends the group's manifest rows as one parquet file
+    extraction reads only its own directory, with no shuffle, one task per
+    staged file split. When there are at least as many pending groups as
+    task slots, staging is rebalanced by group (one shuffle), so a small
+    group is one file and one Python task, and a large one is files of
+    about ``spark.sql.adaptive.advisoryPartitionSizeInBytes``. With fewer
+    groups it is not: every input split leaves a file in each group it
+    holds rows of, so the groups still spread over the slots. After a
+    group's results land, the driver appends the group's manifest rows as one parquet file
     through the Hadoop FileSystem (an Iceberg snapshot commit in
     production) - no Spark job per commit. When a group fails, no further
     group starts; the groups in flight finish and commit, and ``run()``
@@ -514,6 +518,14 @@ class CheckpointedExtraction:
             staged = (pages.select("url", "html")
                       .withColumn("grp", (bucket - bucket % size).cast("int"))
                       .where(F.col("grp").isin(list(pending))))
+            if len(pending) >= self._task_slots():
+                # Enough groups to fill the task slots with one task each:
+                # shuffle by group first, so a group lands as one file (AQE
+                # splits one that outgrows its advisory size) instead of a
+                # sliver from every input split, each a Python task of its
+                # own later. With fewer groups the slivers keep the slots
+                # busy. Without AQE the hint is ignored.
+                staged = staged.hint("rebalance", "grp")
             staged.write.mode("overwrite").partitionBy("grp").parquet(
                 self.staged_path)
             # The explicit schema also covers an input with no rows, which
@@ -530,9 +542,26 @@ class CheckpointedExtraction:
             "total_buckets": self.num_buckets,
         }
 
+    def _task_slots(self) -> int:
+        """Tasks the executors registered now can run at once (their cores
+        over ``spark.task.cpus``). Unlike ``defaultParallelism`` it ignores
+        ``spark.default.parallelism``. Under dynamic allocation it counts
+        only the executors already up, so a run that starts before the
+        executors scale out stages and schedules for the ones it has."""
+        sc = self.spark.sparkContext._jsc.sc()
+        return sc.maxNumConcurrentTasks(
+            sc.resourceProfileManager().defaultResourceProfile())
+
+    def _groups_in_flight(self) -> int:
+        """Commit groups extracted at once: ``MIN_GROUPS_IN_FLIGHT``, or one
+        per task slot where there are more slots, so one-task groups can
+        fill them. Above 4 slots this is unmeasured; each group in flight
+        holds a driver thread and a running job."""
+        return max(MIN_GROUPS_IN_FLIGHT, self._task_slots())
+
     def _extract_groups(self, staged: DataFrame, pending: dict) -> None:
         """Extract, write and commit every pending group, at most
-        ``GROUPS_IN_FLIGHT`` at a time. Once a group fails, no further
+        ``_groups_in_flight()`` at a time. Once a group fails, no further
         group starts; the groups in flight finish and commit, and then the
         first error is re-raised."""
 
@@ -541,8 +570,8 @@ class CheckpointedExtraction:
             # subset: grp=<gid> is overwritten as a unit, so it must
             # always hold the full group's rows or a torn manifest would
             # silently drop the already-committed buckets' output on
-            # resume. No repartition: the group's parallelism comes from
-            # its staged files' read splits, without a rescan or shuffle.
+            # resume. No repartition: the tasks are the staged files'
+            # splits, without a rescan or shuffle.
             results = extract_pages(staged.where(F.col("grp") == gid),
                                     repartition=False)
             # Idempotent commit protocol: each group's results land in a
@@ -558,9 +587,10 @@ class CheckpointedExtraction:
         todo = iter(pending.items())
         running: set[Future] = set()
         error: Optional[BaseException] = None
-        with ThreadPoolExecutor(GROUPS_IN_FLIGHT) as pool:
+        slots = self._groups_in_flight()
+        with ThreadPoolExecutor(slots) as pool:
             while True:
-                while error is None and len(running) < GROUPS_IN_FLIGHT:
+                while error is None and len(running) < slots:
                     nxt = next(todo, None)
                     if nxt is None:
                         break

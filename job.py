@@ -15,7 +15,9 @@ Results land in <output>/results partitioned by commit group, each group
 as it commits. Per-partition lineage rows land in <output>/metrics once,
 at the end of the run. The input is read once into the transient
 <output>/staged, deleted at the end of the run, so the output needs
-scratch space about equal to the pending input.
+scratch space about equal to the pending input. When the pending groups
+are at least as many as the task slots, staging costs one shuffle of the
+pending input (see README "Scale design").
 """
 
 from __future__ import annotations

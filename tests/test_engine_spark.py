@@ -149,7 +149,8 @@ def test_checkpoint_group_failure_resume(spark, tmp_path, monkeypatch):
     ck = engine.CheckpointedExtraction(spark, out, num_buckets=4,
                                        group_size=1)
     # two slots for four groups, so groups 2 and 3 wait for a free slot
-    monkeypatch.setattr(engine, "GROUPS_IN_FLIGHT", 2)
+    monkeypatch.setattr(engine.CheckpointedExtraction, "_groups_in_flight",
+                        lambda self: 2)
     real_commit = engine.CheckpointedExtraction._commit
     failed = threading.Event()
     attempted = []
@@ -174,6 +175,104 @@ def test_checkpoint_group_failure_resume(spark, tmp_path, monkeypatch):
                                       group_size=1).run(pages)
     assert r["resumed_from"] == [1]
     assert r["processed"] == [0, 2, 3]
+    res = spark.read.parquet(ck.results_path)
+    assert res.count() == 40
+    assert res.select("url").distinct().count() == 40
+    assert _metrics_docs(spark, ck) == 40
+    assert ck.committed_buckets() == {0, 1, 2, 3}
+
+
+def _input_files_per_group(pages, ck):
+    """How many input files hold rows of each commit group: the number of
+    staged files a group gets when staging does not shuffle."""
+    bucket = F.pmod(F.xxhash64("url"), F.lit(ck.num_buckets))
+    rows = (pages.select((bucket - bucket % ck.group_size).alias("grp"),
+                         F.input_file_name().alias("f"))
+            .groupBy("grp").agg(F.countDistinct("f").alias("n")).collect())
+    return {r["grp"]: r["n"] for r in rows}
+
+
+def _results_files(ck, gid):
+    return len(list(pathlib.Path(ck.results_path, f"grp={gid}").glob(
+        "part-*.parquet")))
+
+
+@pytest.mark.parametrize("input_files, advisory", [(4, None), (8, "16k")],
+                         ids=["small", "over_advisory_size"])
+def test_checkpoint_one_file_per_small_group(spark, tmp_path, monkeypatch,
+                                             input_files, advisory):
+    """With as many groups as task slots, staging rebalances by commit
+    group: a small group is one staged file, extracted by one task into one
+    results file, however many files the input has. A group past AQE's
+    advisory partition size is split, into fewer files than the input
+    splits it spans. Either way the rows are those of ``extract_pages``."""
+    src = str(tmp_path / "src")
+    _pages(spark, 40).repartition(input_files).write.parquet(src)
+    assert len(list(pathlib.Path(src).glob("part-*.parquet"))) == input_files
+    pages = spark.read.parquet(src)
+    ck = engine.CheckpointedExtraction(spark, str(tmp_path / "ck"),
+                                       num_buckets=4, group_size=2)
+    # two groups on a two-slot cluster
+    monkeypatch.setattr(engine.CheckpointedExtraction, "_task_slots",
+                        lambda self: 2)
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    before = spark.conf.get(key)
+    if advisory:
+        spark.conf.set(key, advisory)
+    try:
+        assert ck.run(pages)["processed"] == [0, 1, 2, 3]
+    finally:
+        spark.conf.set(key, before)
+    files = {gid: _results_files(ck, gid) for gid in (0, 2)}
+    if advisory is None:
+        assert files == {0: 1, 2: 1}
+    else:
+        spans = _input_files_per_group(pages, ck)
+        assert max(files.values()) > 1, files
+        assert all(files[g] < spans[g] for g in files), (files, spans)
+    # every column but the timings and the task's partition id
+    cols = [c for c in engine.EXTRACT_SCHEMA.fieldNames()
+            if c not in ("parse_ms", "serialize_ms", "partition_id")]
+    got = spark.read.parquet(ck.results_path).select(cols)
+    want = engine.extract_pages(pages).select(cols)
+    assert got.count() == want.count() == 40
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
+def test_checkpoint_fewer_groups_than_slots_keep_split_files(spark, tmp_path):
+    """With fewer pending groups than task slots, staging does not shuffle:
+    every input file leaves a file in each group it holds rows of, so the
+    groups' tasks still spread over the slots."""
+    src = str(tmp_path / "src")
+    _pages(spark, 40).repartition(4).write.parquet(src)
+    pages = spark.read.parquet(src)
+    ck = engine.CheckpointedExtraction(spark, str(tmp_path / "ck"),
+                                       num_buckets=4, group_size=2)
+    assert ck._task_slots() > 2
+    assert ck.run(pages)["processed"] == [0, 1, 2, 3]
+    spans = _input_files_per_group(pages, ck)
+    assert {gid: _results_files(ck, gid) for gid in (0, 2)} == spans
+    assert spark.read.parquet(ck.results_path).select(
+        "url").distinct().count() == 40
+
+
+def test_checkpoint_without_aqe(spark, tmp_path, monkeypatch):
+    """The staging rebalance is a layout hint only: with AQE off, the run
+    still extracts every page once and commits every bucket."""
+    # as many groups as slots, so staging asks for the rebalance
+    monkeypatch.setattr(engine.CheckpointedExtraction, "_task_slots",
+                        lambda self: 2)
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        ck = engine.CheckpointedExtraction(spark, str(tmp_path / "noaqe"),
+                                           num_buckets=4, group_size=2)
+        r = ck.run(_pages(spark, 40))
+    finally:
+        spark.conf.set(key, before)
+    assert r["processed"] == [0, 1, 2, 3]
     res = spark.read.parquet(ck.results_path)
     assert res.count() == 40
     assert res.select("url").distinct().count() == 40
