@@ -125,7 +125,7 @@ def solo_main() -> None:
     xs: list[float] = []
     for _ in range(reps):
         t0 = time.perf_counter()
-        res = engine.extract_pages(pages, num_partitions=CPUS)
+        res = engine.extract_pages(pages)
         agg = res.selectExpr(
             "count(*) docs",
             "sum(case when status='success' then 1 else 0 end) ok").collect()[0]
@@ -216,7 +216,7 @@ def main() -> None:
     agg_holder: dict = {}
 
     def leg_extract():
-        res = engine.extract_pages(pages, num_partitions=CPUS)
+        res = engine.extract_pages(pages)
         agg_holder["html"] = res.selectExpr(
             "count(*) docs",
             "sum(case when status='success' then 1 else 0 end) ok",

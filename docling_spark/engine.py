@@ -2,12 +2,10 @@
 
 North-rule machinery (SURVEY.md §3.4, §4):
 
-- **Round-robin repartition** (``partition_pages``) so every task gets
-  the same number of rows, whatever the mix of hosts in the urls.
-- **Explicit skew split**: rows with ``length(html) > skew_threshold``
-  are routed to their own fine-grained partitions (oversized blobs never
-  share an Arrow batch with the bulk), then unioned back.  AQE only fixes
-  join/shuffle skew, not map-side payload skew, so this is done explicitly.
+- **Round-robin repartition** (``partition_pages``) over one scan, so
+  every task gets the same number of rows, whatever the mix of hosts in
+  the urls. That count balance is the skew handling: a separate band for
+  oversized rows bought no wall time (README "Scale design").
 - **Arrow-batched extraction** via ``mapInPandas`` - one Python invocation
   per record batch, never per row. Each document is converted by the
   first matching row of one ordered format table (extension plus content
@@ -319,40 +317,22 @@ def write_bucketed(df: DataFrame, table: str, bucket_by: str = "url",
     w.saveAsTable(table)
 
 
-def partition_pages(
-    pages: DataFrame,
-    num_partitions: Optional[int] = None,
-    skew_threshold: int = 1 << 20,
-) -> DataFrame:
-    """Explicit skew-split repartition for the extraction map.
+def partition_pages(pages: DataFrame) -> DataFrame:
+    """Round-robin repartition into ``spark.sql.shuffle.partitions`` tasks
+    of equal row count, over one scan; the columns are unchanged.
 
-    Oversized rows (html longer than ``skew_threshold`` bytes) are split
-    from the bulk and distributed at 2x granularity so one multi-MB page
-    never skews a task. Output column set is unchanged.
+    No length band for oversized rows: one cost a second scan and mostly
+    empty tasks and won no wall time (10 interleaved perfbench
+    ``html_crawl`` pairs, README "Scale design"). Round-robin, not a url
+    hash: extraction is row-independent, and the checkpointed path buckets
+    by url itself.
     """
-    spark = pages.sparkSession
-    if num_partitions is None:
-        num_partitions = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # Two branches, both round-robin (exact count balance):
-    # - normal rows spread over num_partitions tasks;
-    # - oversized blobs get 2x granularity so a multi-MB page (the 100-TB
-    #   long tail) owns its task slice and never serializes a wave.
-    # Round-robin beats salt-hashing here because extraction is
-    # row-independent - deterministic url-hash bucketing is only needed on
-    # the checkpoint/manifest path, which buckets separately.
-    big = pages.where(F.length("html") > skew_threshold)
-    normal = pages.where(
-        (F.length("html") <= skew_threshold) | F.col("html").isNull())
-    normal = normal.repartition(num_partitions)
-    big = big.repartition(2 * num_partitions)
-    return normal.unionByName(big)
+    n = int(pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return pages.repartition(n)
 
 
 def extract_pages(
     pages: DataFrame,
-    num_partitions: Optional[int] = None,
-    skew_threshold: int = 1 << 20,
     repartition: bool = True,
     side_inputs: Optional[dict] = None,
     extra_exports: tuple[str, ...] = (),
@@ -360,7 +340,10 @@ def extract_pages(
     """The main job: pages(url, html, ...) -> extraction results.
 
     Column pruning: only (url, html) are shipped into the Python workers -
-    Catalyst prunes the parquet scan down to those two columns. Each
+    Catalyst prunes the parquet scan down to those two columns, read once.
+    ``repartition`` deals the rows over ``partition_pages``' equal-count
+    tasks, with no band for oversized rows (one won no wall time, README
+    "Scale design"); without it the tasks are the input's own splits. Each
     document goes to the first matching row of ``_format_table``.
     ``side_inputs`` maps a ``SIDE_INPUT_FORMATS`` name to ``{basename:
     value}``: pdf passwords, EBCDIC copybook layouts, XBRL ``{path: bytes}``
@@ -374,7 +357,7 @@ def extract_pages(
     names = _check_options(side_inputs, extra_exports)
     cols = pages.select("url", "html")
     if repartition:
-        cols = partition_pages(cols, num_partitions, skew_threshold)
+        cols = partition_pages(cols)
     schema = StructType(EXTRACT_SCHEMA.fields + [
         StructField(n, StringType(), True) for n in names])
     fn = functools.partial(_extract_batches, side_inputs=side_inputs,

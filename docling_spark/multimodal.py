@@ -1524,8 +1524,8 @@ def extract_media_features(media: DataFrame) -> DataFrame:
     """mapInPandas feature extraction over opaque media payloads.
 
     Arrow batches bound by ``spark.sql.execution.arrow.maxRecordsPerBatch``;
-    pair with ``engine.partition_pages``-style skew split when payloads are
-    multi-MB.
+    for multi-MB payloads, spread the rows first with
+    ``engine.partition_pages``' round-robin count balance.
     """
     return media.select("media_id", "kind", "payload").mapInPandas(
         _feature_batches, schema=FEATURE_SCHEMA)

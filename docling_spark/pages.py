@@ -4,8 +4,8 @@ Input contract (BASELINE.json ``input_hint``): columns
 ``url string, warc_ts timestamp, html binary, text string, lang string``.
 No external data: payloads come from the reference's own HTML test corpus
 (``/root/reference/tests/data/html/sources``) plus seeded template
-expansion. A small fraction of rows carry oversized blobs to exercise the
-skew-split path (FIXTURES.md §1).
+expansion. Every ``skew_every``-th row is an oversized html blob, the long
+tail that round-robin partitioning must spread (FIXTURES.md §1).
 
 Generation is pure-Python + pyarrow (no JVM needed) and cached on disk, so
 tests and bench runs share identical bytes.
@@ -110,8 +110,9 @@ def generate_pages(
 ):
     """Yield pages rows deterministically.
 
-    Every ``skew_every``-th synthetic row is an oversized blob (the body
-    repeated ``skew_repeat`` times, ~1-5 MB) to exercise skew splitting.
+    Every ``skew_every``-th row is an oversized html blob (the body
+    repeated ``skew_repeat`` times, ~1-5 MB at the default), whatever
+    format its slot would otherwise get.
     """
     epoch = _dt.datetime(2024, 1, 1)
     rows = []
@@ -131,8 +132,16 @@ def generate_pages(
                 return rows
     rng = random.Random(seed)
     while len(rows) < n_rows:
+        # The oversized slot is tested first: with the defaults every
+        # skew_every-th row also falls on a markdown or csv slot below.
+        if skew_every and i % skew_every == skew_every - 1:
+            # oversized html blob: repeat the body section many times
+            head, _, tail = _synth_html(rng, i).partition(b"<body>")
+            mid = tail.rsplit(b"</body>", 1)[0]
+            body = head + b"<body>" + mid * skew_repeat + b"</body></html>"
+            url = f"https://synth.test/{i % 64:02d}/{i}"
         # every 16th/17th row is a non-HTML format to exercise dispatch
-        if i % 16 == 7:
+        elif i % 16 == 7:
             body = _synth_markdown(rng, i)
             url = f"https://synth.test/{i % 64:02d}/{i}.md"
         elif i % 16 == 15:
@@ -141,11 +150,6 @@ def generate_pages(
         else:
             body = _synth_html(rng, i)
             url = f"https://synth.test/{i % 64:02d}/{i}"
-            if skew_every and i % skew_every == skew_every - 1:
-                # oversized blob: repeat the body section many times
-                head, _, tail = body.partition(b"<body>")
-                mid = tail.rsplit(b"</body>", 1)[0]
-                body = head + b"<body>" + mid * skew_repeat + b"</body></html>"
         rows.append({
             "url": url,
             "warc_ts": epoch + _dt.timedelta(seconds=i),
@@ -197,7 +201,7 @@ def ensure_pages(n_rows: int, seed: int = 42, cache_dir=None,
     """Idempotent cached generation keyed by the parameters."""
     cache_dir = pathlib.Path(cache_dir or DEFAULT_CACHE)
     key = hashlib.sha256(
-        f"{n_rows}|{seed}|{skew_every}|{skew_repeat}|v4".encode()).hexdigest()[:12]
+        f"{n_rows}|{seed}|{skew_every}|{skew_repeat}|v5".encode()).hexdigest()[:12]
     out = cache_dir / f"pages_{n_rows}_{key}.parquet"
     if not (out / "_DONE").exists():
         write_pages_parquet(out, n_rows, seed=seed, skew_every=skew_every,

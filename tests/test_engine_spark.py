@@ -1,8 +1,10 @@
-"""End-to-end Spark tests: extraction job, skew split, metrics, resume,
-parallelism invariance (SURVEY.md §7 v2 machinery)."""
+"""End-to-end Spark tests: extraction job, one-scan round-robin
+partitioning, metrics, resume, parallelism invariance (SURVEY.md §7 v2
+machinery)."""
 
 import pathlib
 import shutil
+import statistics
 import threading
 import uuid
 
@@ -45,13 +47,39 @@ def test_column_pruning_reaches_scan(spark):
     assert "warc_ts" not in read_schema and "lang" not in read_schema
 
 
-def test_skew_split_partitioning(spark):
-    pages = _pages(spark, 48)
-    # low threshold forces the fixture wiki_duck (~800KB) into the big branch
-    out = engine.partition_pages(pages.select("url", "html"),
-                                 num_partitions=4, skew_threshold=100_000)
-    assert out.count() == 48
+def test_generate_pages_oversized_rows_are_html():
+    """Every ``skew_every``-th row is an oversized html page, also where its
+    slot would otherwise be csv (``i % 16 == 15``)."""
+    rows = pages_mod.generate_pages(32, skew_every=16, include_fixtures=False)
+    median = statistics.median(len(r["html"]) for r in rows)
+    big = [r for r in rows if len(r["html"]) > 10 * median]
+    assert [r["url"] for r in big] == ["https://synth.test/15/15",
+                                       "https://synth.test/31/31"]
+    assert all(r["html"].startswith(b"<!DOCTYPE html>") for r in big)
+
+
+def test_one_scan_round_robin_partitioning(spark):
+    """The default extraction plan reads its input once; ``partition_pages``
+    deals the rows evenly over ``spark.sql.shuffle.partitions`` tasks, and
+    the oversized rows extract like the rest."""
+    pages = spark.read.parquet(
+        pages_mod.ensure_pages(48, skew_every=16, skew_repeat=32))
+    res = engine.extract_pages(pages)
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1
+
+    out = engine.partition_pages(pages.select("url", "html"))
     assert set(out.columns) == {"url", "html"}
+    counts = out.rdd.glom().map(len).collect()
+    assert len(counts) == int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert sum(counts) == 48 and max(counts) - min(counts) <= 1
+
+    rows = res.select("url", "status", "html_bytes").collect()
+    assert len(rows) == 48
+    assert all(r["status"] == "success" for r in rows)
+    synth = sorted(r["html_bytes"] for r in rows
+                   if r["url"].startswith("https://synth.test/"))
+    assert synth[-1] > 10 * statistics.median(synth)  # an oversized row
 
 
 def test_partition_metrics_cover_all_docs(spark):

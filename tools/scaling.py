@@ -60,8 +60,7 @@ def time_job(df):
         ts.append(time.perf_counter() - t0)
     return ts
 
-full = engine.extract_pages(pages, num_partitions=cpus,
-                            skew_threshold=256 * 1024)
+full = engine.extract_pages(pages)
 times = time_job(full)
 
 # slim variant: IDENTICAL per-doc compute (md/itxt/json all produced in
@@ -79,8 +78,7 @@ def _slim(batches):
         yield pd.DataFrame({{"url": pdf["url"], "status": pdf["status"],
                             "md_len": pdf["md"].str.len().fillna(0)
                             .astype("int32")}})
-cols = engine.partition_pages(pages.select("url", "html"), cpus,
-                              256 * 1024)
+cols = engine.partition_pages(pages.select("url", "html"))
 slim_times = time_job(cols.mapInPandas(_slim, schema=SLIM))
 
 best = min(times)

@@ -63,12 +63,11 @@ warm = (spark.range(n_workers * 4)
         .selectExpr("cast(id as string) url",
                     "cast('<p>warm</p>' as binary) html")
         .repartition(n_workers))
-warm_cols = engine.partition_pages(warm, n_workers, 256 * 1024)
+warm_cols = engine.partition_pages(warm)
 warm_cols.mapInPandas(_pinned, "url string, status string, md_len int").count()
 
 n_docs = pages.count()
-cols = engine.partition_pages(pages.select("url", "html"), n_workers,
-                              256 * 1024)
+cols = engine.partition_pages(pages.select("url", "html"))
 job = cols.mapInPandas(_pinned, "url string, status string, md_len int")
 ts = []
 for _ in range(reps):
