@@ -129,7 +129,10 @@ def _hash64_sql(col_sql: str, seed, hash_mode: str = "xxhash64") -> str:
     """SQL-text twin of :func:`_hash64` for fast expression builds
     (one parse round-trip instead of ~7 DSL calls); same functions,
     same values - pinned by
-    tests/test_operators.py::test_hash64_sql_matches_dsl."""
+    tests/test_operators.py::test_hash64_sql_matches_dsl. ``seed`` is
+    rendered into the SQL text, so it must be an ``int``."""
+    if not isinstance(seed, int):
+        raise TypeError(f"seed must be an int, got {seed!r}")
     if hash_mode == "md5":
         return (f"CAST(conv(substring(md5(concat('{seed}\x01', "
                 f"{col_sql})), 1, 15), 16, 10) AS BIGINT)")

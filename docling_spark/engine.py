@@ -12,16 +12,16 @@ North-rule machinery (SURVEY.md §3.4, §4):
   sniff); per-format side inputs travel as one ``{format: {basename:
   value}}`` map, and each optional export adds one column.
 - **Per-partition lineage/metrics**: (partition_id, doc_count,
-  byte_count, failure list) rows aggregated from the results' own
-  columns.
+  byte_count, failure list, parse/serialize ms) rows aggregated from the
+  results' own columns.
 - **Checkpoint manifest + resume**: the input is read once and staged by
   url-hash commit group; when the groups can fill the task slots, staging
   is rebalanced so a small group is one file. Groups run concurrently,
   each reading its staged files without a shuffle. Each group's output is
-  written as a unit, then committed by a driver-side manifest file (no
-  Spark job); resume skips the committed buckets. Spark jobs do only the
-  extraction work, one job per group, plus one staging pass and one
-  metrics pass per run.
+  written as a unit, its metrics row observed on that write, and then
+  the metrics row and the manifest commit are driver-side files (no Spark
+  job); resume skips the committed buckets. Spark jobs do only the
+  extraction work, one job per group, plus one staging pass per run.
 
 Reference lifecycle being mirrored: ``DocumentConverter.convert_all``
 (``/root/reference/docling/document_converter.py:505-590``) with structured
@@ -43,7 +43,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
@@ -74,12 +74,16 @@ EXTRACT_SCHEMA = StructType([
     StructField("partition_id", IntegerType(), True),
 ])
 
+# The lineage aggregates of a set of results rows (``_metrics_aggs``): one
+# row per partition from ``partition_metrics``, one row per commit group in
+# a checkpointed run's ``metrics/``.
 METRICS_SCHEMA = StructType([
-    StructField("partition_id", IntegerType(), False),
     StructField("doc_count", LongType(), False),
     StructField("byte_count", LongType(), False),
     StructField("failure_count", LongType(), False),
     StructField("failures", ArrayType(StringType()), True),
+    StructField("parse_ms", DoubleType(), False),
+    StructField("serialize_ms", DoubleType(), False),
 ])
 
 
@@ -365,23 +369,28 @@ def extract_pages(
     return cols.mapInPandas(fn, schema=schema)
 
 
+def _metrics_aggs() -> list:
+    """``METRICS_SCHEMA``'s aggregates over results rows: doc/byte counts,
+    failures, and the parse and serialize ms sums. Over no rows they are
+    zeros and an empty failures list, not nulls."""
+    failed = F.col("status") != "success"
+    return [
+        F.count(F.lit(1)).alias("doc_count"),
+        F.coalesce(F.sum("html_bytes"), F.lit(0)).alias("byte_count"),
+        F.coalesce(F.sum(failed.cast("long")), F.lit(0))
+        .alias("failure_count"),
+        F.collect_list(F.when(failed, F.concat_ws(": ", "url", "error")))
+        .alias("failures"),
+        F.coalesce(F.sum("parse_ms"), F.lit(0.0)).alias("parse_ms"),
+        F.coalesce(F.sum("serialize_ms"), F.lit(0.0)).alias("serialize_ms"),
+    ]
+
+
 def partition_metrics(results: DataFrame,
                       by: tuple[str, ...] = ("partition_id",)) -> DataFrame:
-    """Per-partition lineage rows (north rule): doc/byte counts + failures,
-    one row per ``by`` key (the checkpointed run adds its commit group)."""
-    return (
-        results.groupBy(*by)
-        .agg(
-            F.count(F.lit(1)).alias("doc_count"),
-            F.sum("html_bytes").alias("byte_count"),
-            F.sum(F.when(F.col("status") != "success", 1).otherwise(0))
-            .alias("failure_count"),
-            F.collect_list(
-                F.when(F.col("status") != "success",
-                       F.concat_ws(": ", "url", "error"))
-            ).alias("failures"),
-        )
-    )
+    """Per-partition lineage rows (north rule): the ``by`` key(s) and
+    ``METRICS_SCHEMA``'s columns, one row per key."""
+    return results.groupBy(*by).agg(*_metrics_aggs())
 
 
 # ----------------------------------------------------- checkpointed runs
@@ -420,15 +429,23 @@ class CheckpointedExtraction:
     group is one file and one Python task, and a large one is files of
     about ``spark.sql.adaptive.advisoryPartitionSizeInBytes``. With fewer
     groups it is not: every input split leaves a file in each group it
-    holds rows of, so the groups still spread over the slots. After a
-    group's results land, the driver appends the group's manifest rows as one parquet file
+    holds rows of, so the groups still spread over the slots.
+
+    A group's metrics are observed on its results write (a
+    ``pyspark.sql.Observation``, no extra pass), and its failures list
+    reaches the driver that way, bounded by the group's failures. After
+    the write, the driver replaces ``metrics/grp=<gid>`` with that one row
+    and then appends the group's manifest rows, each one parquet file put
     through the Hadoop FileSystem (an Iceberg snapshot commit in
-    production) - no Spark job per commit. When a group fails, no further
-    group starts; the groups in flight finish and commit, and ``run()``
-    re-raises. Per-partition metrics are written once, at the end of the
-    run, from one pass over ``results/``; then ``staged/`` is deleted. A
+    production) - no Spark job per commit, and every committed group has
+    its metrics. ``metrics/`` holds ONE row per commit group, not per
+    extraction task (``partition_metrics`` gives per-partition rows of any
+    ``extract_pages`` result); ``summary()`` totals it. When a group
+    fails, no further group starts; the groups in flight finish and
+    commit, and ``run()`` re-raises. ``staged/`` is deleted either way. A
     re-run skips the buckets the manifest holds, so it resumes from the
-    committed groups.
+    committed groups, and rebuilds from ``results/`` only the metrics rows
+    that are missing.
 
     Layout under ``out_dir``: ``results/grp=<gid>``, ``metrics/grp=<gid>``,
     ``manifest/`` and, while a run is in flight, ``staged/grp=<gid>``.
@@ -461,25 +478,44 @@ class CheckpointedExtraction:
             self.manifest_path).collect()
         return {r["bucket"] for r in rows}
 
-    def _commit(self, gid: int, buckets: list[int]) -> None:
-        """Append the group's manifest rows as ONE parquet file, without a
-        Spark job. It is written under a ``_``-prefixed name, which Spark's
-        readers skip, and then renamed into place: a crash can lose the
-        whole group's commit but never expose half of it."""
+    def _put(self, directory: str, name: str, rows: dict,
+             schema: StructType) -> None:
+        """Write ``rows`` (column -> values) as ONE parquet file
+        ``directory/name``, without a Spark job. It is written under a
+        ``_``-prefixed name, which Spark's readers skip, and then renamed
+        into place: a crash can lose the whole file but never expose half
+        of it."""
         sink = pa.BufferOutputStream()
         pq.write_table(pa.Table.from_pydict(
-            {"bucket": buckets, "committed_at": [time.time()] * len(buckets)},
-            schema=to_arrow_schema(MANIFEST_SCHEMA)), sink)
-        name = f"commit-{gid}-{uuid.uuid4().hex}.parquet"
-        fs, tmp = self._hadoop(f"{self.manifest_path}/_{name}")
+            rows, schema=to_arrow_schema(schema)), sink)
+        fs, tmp = self._hadoop(f"{directory}/_{name}")
         out = fs.create(tmp, False)
         try:
             out.write(sink.getvalue().to_pybytes())
         finally:
             out.close()
-        _, final = self._hadoop(f"{self.manifest_path}/{name}")
+        _, final = self._hadoop(f"{directory}/{name}")
         if not fs.rename(tmp, final):
-            raise IOError(f"manifest commit rename failed: {tmp} -> {final}")
+            raise IOError(f"rename failed: {tmp} -> {final}")
+
+    def _commit(self, gid: int, buckets: list[int]) -> None:
+        """Append the group's manifest rows as one ``_put`` file: a crash
+        can lose the whole group's commit but never expose half of it."""
+        self._put(self.manifest_path,
+                  f"commit-{gid}-{uuid.uuid4().hex}.parquet",
+                  {"bucket": buckets,
+                   "committed_at": [time.time()] * len(buckets)},
+                  MANIFEST_SCHEMA)
+
+    def _put_metrics(self, gid: int, row: dict) -> None:
+        """Replace ``metrics/grp=<gid>`` with the one ``METRICS_SCHEMA`` row
+        ``row``, as one ``_put`` file."""
+        directory = f"{self.metrics_path}/grp={gid}"
+        fs, path = self._hadoop(directory)
+        fs.delete(path, True)
+        self._put(directory, "metrics.parquet",
+                  {k: [row[k]] for k in METRICS_SCHEMA.fieldNames()},
+                  METRICS_SCHEMA)
 
     def run(self, pages: DataFrame) -> dict:
         done = self.committed_buckets()
@@ -494,36 +530,42 @@ class CheckpointedExtraction:
                      if b not in done]
             if group:
                 pending[gid] = group
-        if pending:
-            # One pass over the input stages every pending group; each
-            # group's read below is pruned to its own directory.
-            bucket = F.pmod(F.xxhash64("url"), F.lit(self.num_buckets))
-            staged = (pages.select("url", "html")
-                      .withColumn("grp", (bucket - bucket % size).cast("int"))
-                      .where(F.col("grp").isin(list(pending))))
-            if len(pending) >= self._task_slots():
-                # Enough groups to fill the task slots with one task each:
-                # shuffle by group first, so a group lands as one file (AQE
-                # splits one that outgrows its advisory size) instead of a
-                # sliver from every input split, each a Python task of its
-                # own later. With fewer groups the slivers keep the slots
-                # busy. Without AQE the hint is ignored.
-                staged = staged.hint("rebalance", "grp")
-            staged.write.mode("overwrite").partitionBy("grp").parquet(
-                self.staged_path)
-            # The explicit schema also covers an input with no rows, which
-            # leaves no grp=<gid> directory to infer it from.
-            staged = self.spark.read.schema(staged.schema).parquet(
-                self.staged_path)
-            self._extract_groups(staged, pending)
-        self._write_metrics(pending)
-        fs, path = self._hadoop(self.staged_path)
-        fs.delete(path, True)
+        try:
+            if pending:
+                self._extract_groups(self._stage(pages, pending), pending)
+        finally:
+            # the transient copy of the pending input, also after a failure
+            fs, path = self._hadoop(self.staged_path)
+            fs.delete(path, True)
+        self._write_metrics()
         return {
             "resumed_from": sorted(done),
             "processed": [b for group in pending.values() for b in group],
             "total_buckets": self.num_buckets,
         }
+
+    def _stage(self, pages: DataFrame, pending: dict) -> DataFrame:
+        """One pass over the input stages every pending group into
+        ``staged/grp=<gid>``; returns the staged table, so each group's
+        read is pruned to its own directory."""
+        size = self.group_size
+        bucket = F.pmod(F.xxhash64("url"), F.lit(self.num_buckets))
+        staged = (pages.select("url", "html")
+                  .withColumn("grp", (bucket - bucket % size).cast("int"))
+                  .where(F.col("grp").isin(list(pending))))
+        if len(pending) >= self._task_slots():
+            # Enough groups to fill the task slots with one task each:
+            # shuffle by group first, so a group lands as one file (AQE
+            # splits one that outgrows its advisory size) instead of a
+            # sliver from every input split, each a Python task of its
+            # own later. With fewer groups the slivers keep the slots
+            # busy. Without AQE the hint is ignored.
+            staged = staged.hint("rebalance", "grp")
+        staged.write.mode("overwrite").partitionBy("grp").parquet(
+            self.staged_path)
+        # The explicit schema also covers an input with no rows, which
+        # leaves no grp=<gid> directory to infer it from.
+        return self.spark.read.schema(staged.schema).parquet(self.staged_path)
 
     def _task_slots(self) -> int:
         """Tasks the executors registered now can run at once (their cores
@@ -562,9 +604,13 @@ class CheckpointedExtraction:
             # between the results write and the manifest commit leaves a
             # directory that the resumed run simply overwrites - no
             # duplicate rows, no inflated metrics. Readers of results_path
-            # see `grp` as a discovered partition column.
-            results.write.mode("overwrite").parquet(
-                f"{self.results_path}/grp={gid}")
+            # see `grp` as a discovered partition column. The group's
+            # metrics are observed on this write and put before the
+            # commit, so a committed group always has its metrics row.
+            obs = Observation()
+            results.observe(obs, *_metrics_aggs()).write.mode(
+                "overwrite").parquet(f"{self.results_path}/grp={gid}")
+            self._put_metrics(gid, obs.get)
             self._commit(gid, group)
 
         todo = iter(pending.items())
@@ -595,38 +641,48 @@ class CheckpointedExtraction:
         if error is not None:
             raise error
 
-    def _write_metrics(self, pending: dict) -> None:
-        """Replace ``metrics/grp=<gid>`` for every group extracted in this
-        run, and for any committed group whose metrics a crashed run never
-        wrote, from one column-pruned pass over their results."""
-        fs, path = self._hadoop(self.metrics_path)
-        have = ({s.getPath().getName() for s in fs.listStatus(path)}
-                if fs.exists(path) else set())
+    def _write_metrics(self) -> None:
+        """Repair: put the metrics row of every commit group whose
+        ``metrics/grp=<gid>`` holds no readable file (the metrics were
+        deleted, or a crash fell between the delete and the put), from one
+        pass over those groups' results. A group without result rows gets
+        a zero row. A clean run observed every row on its writes, so this
+        issues no Spark job."""
+        fs, pattern = self._hadoop(f"{self.metrics_path}/grp=*/[^_.]*")
+        have = {s.getPath().getParent().getName()
+                for s in fs.globStatus(pattern) or []}
         todo = [gid for gid in range(0, self.num_buckets, self.group_size)
-                if gid in pending or f"grp={gid}" not in have]
+                if f"grp={gid}" not in have]
         if not todo:
             return
-        for gid in todo:
-            fs.delete(self._hadoop(f"{self.metrics_path}/grp={gid}")[1], True)
         results = self.spark.read.schema(RESULTS_SCHEMA).parquet(
             self.results_path).where(F.col("grp").isin(todo))
-        partition_metrics(results, by=("grp", "partition_id")).write.mode(
-            "append").partitionBy("grp").parquet(self.metrics_path)
+        rows = {r["grp"]: r.asDict()
+                for r in partition_metrics(results, by=("grp",)).collect()}
+        zero = {"doc_count": 0, "byte_count": 0, "failure_count": 0,
+                "failures": [], "parse_ms": 0.0, "serialize_ms": 0.0}
+        for gid in todo:
+            self._put_metrics(gid, rows.get(gid, zero))
+
+    def summary(self) -> dict:
+        """Run totals from ``metrics/`` alone, without a pass over
+        ``results/``: docs, bytes, ok (docs less failures), and the mean
+        parse and serialize ms per document (None with no documents)."""
+        sums = ("doc_count", "byte_count", "failure_count", "parse_ms",
+                "serialize_ms")
+        row = self.spark.read.schema(METRICS_SCHEMA).parquet(
+            self.metrics_path).agg(*(F.sum(c).alias(c) for c in sums)).first()
+        docs = row["doc_count"] or 0
+        return {
+            "docs": docs,
+            "bytes": row["byte_count"] or 0,
+            "ok": docs - (row["failure_count"] or 0),
+            "avg_parse_ms": row["parse_ms"] / docs if docs else None,
+            "avg_serialize_ms": row["serialize_ms"] / docs if docs else None,
+        }
 
 
 # ------------------------------------------------------------- utilities
-
-def extraction_summary(results: DataFrame) -> dict:
-    row = results.agg(
-        F.count(F.lit(1)).alias("docs"),
-        F.sum("html_bytes").alias("bytes"),
-        F.sum(F.when(F.col("status") == "success", 1).otherwise(0)).alias("ok"),
-        F.avg("parse_ms").alias("avg_parse_ms"),
-        F.avg("serialize_ms").alias("avg_serialize_ms"),
-    ).collect()[0]
-    return {k: row[k] for k in
-            ("docs", "bytes", "ok", "avg_parse_ms", "avg_serialize_ms")}
-
 
 def spans_view(results: DataFrame) -> DataFrame:
     """Queryable side-view: explode the doc's text items out of doc_json.

@@ -204,6 +204,12 @@ def _md5_bucket(col: str, n_planes: int, seed: int, table: int,
     return bucket
 
 
+def _sql_ident(name: str) -> str:
+    """``name`` as a quoted SQL identifier: backticks, with any backtick
+    inside doubled."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _md5_bucket_sql(col: str, n_planes: int, seed: int, table: int,
                     w_idx: int, int_col: str) -> str:
     """SQL-text twin of :func:`_md5_bucket` (w_col + int_col form):
@@ -223,19 +229,20 @@ def _md5_bucket_sql(col: str, n_planes: int, seed: int, table: int,
     """
     plane = lambda i: f"element_at(element_at(`__w`, {w_idx}), {i + 1})"
     prefix = f"lsh:{seed}:{table}:"
+    col, int_col = _sql_ident(col), _sql_ident(int_col)
     terms = ["CAST(0 AS BIGINT)"]
     for i in range(n_planes):
-        fast = (f"aggregate(zip_with(`{int_col}`, "
-                f"slice({plane(i)}, 1, size(`{col}`)), "
+        fast = (f"aggregate(zip_with({int_col}, "
+                f"slice({plane(i)}, 1, size({col})), "
                 f"(x, w) -> x * w), CAST(0 AS BIGINT), "
                 f"(acc, v) -> acc + v)")
-        slow = (f"aggregate(zip_with(`{int_col}`, "
-                f"sequence(0, size(`{col}`) - 1), "
+        slow = (f"aggregate(zip_with({int_col}, "
+                f"sequence(0, size({col}) - 1), "
                 f"(x, d) -> x * ((CAST(conv(substring(md5(concat("
                 f"'{prefix}{i}:', CAST(d AS STRING))), 1, 15), 16, 10) "
                 f"AS BIGINT) % 17) - 8)), CAST(0 AS BIGINT), "
                 f"(acc, v) -> acc + v)")
-        dot = (f"CASE WHEN size(`{col}`) <= size({plane(i)}) "
+        dot = (f"CASE WHEN size({col}) <= size({plane(i)}) "
                f"THEN {fast} ELSE {slow} END")
         terms.append(f"(CASE WHEN ({dot}) > 0 THEN {1 << i} ELSE 0 END)")
     return " + ".join(terms)
@@ -625,8 +632,8 @@ def kmeans_assign(embeddings: DataFrame, k: int = 4, n_iter: int = 3,
             F.zip_with(F.col(col), c, lambda a, b: (a - b) * (a - b)),
             F.lit(0.0), lambda acc, v: acc + v))
         assign_expr = argmin_expr(dists)
-    iter_aggs = [F.expr(f"avg(CAST(try_element_at(`{col}`, {i + 1}) "
-                        f"AS DOUBLE))").alias(f"m{i}")
+    iter_aggs = [F.expr(f"avg(CAST(try_element_at({_sql_ident(col)}, "
+                        f"{i + 1}) AS DOUBLE))").alias(f"m{i}")
                  for i in range(dim)]
 
     def with_assign_bc(cents):

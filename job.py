@@ -12,12 +12,14 @@ Submit with:
 The job is resumable: re-submitting with the same --output continues from
 the last committed bucket group (engine.CheckpointedExtraction manifest).
 Results land in <output>/results partitioned by commit group, each group
-as it commits. Per-partition lineage rows land in <output>/metrics once,
-at the end of the run. The input is read once into the transient
-<output>/staged, deleted at the end of the run, so the output needs
-scratch space about equal to the pending input. When the pending groups
-are at least as many as the task slots, staging costs one shuffle of the
-pending input (see README "Scale design").
+as it commits, and each group's lineage row (observed on its results
+write) in <output>/metrics just before its commit; the printed report
+totals <output>/metrics, without a pass over the results. The input is
+read once into the transient <output>/staged, deleted at the end of the
+run (also a failed one), so the output needs scratch space about equal
+to the pending input. When the pending groups are at least as many as
+the task slots, staging costs one shuffle of the pending input (see
+README "Scale design").
 """
 
 from __future__ import annotations
@@ -87,8 +89,7 @@ def main() -> int:
     stats = ck.run(pages)
     elapsed = time.time() - t0
 
-    results = spark.read.parquet(ck.results_path)
-    summary = engine.extraction_summary(results)
+    summary = ck.summary()
     report = {
         "elapsed_sec": round(elapsed, 1),
         "resumed_from_buckets": len(stats["resumed_from"]),

@@ -106,8 +106,8 @@ def test_checkpoint_resume(spark, tmp_path):
     assert r2["processed"] == []
     assert sorted(r2["resumed_from"]) == [0, 1, 2, 3]
     assert spark.read.parquet(ck.results_path).count() == 40
-    # metrics land at the end of a run: a crash after the last commit but
-    # before them is healed by the next run without re-extracting
+    # missing metrics rows (deleted, or a crash between a row's delete and
+    # its put) are rebuilt by the next run without re-extracting
     shutil.rmtree(ck.metrics_path)
     r3 = ck2.run(pages)
     assert r3["processed"] == []
@@ -117,6 +117,78 @@ def test_checkpoint_resume(spark, tmp_path):
 def _metrics_docs(spark, ck):
     return spark.read.parquet(ck.metrics_path).agg(
         F.sum("doc_count")).first()[0]
+
+
+def _pages_with_poison(spark, n=40):
+    """``n`` crawl pages plus one corrupt ``.docx`` row, which extracts to
+    a failure envelope."""
+    poison = spark.createDataFrame(
+        [("https://poison.test/broken.docx", b"PK\x03\x04 not a zip")],
+        "url string, html binary")
+    return _pages(spark, n).select("url", "html").unionByName(poison)
+
+
+def _metrics_by_group(spark, ck):
+    rows = spark.read.parquet(ck.metrics_path).collect()
+    return {r["grp"]: r for r in rows}
+
+
+def test_checkpoint_metrics_observed_on_write(spark, tmp_path, monkeypatch):
+    """A clean run observes each group's metrics on its results write: no
+    aggregation pass over ``results/`` (``partition_metrics`` raises), and
+    each ``metrics/grp=<gid>`` is one row equal to that group's results."""
+    def no_pass(*args, **kwargs):
+        raise AssertionError("partition_metrics called on a clean run")
+
+    monkeypatch.setattr(engine, "partition_metrics", no_pass)
+    ck = engine.CheckpointedExtraction(spark, str(tmp_path / "obs"),
+                                       num_buckets=4, group_size=2)
+    assert ck.run(_pages_with_poison(spark))["processed"] == [0, 1, 2, 3]
+    monkeypatch.undo()
+    failed = F.col("status") != "success"
+    want = {r["grp"]: r for r in spark.read.parquet(ck.results_path)
+            .groupBy("grp").agg(
+                F.count(F.lit(1)).alias("doc_count"),
+                F.sum("html_bytes").alias("byte_count"),
+                F.sum(failed.cast("long")).alias("failure_count"),
+                F.sort_array(F.collect_list(F.when(
+                    failed, F.concat_ws(": ", "url", "error"))))
+                .alias("failures"),
+                F.sum("parse_ms").alias("parse_ms"),
+                F.sum("serialize_ms").alias("serialize_ms")).collect()}
+    got = _metrics_by_group(spark, ck)
+    assert sorted(got) == sorted(want) == [0, 2]
+    assert spark.read.parquet(ck.metrics_path).count() == 2
+    for gid, w in want.items():
+        g = got[gid]
+        for c in ("doc_count", "byte_count", "failure_count"):
+            assert g[c] == w[c], (gid, c)
+        assert sorted(g["failures"]) == w["failures"]
+        assert g["parse_ms"] == pytest.approx(w["parse_ms"])
+        assert g["serialize_ms"] == pytest.approx(w["serialize_ms"])
+    assert sum(w["failure_count"] for w in want.values()) == 1
+    assert sum(len(g["failures"]) for g in got.values()) == 1
+
+
+def test_checkpoint_summary_matches_results(spark, tmp_path):
+    """``summary()`` totals ``metrics/`` to the same figures an aggregate
+    over ``results/`` gives, without reading ``results/``."""
+    ck = engine.CheckpointedExtraction(spark, str(tmp_path / "sum"),
+                                       num_buckets=4, group_size=2)
+    ck.run(_pages_with_poison(spark))
+    want = spark.read.parquet(ck.results_path).agg(
+        F.count(F.lit(1)).alias("docs"),
+        F.sum("html_bytes").alias("bytes"),
+        F.sum((F.col("status") == "success").cast("long")).alias("ok"),
+        F.avg("parse_ms").alias("avg_parse_ms"),
+        F.avg("serialize_ms").alias("avg_serialize_ms")).first()
+    shutil.rmtree(ck.results_path)  # the summary reads metrics/ alone
+    got = ck.summary()
+    assert set(got) == set(want.asDict())
+    assert (got["docs"], got["bytes"], got["ok"]) == (41, want["bytes"], 40)
+    assert want["docs"] == 41 and want["ok"] == 40
+    assert got["avg_parse_ms"] == pytest.approx(want["avg_parse_ms"])
+    assert got["avg_serialize_ms"] == pytest.approx(want["avg_serialize_ms"])
 
 
 def test_checkpoint_resume_on_uri_output(spark, tmp_path):
@@ -137,8 +209,8 @@ def test_checkpoint_resume_on_uri_output(spark, tmp_path):
 
 
 def test_checkpoint_jobs_per_commit_group(spark, tmp_path):
-    """Staging, metrics and manifest commits are per run, not per group:
-    doubling the commit groups adds at most one job per extra group.  Every
+    """Staging is per run, and metrics rows and manifest commits run no
+    Spark job: doubling the commit groups adds at most one job per extra group.  Every
     job, including those of groups run in worker threads, carries the
     caller's job group, and the caller's description is left untouched."""
     pages = _pages(spark, 40)
@@ -198,6 +270,11 @@ def test_checkpoint_group_failure_resume(spark, tmp_path, monkeypatch):
     # every started group reaches its commit, so 2 and 3 never started
     assert sorted(attempted) == [0, 1]
     assert ck.committed_buckets() == {1}
+    # the failed run still deleted its staged copy of the input, and the
+    # group it committed already has its metrics row
+    assert not pathlib.Path(out, "staged").exists()
+    res1 = spark.read.parquet(ck.results_path).where("grp = 1")
+    assert _metrics_by_group(spark, ck)[1]["doc_count"] == res1.count() > 0
     monkeypatch.undo()
     r = engine.CheckpointedExtraction(spark, out, num_buckets=4,
                                       group_size=1).run(pages)
@@ -361,6 +438,21 @@ def test_checkpoint_empty_pages(spark, tmp_path):
     res = spark.read.parquet(ck.results_path)
     assert res.count() == 0
     assert set(engine.EXTRACT_SCHEMA.fieldNames()) <= set(res.columns)
+    # one zero metrics row per group, observed on the write or, once
+    # deleted, rebuilt by the next run from no result rows
+    for rebuilt in (False, True):
+        if rebuilt:
+            shutil.rmtree(ck.metrics_path)
+            assert ck.run(pages)["processed"] == []
+        got = _metrics_by_group(spark, ck)
+        assert sorted(got) == [0, 2]
+        assert spark.read.parquet(ck.metrics_path).count() == 2
+        for r in got.values():
+            assert (r["doc_count"], r["byte_count"], r["failure_count"],
+                    r["failures"], r["parse_ms"], r["serialize_ms"]) == (
+                        0, 0, 0, [], 0.0, 0.0)
+    assert ck.summary() == {"docs": 0, "bytes": 0, "ok": 0,
+                            "avg_parse_ms": None, "avg_serialize_ms": None}
 
 
 def test_parallelism_invariance(spark):

@@ -1353,12 +1353,24 @@ def test_md5_bucket_sql_matches_dsl(spark):
         w_col=F.element_at(F.col("__w"), 1), int_col="__emb_int")
     sql = F.expr(similarity._md5_bucket_sql(
         "emb", n_planes, seed, table, 1, "__emb_int"))
-    got = (df.select("vec_id", dsl.alias("b_dsl"), sql.alias("b_sql"))
+    # column names holding a backtick: the SQL text escapes them, the DSL
+    # takes them in F.col's quoted form
+    df = (df.withColumn("e`mb", F.col("emb"))
+          .withColumn("int`", F.col("__emb_int")))
+    dsl_tick = similarity._md5_bucket(
+        "`e``mb`", n_planes, seed, table,
+        w_col=F.element_at(F.col("__w"), 1), int_col="`int```")
+    sql_tick = F.expr(similarity._md5_bucket_sql(
+        "e`mb", n_planes, seed, table, 1, "int`"))
+    got = (df.select("vec_id", dsl.alias("b_dsl"), sql.alias("b_sql"),
+                     dsl_tick.alias("b_dsl_tick"),
+                     sql_tick.alias("b_sql_tick"))
            .orderBy("vec_id").collect())
     assert len(got) == len(rows)
     for r in got:
         assert r["b_sql"] == r["b_dsl"], (r["vec_id"], r["b_sql"],
                                           r["b_dsl"])
+        assert r["b_sql_tick"] == r["b_dsl_tick"] == r["b_dsl"], r
     # the normal rows must produce a real bucket, not degenerate zeros
     assert any(r["b_dsl"] not in (None, 0) for r in got)
 
@@ -1380,3 +1392,7 @@ def test_hash64_sql_matches_dsl(spark):
             ).collect()
             for r in got:
                 assert r["a"] == r["b"], (mode, seed, r)
+    # the seed is rendered into the SQL text, so only an int is accepted
+    for bad in ("1'", 1.5, None):
+        with pytest.raises(TypeError):
+            dedup._hash64_sql("`s`", bad, "md5")
