@@ -4,8 +4,10 @@ Input contract (BASELINE.json ``input_hint``): columns
 ``url string, warc_ts timestamp, html binary, text string, lang string``.
 No external data: payloads come from the reference's own HTML test corpus
 (``/root/reference/tests/data/html/sources``) plus seeded template
-expansion. Every ``skew_every``-th row is an oversized html blob, the long
-tail that round-robin partitioning must spread (FIXTURES.md §1).
+expansion. The fixture rows are present only when that directory exists;
+without it every row is synthetic. Every ``skew_every``-th row is an
+oversized html blob, the long tail that round-robin partitioning must
+spread (FIXTURES.md §1).
 
 Generation is pure-Python + pyarrow (no JVM needed) and cached on disk, so
 tests and bench runs share identical bytes.
@@ -110,9 +112,11 @@ def generate_pages(
 ):
     """Yield pages rows deterministically.
 
-    Every ``skew_every``-th row is an oversized html blob (the body
-    repeated ``skew_repeat`` times, ~1-5 MB at the default), whatever
-    format its slot would otherwise get.
+    The first rows are the reference's HTML test corpus (``FIXTURE_DIR``),
+    present only when ``include_fixtures`` is set and that directory
+    exists; seeded synthetic rows fill the rest. Every ``skew_every``-th
+    row is an oversized html blob (the body repeated ``skew_repeat`` times,
+    ~1-5 MB at the default), whatever format its slot would otherwise get.
     """
     epoch = _dt.datetime(2024, 1, 1)
     rows = []
@@ -196,12 +200,25 @@ def write_pages_parquet(path, n_rows: int, seed: int = 42,
     return str(path)
 
 
+def _fixture_digest() -> str:
+    """Digest of the fixture rows ``generate_pages`` adds: the names and
+    bytes of ``FIXTURE_DIR/*.html``, none when that directory is absent."""
+    h = hashlib.sha256()
+    if FIXTURE_DIR.exists():
+        for p in sorted(FIXTURE_DIR.glob("*.html")):
+            raw = p.read_bytes()
+            h.update(f"{p.name}\0{len(raw)}\0".encode() + raw)
+    return h.hexdigest()[:12]
+
+
 def ensure_pages(n_rows: int, seed: int = 42, cache_dir=None,
                  skew_every: int = 1000, skew_repeat: int = 400) -> str:
-    """Idempotent cached generation keyed by the parameters."""
+    """Idempotent cached generation keyed by the parameters and the fixture
+    set, so a corpus that appears (or changes) later gets a fresh table."""
     cache_dir = pathlib.Path(cache_dir or DEFAULT_CACHE)
     key = hashlib.sha256(
-        f"{n_rows}|{seed}|{skew_every}|{skew_repeat}|v5".encode()).hexdigest()[:12]
+        f"{n_rows}|{seed}|{skew_every}|{skew_repeat}|{_fixture_digest()}|v5"
+        .encode()).hexdigest()[:12]
     out = cache_dir / f"pages_{n_rows}_{key}.parquet"
     if not (out / "_DONE").exists():
         write_pages_parquet(out, n_rows, seed=seed, skew_every=skew_every,

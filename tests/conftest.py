@@ -25,3 +25,20 @@ def spark():
 
 SF_DIR = "/root/testdata/sf0.001"
 SF_DIR_MID = "/root/testdata/sf0.01"
+
+
+REF = pathlib.Path("/root/reference/tests/data")
+
+
+def needs_reference(*relpaths, partial=False):
+    """skipif mark for a test that reads Docling's test corpus.
+
+    Each ``relpath`` names a file or directory under ``REF`` that the test
+    reads. When one is absent the test skips with a reason naming the
+    missing paths; when all are present it runs unchanged. With
+    ``partial`` the test skips only when all are absent, so its own count
+    of the fixtures it found fails on a partial corpus."""
+    missing = [str(REF / p) for p in relpaths if not (REF / p).exists()]
+    absent = len(missing) == len(relpaths) if partial else bool(missing)
+    return pytest.mark.skipif(
+        absent, reason="Docling corpus absent: " + ", ".join(missing))

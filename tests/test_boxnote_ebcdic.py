@@ -11,12 +11,15 @@ from docling_spark.ebcdic import (
     FieldDecoder, Field, Layout, convert_ebcdic)
 from docling_spark.serialize import to_indented_text, to_json, to_markdown
 
+from conftest import needs_reference
+
 BN_SRC = pathlib.Path("/root/reference/tests/data/boxnote/sources")
 BN_GT = pathlib.Path("/root/reference/tests/data/boxnote/groundtruth")
 EB_SRC = pathlib.Path("/root/reference/tests/data/ebcdic/sources")
 EB_GT = pathlib.Path("/root/reference/tests/data/ebcdic/groundtruth")
 
 
+@needs_reference("boxnote/sources/sample.boxnote", "boxnote/groundtruth")
 def test_boxnote_goldens_byte_identical():
     path = BN_SRC / "sample.boxnote"
     raw = path.read_bytes()
@@ -35,6 +38,7 @@ def test_boxnote_rejects_legacy_format():
         convert_boxnote(b'{"atext": {}}', name="legacy")
 
 
+@needs_reference("ebcdic/sources", "ebcdic/groundtruth")
 @pytest.mark.parametrize("stem", ["311_calls_for_service",
                                   "gas_disposition", "ola013k"])
 def test_ebcdic_md_goldens_byte_identical(stem):
@@ -65,6 +69,8 @@ def test_ebcdic_string_strips_controls():
     assert dec.decode(b"\xc1\x40\x00", Field("s", 3)) == "A"
 
 
+@needs_reference("ebcdic/sources/311_calls_for_service.ebc",
+                 "ebcdic/sources/311_calls_for_service.layout.json")
 def test_ebcdic_max_records():
     raw = (EB_SRC / "311_calls_for_service.ebc").read_bytes()
     layout = Layout.from_json(

@@ -11,6 +11,8 @@ from docling_spark import chunking, engine
 from docling_spark.extractor import HtmlExtractor
 from docling_spark.serialize import to_json
 
+from conftest import needs_reference
+
 FIXTURES = pathlib.Path("/root/reference/tests/data/html/sources")
 
 
@@ -145,6 +147,7 @@ def test_hybrid_merge_peers_optout():
 
 # ------------------------------------------------------------- round-trip
 
+@needs_reference("html/sources")
 @pytest.mark.parametrize("fixture", ["example_01", "example_05", "wiki_duck"])
 def test_doc_json_roundtrip_byte_identical(fixture):
     raw = (FIXTURES / f"{fixture}.html").read_bytes()
@@ -155,6 +158,7 @@ def test_doc_json_roundtrip_byte_identical(fixture):
     assert j1 == j2
 
 
+@needs_reference("html/sources/example_02.html")
 def test_chunks_on_golden_fixture():
     raw = (FIXTURES / "example_02.html").read_bytes()
     doc = HtmlExtractor().convert(raw, name="example_02",
@@ -270,6 +274,7 @@ _CHUNK_GOLDENS = {
 }
 
 
+@needs_reference("html/sources")
 @pytest.mark.parametrize("stem", sorted(_CHUNK_GOLDENS))
 def test_hierarchical_chunk_value_goldens(stem):
     raw = (GOLDEN_SRC / stem).read_bytes()

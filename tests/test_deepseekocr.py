@@ -13,6 +13,8 @@ from docling_spark.deepseekocr import (
     _parse_table_html, convert_deepseekocr, parse_deepseekocr_markdown)
 from docling_spark.serialize import to_indented_text, to_json, to_markdown
 
+from conftest import needs_reference
+
 SRC = pathlib.Path("/root/reference/tests/data/md_deepseek/sources")
 GT = pathlib.Path("/root/reference/tests/data/md_deepseek/groundtruth")
 
@@ -21,7 +23,14 @@ def _paths():
     return sorted(SRC.glob("*.md"))
 
 
-@pytest.mark.parametrize("path", _paths(), ids=lambda p: p.stem)
+PATHS = _paths()
+IDS = [p.stem for p in PATHS]
+needs_goldens = needs_reference("md_deepseek/sources",
+                                "md_deepseek/groundtruth")
+
+
+@needs_goldens
+@pytest.mark.parametrize("path", PATHS, ids=IDS)
 def test_deepseek_md_itxt_golden_byte_identical(path):
     doc = convert_deepseekocr(path.read_bytes(), name=path.stem,
                               filename=path.name)
@@ -29,7 +38,8 @@ def test_deepseek_md_itxt_golden_byte_identical(path):
     assert to_indented_text(doc) == (GT / f"{path.name}.itxt").read_text()
 
 
-@pytest.mark.parametrize("path", _paths(), ids=lambda p: p.stem)
+@needs_goldens
+@pytest.mark.parametrize("path", PATHS, ids=IDS)
 def test_deepseek_json_golden_page_image_masked(path):
     doc = convert_deepseekocr(path.read_bytes(), name=path.stem,
                               filename=path.name)

@@ -15,6 +15,8 @@ from pyspark.sql import functions as F
 
 from docling_spark import engine, pages as pages_mod
 
+from conftest import REF
+
 
 def _pages(spark, n=48):
     return spark.read.parquet(pages_mod.ensure_pages(n))
@@ -29,11 +31,29 @@ def test_extract_pages_end_to_end(spark):
     # fixture row must match the reference golden byte-for-byte
     row = res.where(F.col("url").startswith(
         "https://fixture.test/html/example_01")).first()
-    golden = pathlib.Path(
-        "/root/reference/tests/data/html/groundtruth/example_01.html.md"
-    ).read_text()
-    assert row["md"] == golden
     res.unpersist()
+    golden = REF / "html/groundtruth/example_01.html.md"
+    if not golden.exists():
+        pytest.skip(f"Docling corpus absent: {golden}")
+    assert row is not None, "pages table has no example_01 fixture row"
+    assert row["md"] == golden.read_text()
+
+
+def test_ensure_pages_keyed_on_fixture_set(tmp_path, monkeypatch):
+    """A fixture corpus that appears after a table was cached gets a fresh
+    table holding its rows, not the cached all-synthetic one."""
+    fixtures = tmp_path / "fixtures"
+    fixtures.mkdir()
+    monkeypatch.setattr(pages_mod, "FIXTURE_DIR", fixtures)
+    cache = tmp_path / "cache"
+    bare = pages_mod.ensure_pages(8, cache_dir=cache)
+    (fixtures / "example_01.html").write_bytes(b"<html><p>hi</p></html>")
+    with_fixture = pages_mod.ensure_pages(8, cache_dir=cache)
+    assert with_fixture != bare
+    urls = pq.read_table(with_fixture).column("url").to_pylist()
+    assert urls[0] == "https://fixture.test/html/example_01#0"
+    assert not any("fixture.test" in u
+                   for u in pq.read_table(bare).column("url").to_pylist())
 
 
 def test_column_pruning_reaches_scan(spark):

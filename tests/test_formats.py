@@ -15,6 +15,8 @@ from docling_spark.formats import (convert_asciidoc, convert_csv,
                                    convert_markdown, convert_vtt)
 from docling_spark.serialize import to_indented_text, to_json, to_markdown
 
+from conftest import needs_reference
+
 CSV_SRC = pathlib.Path("/root/reference/tests/data/csv/sources")
 CSV_GT = pathlib.Path("/root/reference/tests/data/csv/groundtruth")
 MD_SRC = pathlib.Path("/root/reference/tests/data/md/sources")
@@ -31,6 +33,7 @@ def _bh(raw: bytes) -> int:
     return int.from_bytes(hashlib.sha256(raw).digest()[-8:], "big")
 
 
+@needs_reference("csv/sources", "csv/groundtruth")
 @pytest.mark.parametrize("name", CSV_FIXTURES)
 def test_csv_all_formats_byte_identical(name):
     raw = (CSV_SRC / name).read_bytes()
@@ -49,6 +52,7 @@ def test_csv_all_formats_byte_identical(name):
         assert ours == golden or ours + "\n" == golden, f"{name}.{kind}"
 
 
+@needs_reference("md/sources", "md/groundtruth")
 @pytest.mark.parametrize("name", MD_FIXTURES)
 def test_markdown_reexport_byte_identical(name):
     raw = (MD_SRC / name).read_bytes()
@@ -58,6 +62,7 @@ def test_markdown_reexport_byte_identical(name):
     assert to_markdown(doc) + "\n" == golden
 
 
+@needs_reference("webvtt/sources", "webvtt/groundtruth")
 @pytest.mark.parametrize("name", VTT_FIXTURES)
 def test_webvtt_all_formats_byte_identical(name):
     raw = (VTT_SRC / name).read_bytes()
@@ -106,6 +111,7 @@ EPUB_FIXTURES = (sorted(p.name for p in EPUB_SRC.glob("*.epub"))
                  if EPUB_SRC.exists() else [])
 
 
+@needs_reference("epub/sources", "epub/groundtruth")
 @pytest.mark.parametrize("name", EPUB_FIXTURES)
 def test_epub_all_formats_byte_identical(name):
     raw = (EPUB_SRC / name).read_bytes()
@@ -124,6 +130,7 @@ def test_epub_all_formats_byte_identical(name):
         assert ours == golden or ours + "\n" == golden, f"{name}.{kind}"
 
 
+@needs_reference("email/sources/eml_simple.eml")
 def test_email_structure():
     raw = pathlib.Path(
         "/root/reference/tests/data/email/sources/eml_simple.eml").read_bytes()
@@ -147,6 +154,7 @@ ADOC_FIXTURES = (sorted(p.name for p in ADOC_SRC.glob("*.asciidoc"))
                  if ADOC_SRC.exists() else [])
 
 
+@needs_reference("asciidoc/sources", "asciidoc/groundtruth")
 @pytest.mark.parametrize("name", ADOC_FIXTURES)
 def test_asciidoc_md_byte_identical(name):
     raw = (ADOC_SRC / name).read_bytes()
@@ -162,6 +170,7 @@ def test_asciidoc_never_raises_on_garbage():
         to_markdown(convert_asciidoc(raw, name="g"))
 
 
+@needs_reference("md/sources", "md/groundtruth")
 def test_md_yaml_goldens_item_level():
     """YAML sink + md-backend structural parity: the reference verifies
     its md yaml goldens ITEM-level (tests/test_backend_markdown.py

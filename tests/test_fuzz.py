@@ -12,6 +12,8 @@ from docling_spark.formats import (
 )
 from docling_spark.serialize import to_indented_text, to_json, to_markdown
 
+from conftest import needs_reference
+
 # Tag soup: fragments that stress the parser state machine
 _FRAGMENTS = st.sampled_from([
     "<p>", "</p>", "<div>", "</div>", "<li>", "<table>", "<tr>", "<td>",
@@ -51,6 +53,18 @@ def test_markdown_backend_total_on_text(text):
     to_json(doc)
 
 
+DISPATCH_FIXTURES = ("pdf/sources/code_and_formula.pdf",
+                     "docx/sources/Strict.docx",
+                     "xlsx/sources/xlsx_01.xlsx",
+                     "pptx/sources/powerpoint_comments.pptx",
+                     "odf/sources/odf_presentation_01.odp",
+                     "jats/sources/elife-56337.xml")
+LEGACY_FIXTURES = ("ppt/sources/legacy_sample.ppt",
+                   "xls/sources/legacy_sample.xls",
+                   "doc/sources/legacy_sample.doc")
+
+
+@needs_reference(*DISPATCH_FIXTURES, partial=True)
 def test_engine_dispatch_total_on_corrupted_binaries():
     """Truncations and bit-flips of REAL format fixtures, driven through
     the engine dispatch: every row must yield a status envelope - a
@@ -66,12 +80,7 @@ def test_engine_dispatch_total_on_corrupted_binaries():
 
     ref = pathlib.Path("/root/reference/tests/data")
     fixtures = []
-    for pat in ("pdf/sources/code_and_formula.pdf",
-                "docx/sources/Strict.docx",
-                "xlsx/sources/xlsx_01.xlsx",
-                "pptx/sources/powerpoint_comments.pptx",
-                "odf/sources/odf_presentation_01.odp",
-                "jats/sources/elife-56337.xml"):
+    for pat in DISPATCH_FIXTURES:
         p = ref / pat
         if p.exists():
             fixtures.append((p.name, p.read_bytes()))
@@ -97,6 +106,8 @@ def test_engine_dispatch_total_on_corrupted_binaries():
         assert set(o["status"]) <= {"success", "failure"}
 
 
+@needs_reference("ppt/sources/legacy_sample.ppt",
+                 "xls/sources/legacy_sample.xls")
 def test_legacy_binary_parsers_total_on_hostile_bytes():
     """Crawl-scale totality for the two newest from-scratch binary
     parsers (OLE2 containers: .ppt OfficeArt walk, .xls BIFF8): dense
@@ -153,6 +164,7 @@ def test_legacy_binary_parsers_total_on_hostile_bytes():
         to_markdown(conv(raw, name="fuzz"))
 
 
+@needs_reference(*LEGACY_FIXTURES, partial=True)
 def test_legacy_parsers_enveloped_by_engine_dispatch():
     """The same hostile .ppt/.xls/.doc bytes driven through the engine
     batch path: every row must come back as a status envelope."""
@@ -164,10 +176,8 @@ def test_legacy_parsers_enveloped_by_engine_dispatch():
     from docling_spark.engine import _extract_batches
 
     ref = pathlib.Path("/root/reference/tests/data")
-    fixtures = [(p.name, p.read_bytes()) for p in (
-        ref / "ppt/sources/legacy_sample.ppt",
-        ref / "xls/sources/legacy_sample.xls",
-        ref / "doc/sources/legacy_sample.doc") if p.exists()]
+    fixtures = [(p.name, p.read_bytes())
+                for p in (ref / pat for pat in LEGACY_FIXTURES) if p.exists()]
     assert len(fixtures) == 3
     rng = random.Random(99)
     urls, raws = [], []

@@ -8,6 +8,8 @@ from docling_spark.headings import (
     parse_marker,
 )
 
+from conftest import needs_reference
+
 
 def test_marker_families():
     assert parse_marker("PART I - General").family == "part"
@@ -91,6 +93,7 @@ class TestBookmarkHierarchy:
     reference's tests/test_heading_hierarchy_bookmarks.py on
     bookmark_sample.pdf)."""
 
+    @needs_reference("pdf/bookmark_sample.pdf")
     def test_bookmark_sample_levels(self):
         import pathlib
         from docling_spark.model import SectionHeaderItem
@@ -113,6 +116,7 @@ class TestBookmarkHierarchy:
             (2, "3. Payment Terms"), (3, "3.1 Payment Schedule"),
             (2, "4. Termination"), (1, "PART III - MISCELLANEOUS")]
 
+    @needs_reference("pdf/bookmark_sample.pdf")
     def test_default_off_keeps_flat_levels(self):
         import pathlib
         from docling_spark.model import SectionHeaderItem

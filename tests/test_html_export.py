@@ -1,15 +1,13 @@
 """HTML exporter goldens: byte-identity against the reference's shipped
 ``export_to_html`` groundtruth (4 ODF + 2 DOCX fixtures)."""
 
-import pathlib
-
 import pytest
 
 from docling_spark.msword import convert_docx
 from docling_spark.odf import convert_odf
 from docling_spark.serialize_html import to_html
 
-REF = pathlib.Path("/root/reference/tests/data")
+from conftest import REF, needs_reference
 
 CASES = [
     ("odf", "odf_presentation_01.odp", convert_odf),
@@ -21,6 +19,8 @@ CASES = [
 ]
 
 
+@needs_reference("odf/sources", "odf/groundtruth",
+                 "docx/sources", "docx/groundtruth")
 @pytest.mark.parametrize("fmt,fname,conv", CASES,
                          ids=[c[1] for c in CASES])
 def test_html_export_byte_identical(fmt, fname, conv):
@@ -31,6 +31,8 @@ def test_html_export_byte_identical(fmt, fname, conv):
     assert to_html(doc) == gt.read_text()
 
 
+@needs_reference("odf/sources/text_document_03.odt",
+                 "odf/groundtruth/text_document_03.odt.html")
 def test_png_reencode_matches_pil_output():
     """pngio.encode_png_like_pil is byte-identical to PIL's PNG save
     (verified against the data URIs PIL wrote into the html golden)."""

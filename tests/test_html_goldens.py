@@ -12,14 +12,18 @@ import pytest
 from docling_spark.extractor import extract
 from docling_spark.serialize import to_indented_text, to_json, to_markdown
 
+from conftest import needs_reference
+
 SRC = pathlib.Path("/root/reference/tests/data/html/sources")
 GT = pathlib.Path("/root/reference/tests/data/html/groundtruth")
 
 KNOWN_GAPS: set = set()
 
 FIXTURES = sorted(p.stem for p in SRC.glob("*.html")) if SRC.exists() else []
+needs_goldens = needs_reference("html/sources", "html/groundtruth")
 
 
+@needs_goldens
 @pytest.mark.parametrize("name", [n for n in FIXTURES if n not in KNOWN_GAPS])
 def test_markdown_byte_identical(name):
     doc = extract((SRC / f"{name}.html").read_bytes(), name=name,
@@ -28,6 +32,7 @@ def test_markdown_byte_identical(name):
     assert to_markdown(doc) == golden
 
 
+@needs_goldens
 @pytest.mark.parametrize(
     "name",
     [n for n in FIXTURES
@@ -39,6 +44,7 @@ def test_itxt_byte_identical(name):
     assert to_indented_text(doc) == golden
 
 
+@needs_goldens
 @pytest.mark.parametrize("name", [n for n in FIXTURES if n not in KNOWN_GAPS])
 def test_json_byte_identical(name):
     """Full DoclingDocument JSON byte-identity, including the

@@ -16,12 +16,15 @@ from docling_spark.latex import (
 from docling_spark.model import Doc
 from docling_spark.serialize import to_indented_text, to_json, to_markdown
 
+from conftest import needs_reference
+
 SRC = pathlib.Path("/root/reference/tests/data/latex/sources")
 GT = pathlib.Path("/root/reference/tests/data/latex/groundtruth")
 
 IN_SCOPE = ["example_01", "example_02"]
 
 
+@needs_reference("latex/sources", "latex/groundtruth")
 @pytest.mark.parametrize("stem", IN_SCOPE)
 def test_latex_goldens_byte_identical(stem):
     doc = convert_latex((SRC / f"{stem}.tex").read_bytes(), name=stem,
@@ -83,6 +86,8 @@ def test_never_raises_on_garbage():
         convert_latex(junk, name="junk")
 
 
+@needs_reference("latex/sources/2310.06825",
+                 "latex/groundtruth/2310.06825_main.tex.md")
 def test_engine_multifile_arxiv_inputs():
     """Multi-file arXiv projects convert byte-identically THROUGH the
     Spark engine via the latex side input."""
@@ -90,8 +95,6 @@ def test_engine_multifile_arxiv_inputs():
 
     from docling_spark.engine import _extract_batches
     base = SRC / "2310.06825"
-    if not base.exists():
-        pytest.skip("no arxiv corpus")
     inputs = {f.name: f.read_bytes() for f in base.rglob("*")
               if f.is_file() and f.suffix in (".tex", ".sty", ".bbl")}
     df = pd.DataFrame({"url": ["https://x.test/2310.06825.tex"],
@@ -157,6 +160,8 @@ class TestReferenceTableOffsetBugPinned:
         wrong = parse_brace_args(env[40:])
         assert wrong and wrong != ["2", "c", "BLEU"]
 
+    @needs_reference("latex/groundtruth/1706.03762_main.tex.md",
+                     "latex/groundtruth/2412.19437_main.tex.md")
     def test_groundtruth_carries_the_artifact(self):
         gt = (self.GT / "1706.03762_main.tex.md").read_text()
         # the corrupted header row: one citation key repeated across
@@ -165,6 +170,7 @@ class TestReferenceTableOffsetBugPinned:
         gt2 = (self.GT / "2412.19437_main.tex.md").read_text()
         assert "|  |  |  |  |  |  |  |  |" in gt2
 
+    @needs_reference("latex/sources/1706.03762")
     def test_our_bleu_table_is_semantically_correct(self):
         from docling_spark.latex import convert_latex
         from docling_spark.serialize import to_markdown

@@ -1,6 +1,7 @@
 """XLSX backend tests: golden byte-identity sweep + semantic unit vectors.
 
-Goldens live in /root/reference/tests/data/xlsx/{sources,groundtruth}.
+Goldens live in /root/reference/tests/data/xlsx/{sources,groundtruth};
+the tests that read them skip, naming the missing path, when it is absent.
 md and itxt are byte-identical for all 11 fixtures; json is compared with
 every picture's ``image.uri`` masked (the reference embeds a
 PIL-re-encoded PNG; we carry the original bytes). xlsx_emf's json is out
@@ -21,6 +22,8 @@ from docling_spark.msexcel import (
 from docling_spark.serialize import (
     _tabulate_grid, to_indented_text, to_json, to_markdown)
 
+from conftest import needs_reference
+
 SRC = pathlib.Path("/root/reference/tests/data/xlsx/sources")
 GT = pathlib.Path("/root/reference/tests/data/xlsx/groundtruth")
 
@@ -33,6 +36,11 @@ def _paths():
     return sorted(SRC.glob("*.xlsx")) + sorted(SRC.glob("*.xlsm"))
 
 
+PATHS = _paths()
+JSON_PATHS = [p for p in PATHS if p.stem not in JSON_OUT_OF_SCOPE]
+needs_goldens = needs_reference("xlsx/sources", "xlsx/groundtruth")
+
+
 def _convert(path: pathlib.Path):
     raw = path.read_bytes()
     bh = int.from_bytes(hashlib.sha256(raw).digest()[-8:], "big")
@@ -40,7 +48,8 @@ def _convert(path: pathlib.Path):
                         binary_hash=bh)
 
 
-@pytest.mark.parametrize("path", _paths(), ids=lambda p: p.stem)
+@needs_goldens
+@pytest.mark.parametrize("path", PATHS, ids=[p.stem for p in PATHS])
 def test_xlsx_md_golden_byte_identical(path):
     doc = _convert(path)
     layers = (("body", "furniture", "notes", "invisible")
@@ -50,7 +59,8 @@ def test_xlsx_md_golden_byte_identical(path):
     assert to_markdown(doc, layers=layers) == golden.read_text()
 
 
-@pytest.mark.parametrize("path", _paths(), ids=lambda p: p.stem)
+@needs_goldens
+@pytest.mark.parametrize("path", PATHS, ids=[p.stem for p in PATHS])
 def test_xlsx_itxt_golden_byte_identical(path):
     doc = _convert(path)
     golden = GT / f"{path.name}.itxt"
@@ -58,9 +68,9 @@ def test_xlsx_itxt_golden_byte_identical(path):
     assert to_indented_text(doc) == golden.read_text()
 
 
-@pytest.mark.parametrize(
-    "path", [p for p in _paths() if p.stem not in JSON_OUT_OF_SCOPE],
-    ids=lambda p: p.stem)
+@needs_goldens
+@pytest.mark.parametrize("path", JSON_PATHS,
+                         ids=[p.stem for p in JSON_PATHS])
 def test_xlsx_json_golden_byte_identical(path):
     """UNMASKED: PNG image data URIs match via the PIL-parity
     re-encoder; only the EMF fixture stays out of scope (EMF
@@ -125,6 +135,7 @@ def test_section_label_not_split_when_two_texts_in_first_row():
     assert title is None and rest is table
 
 
+@needs_reference("xlsx/sources/xlsx_02_sample_sales_data.xlsm")
 def test_cell_value_typing_matches_openpyxl():
     wb = XlsxWorkbook((SRC / "xlsx_02_sample_sales_data.xlsm").read_bytes())
     sales = next(s for s in wb.sheets if s.name == "SalesData")
@@ -135,6 +146,7 @@ def test_cell_value_typing_matches_openpyxl():
     assert sales.cells[(1, 0)] == "Widget A"
 
 
+@needs_reference("xlsx/sources/xlsx_01.xlsx")
 def test_hidden_sheet_is_invisible_layer():
     doc = _convert(SRC / "xlsx_01.xlsx")
     hidden = [g for g in doc.groups if g.name == "Sheet4"]
@@ -143,6 +155,7 @@ def test_hidden_sheet_is_invisible_layer():
     assert sorted(doc.pages) == [1, 2, 3, 4]
 
 
+@needs_reference("xlsx/sources/xlsx_01.xlsx")
 def test_chart_meta_and_caption():
     doc = _convert(SRC / "xlsx_01.xlsx")
     chart_pics = [p for p in doc.pictures if p.meta]
@@ -204,6 +217,7 @@ class TestLegacyXls:
     sharing the xlsx table pipeline: 1/1 shipped golden byte-identical
     in all three export formats."""
 
+    @needs_reference("xls/sources/legacy_sample.xls", "xls/groundtruth")
     def test_legacy_xls_goldens(self):
         import functools
         import hashlib
@@ -223,6 +237,7 @@ class TestLegacyXls:
                         ("json", functools.partial(to_json, indent=2))):
             assert fn(doc) == (gt / f"legacy_sample.xls.{ext}").read_text(), ext
 
+    @needs_reference("xls/sources/legacy_sample.xls")
     def test_ole2_reader_streams(self):
         from docling_spark.legacy import OleFile
         raw = open("/root/reference/tests/data/xls/sources/"

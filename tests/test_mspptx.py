@@ -1,6 +1,7 @@
 """PPTX backend tests: golden byte-identity sweep + semantic unit vectors.
 
-Goldens live in /root/reference/tests/data/pptx/{sources,groundtruth}.
+Goldens live in /root/reference/tests/data/pptx/{sources,groundtruth};
+the tests that read them skip, naming the missing path, when it is absent.
 md, itxt, and json (picture image.uri byte-identical - the reference embeds a
 PIL-re-encoded PNG, we carry the original bytes) are identical for all
 8 fixtures.
@@ -16,6 +17,8 @@ from docling_spark.mspptx import (
     _classify_plot_tag, _image_dpi, _iter_shapes_by_position, convert_pptx)
 from docling_spark.serialize import to_indented_text, to_json, to_markdown
 
+from conftest import needs_reference
+
 SRC = pathlib.Path("/root/reference/tests/data/pptx/sources")
 GT = pathlib.Path("/root/reference/tests/data/pptx/groundtruth")
 
@@ -26,6 +29,11 @@ def _paths():
     return sorted(SRC.glob("*.pptx"))
 
 
+PATHS = _paths()
+IDS = [p.stem for p in PATHS]
+needs_goldens = needs_reference("pptx/sources", "pptx/groundtruth")
+
+
 def _convert(path: pathlib.Path):
     raw = path.read_bytes()
     bh = int.from_bytes(hashlib.sha256(raw).digest()[-8:], "big")
@@ -33,7 +41,8 @@ def _convert(path: pathlib.Path):
                         binary_hash=bh)
 
 
-@pytest.mark.parametrize("path", _paths(), ids=lambda p: p.stem)
+@needs_goldens
+@pytest.mark.parametrize("path", PATHS, ids=IDS)
 def test_pptx_md_golden_byte_identical(path):
     doc = _convert(path)
     layers = (("body", "furniture", "notes")
@@ -42,13 +51,15 @@ def test_pptx_md_golden_byte_identical(path):
         (GT / f"{path.name}.md").read_text()
 
 
-@pytest.mark.parametrize("path", _paths(), ids=lambda p: p.stem)
+@needs_goldens
+@pytest.mark.parametrize("path", PATHS, ids=IDS)
 def test_pptx_itxt_golden_byte_identical(path):
     doc = _convert(path)
     assert to_indented_text(doc) == (GT / f"{path.name}.itxt").read_text()
 
 
-@pytest.mark.parametrize("path", _paths(), ids=lambda p: p.stem)
+@needs_goldens
+@pytest.mark.parametrize("path", PATHS, ids=IDS)
 def test_pptx_json_golden_byte_identical(path):
     """UNMASKED: image data URIs match byte-for-byte via the
     PIL-parity PNG re-encoder (pngio)."""
@@ -60,6 +71,7 @@ def test_pptx_json_golden_byte_identical(path):
 
 # ---------------------------------------------------------------- units
 
+@needs_reference("pptx/sources/powerpoint_sample.pptx")
 def test_slide_structure_sample():
     doc = _convert(SRC / "powerpoint_sample.pptx")
     chapters = [g for g in doc.groups if g.label == "chapter"]
@@ -75,6 +87,7 @@ def test_slide_structure_sample():
     assert prov["charspan"] == [0, len(titles[0].text)]
 
 
+@needs_reference("pptx/sources/pptx_chart.pptx")
 def test_chart_classified_with_data():
     doc = _convert(SRC / "pptx_chart.pptx")
     pic = doc.pictures[0]
@@ -85,11 +98,13 @@ def test_chart_classified_with_data():
     assert "Freshwater Ducks" in texts and "120" in texts
 
 
+@needs_reference("pptx/sources/powerpoint_malformed_pictures.pptx")
 def test_malformed_pictures_skipped():
     doc = _convert(SRC / "powerpoint_malformed_pictures.pptx")
     assert doc.pictures == []  # missing blip, dangling rel, bad content type
 
 
+@needs_reference("pptx/sources/powerpoint_comments.pptx")
 def test_comments_on_notes_layer():
     doc = _convert(SRC / "powerpoint_comments.pptx")
     groups = [g for g in doc.groups if g.label == "comment_section"]

@@ -1,6 +1,7 @@
 """DOCX backend tests: golden byte-identity sweep + semantic units.
 
-Goldens live in /root/reference/tests/data/docx/{sources,groundtruth};
+Goldens live in /root/reference/tests/data/docx/{sources,groundtruth}
+(the tests that read them skip, naming the missing path, when it is absent);
 OMML equations / textboxes / drawingml are declared out of scope this
 round (module docstring), so the sweep asserts a floor, not 32/32.
 """
@@ -12,6 +13,8 @@ import pytest
 from docling_spark.msword import DocxPackage, convert_docx
 from docling_spark.serialize import (to_indented_text, to_json,
                                      to_markdown)
+
+from conftest import needs_reference
 
 SRC = pathlib.Path("/root/reference/tests/data/docx/sources")
 GT = pathlib.Path("/root/reference/tests/data/docx/groundtruth")
@@ -28,6 +31,10 @@ def _names():
     return sorted(p.stem for p in SRC.glob("*.docx"))
 
 
+needs_goldens = needs_reference("docx/sources", "docx/groundtruth")
+
+
+@needs_goldens
 @pytest.mark.parametrize("stem", [n for n in _names()
                                   if n not in OUT_OF_SCOPE])
 def test_docx_md_golden_byte_identical(stem):
@@ -38,6 +45,7 @@ def test_docx_md_golden_byte_identical(stem):
     assert to_markdown(doc) == golden.read_text()
 
 
+@needs_goldens
 @pytest.mark.parametrize("stem", [n for n in _names()
                                   if n not in OUT_OF_SCOPE - ITXT_ALSO_OK])
 def test_docx_itxt_golden_byte_identical(stem):
@@ -48,6 +56,7 @@ def test_docx_itxt_golden_byte_identical(stem):
     assert to_indented_text(doc) == golden.read_text()
 
 
+@needs_reference("docx/sources/Strict.docx")
 def test_strict_package_normalized():
     raw = (SRC / "Strict.docx").read_bytes()
     pkg = DocxPackage(raw)
@@ -60,6 +69,7 @@ def test_never_raises_on_garbage():
         convert_docx(b"not a zip at all")  # caller (engine) wraps this
 
 
+@needs_reference("docx/sources/lorem_ipsum.docx")
 def test_engine_dispatches_docx(spark):
     raw = (SRC / "lorem_ipsum.docx").read_bytes()
     from docling_spark import engine
@@ -104,6 +114,8 @@ def test_omml_to_latex_units():
     assert run("<m:r><m:t>π</m:t></m:r>").strip() == "\\pi"
 
 
+@needs_reference("docx/sources/textbox.docx",
+                 "docx/groundtruth/textbox.docx.md")
 def test_textbox_superset_of_golden_documented_reference_bug():
     """The textbox golden silently drops 4 of 13 textboxes: the reference
     dedups processed elements by id() of EPHEMERAL lxml proxies
@@ -164,6 +176,7 @@ JSON_OUT_OF_SCOPE = {"docx_vml_images", "drawingml", "test_emf_docx",
                      "textbox", "word_sample"}
 
 
+@needs_goldens
 @pytest.mark.parametrize(
     "stem", [n for n in _names() if n not in JSON_OUT_OF_SCOPE
              and (GT / f"{n}.docx.json").exists()])

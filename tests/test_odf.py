@@ -1,6 +1,7 @@
 """ODF (odt/ods/odp) backend tests: golden byte-identity + unit vectors.
 
-Goldens live in /root/reference/tests/data/odf/{sources,groundtruth}.
+Goldens live in /root/reference/tests/data/odf/{sources,groundtruth};
+the tests that read them skip, naming the missing path, when it is absent.
 md and itxt are byte-identical for all 6 fixtures; json (image.uri
 masked) for 3 of the 4 fixtures that ship one. The exception is
 odf_table_with_title_01.ods: its golden's table prov bbox predates the
@@ -22,6 +23,8 @@ from docling_spark.odf import (
 from docling_spark.model import Formatting
 from docling_spark.serialize import to_indented_text, to_json, to_markdown
 
+from conftest import needs_reference
+
 SRC = pathlib.Path("/root/reference/tests/data/odf/sources")
 GT = pathlib.Path("/root/reference/tests/data/odf/groundtruth")
 
@@ -29,8 +32,17 @@ JSON_OUT_OF_SCOPE = {"odf_table_with_title_01.ods"}
 
 
 def _paths():
+    if not SRC.exists():
+        return []
     return [p for p in sorted(SRC.iterdir())
             if p.suffix in (".odt", ".ods", ".odp")]
+
+
+PATHS = _paths()
+JSON_PATHS = [p for p in PATHS
+              if (GT / f"{p.name}.json").exists()
+              and p.name not in JSON_OUT_OF_SCOPE]
+needs_goldens = needs_reference("odf/sources", "odf/groundtruth")
 
 
 def _convert(path: pathlib.Path):
@@ -40,23 +52,23 @@ def _convert(path: pathlib.Path):
                        binary_hash=bh)
 
 
-@pytest.mark.parametrize("path", _paths(), ids=lambda p: p.name)
+@needs_goldens
+@pytest.mark.parametrize("path", PATHS, ids=[p.name for p in PATHS])
 def test_odf_md_golden_byte_identical(path):
     doc = _convert(path)
     assert to_markdown(doc) == (GT / f"{path.name}.md").read_text()
 
 
-@pytest.mark.parametrize("path", _paths(), ids=lambda p: p.name)
+@needs_goldens
+@pytest.mark.parametrize("path", PATHS, ids=[p.name for p in PATHS])
 def test_odf_itxt_golden_byte_identical(path):
     doc = _convert(path)
     assert to_indented_text(doc) == (GT / f"{path.name}.itxt").read_text()
 
 
-@pytest.mark.parametrize(
-    "path", [p for p in _paths()
-             if (GT / f"{p.name}.json").exists()
-             and p.name not in JSON_OUT_OF_SCOPE],
-    ids=lambda p: p.name)
+@needs_goldens
+@pytest.mark.parametrize("path", JSON_PATHS,
+                         ids=[p.name for p in JSON_PATHS])
 def test_odf_json_golden_byte_identical(path):
     """UNMASKED: image data URIs match via the PIL-parity PNG
     re-encoder (pngio)."""
@@ -68,6 +80,7 @@ def test_odf_json_golden_byte_identical(path):
 
 # ---------------------------------------------------------------- units
 
+@needs_reference("odf/sources/odf_table_with_title_01.ods")
 def test_ods_typed_values_decimal():
     pkg = OdfPackage((SRC / "odf_table_with_title_01.ods").read_bytes())
     body = pkg.body
@@ -77,6 +90,7 @@ def test_ods_typed_values_decimal():
     assert "120" in texts and "120.0" not in texts
 
 
+@needs_reference("odf/sources/text_document_01.odt")
 def test_odt_formatting_runs():
     doc = _convert(SRC / "text_document_01.odt")
     bold = [t for t in doc.texts
@@ -87,6 +101,7 @@ def test_odt_formatting_runs():
     assert subs  # X2 + Y2 = Z sub/superscripts
 
 
+@needs_reference("odf/sources/odf_presentation_01.odp")
 def test_odp_slide_titles():
     doc = _convert(SRC / "odf_presentation_01.odp")
     chapters = [g for g in doc.groups if g.label == "chapter"]
@@ -96,6 +111,7 @@ def test_odp_slide_titles():
     assert "Slide3" in titles
 
 
+@needs_reference("odf/sources/odf_presentation_02.odp")
 def test_odp_chart_data():
     doc = _convert(SRC / "odf_presentation_02.odp")
     charts = [p for p in doc.pictures if p.meta]
@@ -108,12 +124,14 @@ def test_odp_chart_data():
     assert "Column 1" in texts and "9.1" in texts
 
 
+@needs_reference("odf/sources/text_document_03.odt")
 def test_rich_cells_get_groups():
     doc = _convert(SRC / "text_document_03.odt")
     rich = [g for g in doc.groups if g.name.startswith("rich_cell_group")]
     assert rich
 
 
+@needs_reference("odf/sources/text_document_02.odt")
 def test_nested_table_bounds():
     pkg = OdfPackage((SRC / "text_document_02.odt").read_bytes())
     tables = list(pkg.body.iter_desc("table:table"))

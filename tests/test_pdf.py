@@ -15,11 +15,13 @@ from docling_spark.pdftext import (extract_page_cells, glyph_name_to_unicode,
                                    parse_tounicode)
 from docling_spark.serialize import to_markdown
 
+from conftest import needs_reference
+
 SRC = pathlib.Path("/root/reference/tests/data/pdf/sources")
 GT = pathlib.Path("/root/reference/tests/data/pdf/groundtruth")
 
-needs_corpus = pytest.mark.skipif(not SRC.exists(),
-                                  reason="reference corpus not present")
+needs_corpus = needs_reference("pdf/sources")
+needs_goldens = needs_reference("pdf/sources", "pdf/groundtruth")
 
 
 # ---------------------------------------------------------------- pdfio
@@ -192,13 +194,12 @@ def test_engine_dispatch_pdf():
     assert out["md"][0] == expected
 
 
+@needs_reference("ebcdic/sources")
 def test_engine_dispatch_ebcdic_layout_mapping():
     import pandas as pd
 
     from docling_spark.engine import _extract_batches
     ebc_src = pathlib.Path("/root/reference/tests/data/ebcdic/sources")
-    if not ebc_src.exists():
-        pytest.skip("no ebcdic corpus")
     ebc = next(iter(sorted(ebc_src.glob("*.ebc"))))
     layout = (ebc_src / (ebc.name.replace(".ebc", ".layout.json"))
               ).read_text()
@@ -354,6 +355,7 @@ def test_hybrid_xref_follows_xrefstm_and_prev():
     assert to_markdown(doc) == "Hybrid"
 
 
+@needs_goldens
 class TestPdfGroundtruthMd:
     """Byte-identity vs the reference's own PDF markdown groundtruth
     (reference: tests/data/pdf/groundtruth/*.md, StandardPdfPipeline
@@ -374,6 +376,7 @@ class TestPdfGroundtruthMd:
         assert to_markdown(doc) == (self.GT / f"{stem}.md").read_text()
 
 
+@needs_goldens
 class TestPdfDoctags:
     """DocTags export vs reference groundtruth.
 
@@ -485,6 +488,7 @@ class TestPdfDoctags:
         assert stripped <= max_stripped, (stripped, max_stripped)
 
 
+@needs_goldens
 def test_pdf_md_diff_ratchet():
     """Regression ratchet: groundtruth md diff-line counts must not grow
     (byte-identical fixtures are pinned exactly in
@@ -539,6 +543,7 @@ def test_pdf_md_diff_ratchet():
         assert n <= ceiling, (stem, n, ceiling)
 
 
+@needs_goldens
 class TestGroundtruthSpacingArtifact:
     """Formal scope-out for amt_handbook_sample's 8 residual md diff
     lines (all single-vs-double word-spacing): the groundtruth's own
@@ -832,6 +837,7 @@ def test_lone_punct_cell_is_orphan_block_unless_same_row():
     assert len(blocks) == 1
 
 
+@needs_goldens
 class TestMultiPageDoctagsMLEvidence:
     """Formal scope-out for multi_page's 30 residual doctags x1 locs:
     the groundtruth right edges are PROVABLY not a function of the
@@ -997,7 +1003,9 @@ class TestEncryptedPdf:
 
     FIXTURE = ("/root/reference/tests/data/pdf_password/sources/"
                "2206.01062_pg3.pdf")
+    needs_fixture = needs_reference("pdf_password/sources/2206.01062_pg3.pdf")
 
+    @needs_fixture
     def test_aesv2_fixture_converts(self):
         from docling_spark.pdfdoc import convert_pdf
         from docling_spark.serialize import to_markdown
@@ -1007,6 +1015,7 @@ class TestEncryptedPdf:
         assert "DocLayNet" in md
         assert len(doc.pages) == 1
 
+    @needs_fixture
     def test_wrong_password_clean_error(self):
         import pytest
 
@@ -1031,6 +1040,7 @@ class TestEncryptedPdf:
                                   rk256) == pt
         assert rc4(b"Key", b"Plaintext").hex() == "bbf316e8d940af0ad3"
 
+    @needs_fixture
     def test_engine_password_mapping(self, spark):
         """The pdf side input rides the worker function to executors; an
         encrypted doc WITHOUT its password yields a failure envelope,
@@ -1395,6 +1405,7 @@ class TestRedpMLEvidence:
         assert "Back cover" in gt
 
 
+@needs_reference("pdf/sources/multi_page.pdf")
 def test_ttink_hmtx_advances_match_pdf_widths():
     """The embedded font program's hmtx advances (TrueTypeInk.advance)
     agree with the PDF /Widths ints to within the 1/1000-em rounding

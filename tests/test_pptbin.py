@@ -13,8 +13,14 @@ import pathlib
 
 import pytest
 
+from conftest import needs_reference
+
 SRC = pathlib.Path("/root/reference/tests/data/ppt/sources")
 GT = pathlib.Path("/root/reference/tests/data/ppt/groundtruth")
+
+SAMPLE = "ppt/sources/legacy_sample.ppt"
+needs_sample = needs_reference(SAMPLE)
+needs_goldens = needs_reference(SAMPLE, "ppt/groundtruth")
 
 FUZZY_BBOX_TOL_RATIO = 0.08  # the reference's own legacy-format policy
 
@@ -28,18 +34,21 @@ def converted():
                        filename="legacy_sample.ppt", binary_hash=bh)
 
 
+@needs_goldens
 def test_md_byte_identical(converted):
     from docling_spark.serialize import to_markdown
     assert to_markdown(converted) == \
         (GT / "legacy_sample.ppt.md").read_text()
 
 
+@needs_goldens
 def test_itxt_byte_identical(converted):
     from docling_spark.serialize import to_indented_text
     assert to_indented_text(converted) == \
         (GT / "legacy_sample.ppt.itxt").read_text()
 
 
+@needs_goldens
 def test_json_identical_with_reference_fuzzy_bboxes(converted):
     """Object identity for every non-numeric field; numeric deltas
     bounded by the reference's own fuzzy bbox tolerance."""
@@ -74,6 +83,7 @@ def test_json_identical_with_reference_fuzzy_bboxes(converted):
     assert not hard, hard[:10]
 
 
+@needs_goldens
 def test_table_structure_exact(converted):
     """The 9x7 merged-cell grid must match the groundtruth exactly
     (col/row offsets, spans, header flags, texts)."""
@@ -93,6 +103,7 @@ def test_table_structure_exact(converted):
     assert ours == gt_cells
 
 
+@needs_sample
 def test_structures():
     from docling_spark.pptbin import PptFile, _Table
     ppt = PptFile((SRC / "legacy_sample.ppt").read_bytes())
@@ -110,6 +121,7 @@ def test_structures():
     assert ppt.slide_has_notes == [False, True, True]
 
 
+@needs_sample
 def test_autonumber_detection():
     """PP9 fBulletHasAutoNumber turns bullets into numbered lists."""
     from docling_spark.pptbin import PptFile, _Shape
@@ -128,6 +140,7 @@ def test_not_a_ppt_raises():
         PptFile(b"\xd0\xcf\x11\xe0" + b"\x00" * 600)
 
 
+@needs_reference(SAMPLE, "doc/sources/legacy_sample.doc")
 def test_looks_like_ppt():
     from docling_spark.pptbin import looks_like_ppt
     assert looks_like_ppt((SRC / "legacy_sample.ppt").read_bytes())
@@ -137,6 +150,7 @@ def test_looks_like_ppt():
     assert not looks_like_ppt(doc_src.read_bytes())
 
 
+@needs_sample
 def test_engine_dispatch(spark):
     from docling_spark import engine
     raw = (SRC / "legacy_sample.ppt").read_bytes()
@@ -147,6 +161,7 @@ def test_engine_dispatch(spark):
     assert row["n_tables"] == 1
 
 
+@needs_sample
 def test_fuzz_truncated_and_bitflipped(spark):
     """Truncated / bit-flipped .ppt bytes must produce per-doc error
     envelopes (or degraded success), never a task failure."""

@@ -6,6 +6,8 @@ import pytest
 from docling_spark.extractor import extract
 from docling_spark.serialize import to_markdown
 
+from conftest import needs_reference
+
 
 def md(html: str) -> str:
     return to_markdown(extract(html.encode(), name="unit"))
@@ -116,6 +118,7 @@ def test_table_with_spans():
     assert lines[2] == "| wide | wide |"
 
 
+@needs_reference("html/sources/html_rich_table_cells.html")
 def test_is_rich_table_cell_grid():
     """Hand-labeled rich-cell classification grid from the reference's
     tests/test_backend_html.py:682-760."""
@@ -333,6 +336,8 @@ class TestJpegCodec:
         err = np.abs(px.astype(float) - img.astype(float)).mean()
         assert err < 12.0, err
 
+    @needs_reference("latex/sources/arXiv-2501.01300v2/cas-email.jpeg",
+                     "latex/sources/2310.06825/images/header.jpeg")
     def test_reference_jpegs_decode(self):
         import pathlib
 
@@ -631,6 +636,7 @@ class TestJpegProgressive:
         want = round(21 / 8) + 128
         assert (px == want).all(), np.unique(px)
 
+    @needs_reference("latex/sources/2310.06825/images/header.jpeg")
     def test_reference_progressive_fixture(self):
         """The repo's real progressive JPEG (SOF2, 4:2:0, successive
         approximation) decodes to full resolution; mean + pixel hash
@@ -649,6 +655,7 @@ class TestJpegProgressive:
         assert hashlib.sha256(px.tobytes()).hexdigest() == \
             "4c058be54bdfd68eeda1951e468142f9f0454504f9d47bf3a1a35d7f49e3fabe"
 
+    @needs_reference("latex/sources/2310.06825/images/header.jpeg")
     def test_progressive_total_on_bit_flips(self):
         import pathlib
         import random
@@ -973,6 +980,7 @@ class TestTiffDecode:
             assert out is None or out.dtype == np.uint8
 
 
+@needs_reference("latex/sources/2310.06825/images/header.jpeg")
 def test_jpeg_truncated_streams_render_partially():
     """Crawl payloads are often cut mid-transfer: a truncated entropy
     stream must render the MCUs/scans decoded so far (libjpeg-style),

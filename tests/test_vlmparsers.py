@@ -9,11 +9,14 @@ import pytest
 from docling_spark.vlmparsers import (parse_chandra_html, parse_dots_json,
                                       sniff_chandra, sniff_dots)
 
+from conftest import needs_reference
+
 CHANDRA = pathlib.Path("/root/reference/tests/data/html_chandra/sources")
 DOTS = pathlib.Path("/root/reference/tests/data/json_dots/sources")
 
 
 class TestChandra:
+    @needs_reference("html_chandra/sources/chandra_simple.html")
     def test_simple_parsing(self):
         content = (CHANDRA / "chandra_simple.html").read_text()
         doc = parse_chandra_html(content, 612, 792, 1,
@@ -29,6 +32,7 @@ class TestChandra:
             bb = item.prov[0]["bbox"]
             assert bb["l"] >= 0 and bb["t"] >= 0
 
+    @needs_reference("html_chandra/sources/chandra_multiblock.html")
     def test_multiblock_parsing(self):
         content = (CHANDRA / "chandra_multiblock.html").read_text()
         doc = parse_chandra_html(content, 612, 792, 1,
@@ -78,6 +82,7 @@ class TestChandra:
         cells = doc.tables[0].data.table_cells
         assert cells[0].text == "Header" and cells[0].column_header
 
+    @needs_reference("html_chandra/sources/chandra_list_group.html")
     def test_list_group_prediction_sample(self):
         content = (CHANDRA / "chandra_list_group.html").read_text()
         doc = parse_chandra_html(content, 612, 792, 1,
@@ -97,6 +102,7 @@ class TestChandra:
 
 
 class TestDots:
+    @needs_reference("json_dots/sources/dots_simple.json")
     def test_simple_parsing(self):
         content = (DOTS / "dots_simple.json").read_text()
         doc = parse_dots_json(content, 612, 792, 1, "dots_simple.json")
@@ -112,6 +118,7 @@ class TestDots:
             bb = item.prov[0]["bbox"]
             assert bb["l"] >= 0 and bb["t"] >= 0
 
+    @needs_reference("json_dots/sources/dots_list.json")
     def test_list_parsing(self):
         content = (DOTS / "dots_list.json").read_text()
         doc = parse_dots_json(content, 612, 792, 1, "dots_list.json")
@@ -169,6 +176,8 @@ class TestDots:
 
 
 class TestDispatch:
+    @needs_reference("html_chandra/sources/chandra_simple.html",
+                     "json_dots/sources/dots_simple.json")
     def test_sniffs(self):
         assert sniff_chandra(
             (CHANDRA / "chandra_simple.html").read_bytes())
@@ -192,6 +201,8 @@ class TestDispatch:
         assert not sniff_dots(b'{"bbox": [1,2,3,4]}')  # not an array
         assert not sniff_dots(b'[{"x": 1}]')
 
+    @needs_reference("html_chandra/sources/chandra_simple.html",
+                     "json_dots/sources/dots_simple.json")
     def test_engine_dispatch(self, spark):
         from docling_spark import engine
         rows = [

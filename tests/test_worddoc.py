@@ -9,8 +9,14 @@ import pathlib
 
 import pytest
 
+from conftest import needs_reference
+
 SRC = pathlib.Path("/root/reference/tests/data/doc/sources")
 GT = pathlib.Path("/root/reference/tests/data/doc/groundtruth")
+
+SAMPLE = "doc/sources/legacy_sample.doc"
+needs_sample = needs_reference(SAMPLE)
+needs_goldens = needs_reference(SAMPLE, "doc/groundtruth")
 
 
 @pytest.fixture(scope="module")
@@ -22,18 +28,21 @@ def converted():
                        filename="legacy_sample.doc", binary_hash=bh)
 
 
+@needs_goldens
 def test_md_byte_identical(converted):
     from docling_spark.serialize import to_markdown
     assert to_markdown(converted) == \
         (GT / "legacy_sample.doc.md").read_text()
 
 
+@needs_goldens
 def test_itxt_byte_identical(converted):
     from docling_spark.serialize import to_indented_text
     assert to_indented_text(converted) == \
         (GT / "legacy_sample.doc.itxt").read_text()
 
 
+@needs_goldens
 def test_json_byte_identical(converted):
     """Canonical-serialized byte identity (same comparison as the
     html/docx golden suites): round-trip ours through the identical
@@ -44,6 +53,7 @@ def test_json_byte_identical(converted):
     assert ours == (GT / "legacy_sample.doc.json").read_text()
 
 
+@needs_sample
 def test_structures():
     from docling_spark.worddoc import DocFile
     d = DocFile((SRC / "legacy_sample.doc").read_bytes())
@@ -92,6 +102,7 @@ def test_style_name_quote_escaped():
         "He said &quot;hi&quot;"
 
 
+@needs_sample
 def test_fuzz_truncated_and_bitflipped(spark):
     """Dispatch totality for .doc: truncated and bit-flipped bytes must
     produce per-doc error envelopes (or a degraded success), never a
@@ -117,6 +128,7 @@ def test_fuzz_truncated_and_bitflipped(spark):
         assert r["status"] in ("success", "failure")
 
 
+@needs_sample
 def test_engine_dispatch(spark):
     from docling_spark import engine
     raw = (SRC / "legacy_sample.doc").read_bytes()

@@ -18,16 +18,15 @@ import difflib
 import json
 import pathlib
 
-import pytest
-
 from docling_spark.serialize import to_indented_text, to_json, to_markdown
 from docling_spark.xbrl import convert_xbrl, flatten_taxonomy, looks_like_xbrl
+
+from conftest import needs_reference
 
 SRC = pathlib.Path("/root/reference/tests/data/xbrl/sources")
 GT = pathlib.Path("/root/reference/tests/data/xbrl/groundtruth")
 
-needs_corpus = pytest.mark.skipif(not SRC.exists(),
-                                  reason="reference corpus not present")
+needs_corpus = needs_reference("xbrl/sources")
 
 
 def _load(stem, taxdir):
@@ -141,7 +140,7 @@ METS_SRC = pathlib.Path(
     "32044009881525_select.tar.gz")
 
 
-@pytest.mark.skipif(not METS_SRC.exists(), reason="no mets corpus")
+@needs_reference("mets_gbs/sources/32044009881525_select.tar.gz")
 def test_metsgbs_page_count_and_text_in_rect():
     """Mirrors the reference's own test assertions
     (tests/test_backend_mets_gbs.py:27-56)."""
@@ -152,7 +151,7 @@ def test_metsgbs_page_count_and_text_in_rect():
     assert t.strip() == "recently become prevalent that he who speaks"
 
 
-@pytest.mark.skipif(not METS_SRC.exists(), reason="no mets corpus")
+@needs_reference("mets_gbs/sources/32044009881525_select.tar.gz")
 def test_metsgbs_convert_and_engine_dispatch():
     import pandas as pd
 
