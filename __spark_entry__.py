@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+import docling_spark
 from docling_spark import (chunking, confidence, dedup, engine, layout,
                            multimodal)
 from docling_spark import pages as pages_mod
@@ -33,13 +34,8 @@ def _ensure_shipped(spark: SparkSession) -> None:
     if key in _SHIPPED:
         return
     import tempfile
-    import zipfile
-    pkg_dir = Path(__file__).resolve().parent / "docling_spark"
-    zpath = Path(tempfile.gettempdir()) / "docling_spark_pkg.zip"
-    with zipfile.ZipFile(zpath, "w") as zf:
-        for py in sorted(pkg_dir.glob("*.py")):
-            zf.write(py, f"docling_spark/{py.name}")
-    sc.addPyFile(str(zpath))
+    sc.addPyFile(docling_spark.zip_package(
+        Path(tempfile.gettempdir()) / "docling_spark_pkg.zip"))
     _SHIPPED.add(key)
 
 

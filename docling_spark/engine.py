@@ -6,8 +6,9 @@ North-rule machinery (SURVEY.md §3.4, §4):
   every task gets the same number of rows, whatever the mix of hosts in
   the urls. That count balance is the skew handling: a separate band for
   oversized rows bought no wall time (README "Scale design").
-- **Arrow-batched extraction** via ``mapInPandas`` - one Python invocation
-  per record batch, never per row. Each document is converted by the
+- **Arrow-batched extraction** via ``mapInArrow`` - one Python invocation
+  per record batch, never per row, reading and building pyarrow arrays
+  against one result schema (no pandas). Each document is converted by the
   first matching row of one ordered format table (extension plus content
   sniff); per-format side inputs travel as one ``{format: {basename:
   value}}`` map, and each optional export adds one column.
@@ -38,7 +39,6 @@ from concurrent.futures import (
     FIRST_COMPLETED, Future, ThreadPoolExecutor, wait)
 from typing import Iterable, Iterator, Optional
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
@@ -103,6 +103,13 @@ def _check_options(side_inputs: Optional[dict],
         if bad:
             raise ValueError(f"unknown {what} {bad}; expected {known}")
     return tuple(e for e in EXTRA_EXPORTS if e in extra_exports)
+
+
+def _result_schema(exports: tuple[str, ...]) -> StructType:
+    """The extraction output: ``EXTRACT_SCHEMA`` and then one nullable
+    string column per export, in the given order."""
+    return StructType(EXTRACT_SCHEMA.fields + [
+        StructField(e, StringType(), True) for e in exports])
 
 
 def _format_table() -> list:
@@ -207,13 +214,15 @@ def _format_table() -> list:
     ]
 
 
-def _extract_batches(batches: Iterable[pd.DataFrame],
+def _extract_batches(batches: Iterable[pa.RecordBatch],
                      side_inputs: Optional[dict] = None,
                      extra_exports: tuple[str, ...] = ()
-                     ) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: one call per Arrow batch, one row per document
-    (a failure envelope when its conversion or any export raises). The
-    options are those of ``extract_pages``."""
+                     ) -> Iterator[pa.RecordBatch]:
+    """mapInArrow worker: one call per Arrow batch of ``(url, html)``, one
+    output batch of ``_result_schema(extra_exports)`` per input batch and
+    one row per document (a failure envelope when its conversion or any
+    export raises). The options are those of ``extract_pages``, already
+    checked there."""
     import hashlib
 
     from pyspark import TaskContext
@@ -223,18 +232,18 @@ def _extract_batches(batches: Iterable[pd.DataFrame],
     from .serialize_html import to_html
 
     exporters = {"doctags": to_doctags, "html": to_html}
-    names = _check_options(side_inputs, extra_exports)
-    exports = [exporters[e] for e in names]
-    columns = EXTRACT_SCHEMA.fieldNames() + list(names)
+    exports = [exporters[e] for e in extra_exports]
+    schema = to_arrow_schema(_result_schema(extra_exports))
     side_inputs = side_inputs or {}
     no_exports = (None,) * len(exports)
     tc = TaskContext.get()
     pid = tc.partitionId() if tc is not None else -1
     table = _format_table()
 
-    for pdf in batches:
+    for batch in batches:
         rows = []
-        for url, html in zip(pdf["url"].values, pdf["html"].values):
+        for url, html in zip(batch.column("url").to_pylist(),
+                             batch.column("html").to_pylist()):
             # Coercion stays INSIDE the try: a row with an unexpected type
             # (string html, None url) must become a failure envelope, never
             # a task failure.
@@ -273,7 +282,10 @@ def _extract_batches(batches: Iterable[pd.DataFrame],
                        len(raw), (time.perf_counter() - t0) * 1e3, 0.0,
                        f"{type(exc).__name__}: {exc}", pid, *no_exports)
             rows.append(row)
-        yield pd.DataFrame(rows, columns=columns)
+        columns = zip(*rows) if rows else [()] * len(schema)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(c, f.type) for c, f in zip(columns, schema)],
+            schema=schema)
 
 
 def load_pages(spark, source: str, fmt: str = "auto") -> DataFrame:
@@ -362,11 +374,9 @@ def extract_pages(
     cols = pages.select("url", "html")
     if repartition:
         cols = partition_pages(cols)
-    schema = StructType(EXTRACT_SCHEMA.fields + [
-        StructField(n, StringType(), True) for n in names])
     fn = functools.partial(_extract_batches, side_inputs=side_inputs,
                            extra_exports=names)
-    return cols.mapInPandas(fn, schema=schema)
+    return cols.mapInArrow(fn, schema=_result_schema(names))
 
 
 def _metrics_aggs() -> list:
@@ -685,28 +695,12 @@ class CheckpointedExtraction:
 # ------------------------------------------------------------- utilities
 
 def spans_view(results: DataFrame) -> DataFrame:
-    """Queryable side-view: explode the doc's text items out of doc_json.
-
-    Uses from_json on the flat texts array - ad-hoc queries over spans
-    without re-walking HTML (SURVEY.md §1.3 'exploded side-columns').
-    """
-    span_schema = ("array<struct<self_ref:string,label:string,text:string,"
-                   "content_layer:string>>")
-    return (
-        results
-        .where(F.col("status") == "success")
-        .withColumn(
-            "span",
-            F.explode(F.from_json(
-                F.get_json_object("doc_json", "$.texts"), span_schema)))
-        .select(
-            "url",
-            F.col("span.self_ref").alias("self_ref"),
-            F.col("span.label").alias("label"),
-            F.col("span.text").alias("text"),
-            F.col("span.content_layer").alias("content_layer"),
-        )
-    )
+    """Queryable side-view of the doc's text items: ``items_view``'s
+    ``text`` rows as (url, self_ref, label, text, content_layer) - ad-hoc
+    queries over spans without re-walking HTML (SURVEY.md §1.3 'exploded
+    side-columns')."""
+    return (items_view(results).where(F.col("kind") == "text")
+            .select("url", "self_ref", "label", "text", "content_layer"))
 
 
 def items_view(results: DataFrame) -> DataFrame:

@@ -4,7 +4,7 @@ From-scratch replacement for the native parse stack the reference drives
 through pypdfium2/docling-parse (``docling/backend/pdf_backend.py:59-105``,
 ``docling/backend/docling_parse_backend.py:122-177``) - this sandbox has no
 native PDF library, and at Common-Crawl scale a pure-Python reader riding
-Arrow-batched ``mapInPandas`` is the only dependency-free option anyway.
+Arrow-batched ``mapInArrow`` is the only dependency-free option anyway.
 
 Scope (what the reference test corpus actually uses - verified by a byte
 scan over ``tests/data/pdf/sources``): classic xref tables AND xref streams,

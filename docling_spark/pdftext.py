@@ -8,7 +8,7 @@ layer: decode the content streams, run the text state machine (PDF 32000
 §9.4), decode glyphs through the font tables, and group positioned glyphs
 into line cells with top-left-origin bounding boxes.
 
-Scale notes: one page is parsed entirely inside a ``mapInPandas`` worker -
+Scale notes: one page is parsed entirely inside a ``mapInArrow`` worker -
 no shared state, no native handles, so the per-partition map stays a pure
 function (north rule). Hot paths avoid per-glyph Python object churn by
 keeping glyphs as tuples.

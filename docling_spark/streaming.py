@@ -76,22 +76,21 @@ def stream_extract_pages(spark, pages_path: str) -> DataFrame:
     """Streaming twin of ``engine.extract_pages``: continuous extraction
     over a landing directory of pages parquet files.
 
-    The SAME Arrow-batched per-doc extraction UDF runs in the stream -
-    a stateless ``mapInPandas`` keeps the query agnostic to triggers
-    (micro-batch or available-now backfill). At fleet scale this is the
-    ingest topology: crawl output lands as files, the stream claims new
-    files per micro-batch, per-doc error envelopes keep poison documents
-    from failing the query, and ``writeStream`` checkpointing gives
-    exactly-once file-level progress - complementing the batch path's
-    bucket-manifest resume (``engine.CheckpointedExtraction``).
+    It IS ``engine.extract_pages`` (without the repartition) over the
+    stream: a stateless ``mapInArrow`` keeps the query agnostic to
+    triggers (micro-batch or available-now backfill). At fleet scale this
+    is the ingest topology: crawl output lands as files, the stream claims
+    new files per micro-batch, per-doc error envelopes keep poison
+    documents from failing the query, and ``writeStream`` checkpointing
+    gives exactly-once file-level progress - complementing the batch
+    path's bucket-manifest resume (``engine.CheckpointedExtraction``).
     """
     from . import engine
     stream = (spark.readStream
               .schema("url string, html binary")
               .option("maxFilesPerTrigger", 8)
               .parquet(pages_path))
-    return stream.select("url", "html").mapInPandas(
-        engine._extract_batches, schema=engine.EXTRACT_SCHEMA)
+    return engine.extract_pages(stream, repartition=False)
 
 
 def stream_dedup_pages(spark, pages_path: str,

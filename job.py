@@ -26,7 +26,8 @@ from __future__ import annotations
 
 import argparse
 import json
-import sys
+import pathlib
+import tempfile
 import time
 
 
@@ -60,21 +61,14 @@ def main() -> int:
         .getOrCreate()
     )
 
-    # When launched via spark-submit --py-files, docling_spark is already
-    # on every executor's path; fall back to shipping it ourselves for
-    # bare python launches.
-    try:
-        from docling_spark import engine
-    except ImportError:
-        sys.path.insert(0, ".")
-        from docling_spark import engine
-        import zipfile, tempfile, pathlib
-        pkg = pathlib.Path(__file__).resolve().parent / "docling_spark"
-        z = pathlib.Path(tempfile.gettempdir()) / "docling_spark_pkg.zip"
-        with zipfile.ZipFile(z, "w") as zf:
-            for py in sorted(pkg.glob("*.py")):
-                zf.write(py, f"docling_spark/{py.name}")
-        spark.sparkContext.addPyFile(str(z))
+    # A package imported from a directory (a bare `python job.py`, from
+    # any cwd) is not on the executors' path: ship it. One imported from
+    # a --py-files zip already is.
+    import docling_spark
+    from docling_spark import engine
+    if pathlib.Path(docling_spark.__file__).parent.is_dir():
+        spark.sparkContext.addPyFile(docling_spark.zip_package(
+            pathlib.Path(tempfile.gettempdir()) / "docling_spark_pkg.zip"))
 
     if args.input_format == "warc":
         from docling_spark import warc as warc_mod
@@ -89,13 +83,11 @@ def main() -> int:
     stats = ck.run(pages)
     elapsed = time.time() - t0
 
-    summary = ck.summary()
     report = {
         "elapsed_sec": round(elapsed, 1),
         "resumed_from_buckets": len(stats["resumed_from"]),
         "processed_buckets": len(stats["processed"]),
-        **{k: (float(v) if v is not None else None)
-           for k, v in summary.items()},
+        **ck.summary(),
     }
     print(json.dumps(report))
     spark.stop()

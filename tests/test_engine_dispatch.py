@@ -9,8 +9,9 @@ direct call of that format's converter with the engine's kwargs.
 import hashlib
 import json
 
-import pandas as pd
+import pyarrow as pa
 import pytest
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from docling_spark import engine
 from docling_spark.deepseekocr import convert_deepseekocr
@@ -95,9 +96,9 @@ SIDE_INPUTS = {"latex": {"paper": LATEX_INPUTS},
 
 
 def _run(urls, raws, **opts):
-    batch = pd.DataFrame({"url": urls, "html": raws})
-    return pd.concat(list(engine._extract_batches([batch], **opts)),
-                     ignore_index=True)
+    batch = pa.RecordBatch.from_pydict({"url": urls, "html": raws})
+    return pa.Table.from_batches(
+        engine._extract_batches([batch], **opts)).to_pandas()
 
 
 @pytest.mark.parametrize("url,raw,expected", PARITY,
@@ -152,6 +153,33 @@ def test_raising_export_fails_only_its_document(monkeypatch):
     assert out["doctags"][0].startswith("<doctag>")
     assert out["error"][1] == "RuntimeError: doctags broke"
     assert out["md"][1] is None and out["doctags"][1] is None
+
+
+def test_worker_output_is_typed_by_the_result_schema():
+    """The worker's batches carry the Arrow form of ``EXTRACT_SCHEMA``
+    whatever the rows: an empty input batch yields one empty batch of it,
+    and a batch whose rows all fail keeps its types (int32 zero counts,
+    double ms, null strings)."""
+    schema = to_arrow_schema(engine.EXTRACT_SCHEMA)
+    empty = pa.RecordBatch.from_pydict(
+        {"url": pa.array([], pa.string()), "html": pa.array([], pa.binary())})
+    (out,) = engine._extract_batches([empty])
+    assert out.num_rows == 0 and out.schema == schema
+
+    failing = pa.RecordBatch.from_pydict({
+        "url": ["https://x/broken.docx", "https://x/rec.ebc"],
+        "html": [b"PK\x03\x04 not a zip", EBCDIC_RAW]})
+    (out,) = engine._extract_batches([failing])
+    assert out.schema == schema
+    cols = out.to_pydict()
+    assert cols["status"] == ["failure", "failure"]
+    for n in ("n_texts", "n_tables", "n_pictures", "n_pages"):
+        assert cols[n] == [0, 0]
+    assert cols["serialize_ms"] == [0.0, 0.0]
+    assert all(isinstance(ms, float) for ms in cols["parse_ms"])
+    for n in ("doc_json", "md", "itxt"):
+        assert cols[n] == [None, None]
+    assert all(cols["error"])
 
 
 def test_unknown_option_names_raise_on_the_driver(spark):

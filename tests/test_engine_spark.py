@@ -2,9 +2,13 @@
 partitioning, metrics, resume, parallelism invariance (SURVEY.md §7 v2
 machinery)."""
 
+import json
+import os
 import pathlib
 import shutil
 import statistics
+import subprocess
+import sys
 import threading
 import uuid
 
@@ -568,3 +572,19 @@ def test_extract_pages_with_html_column(spark):
     assert page.startswith("<!DOCTYPE html>")
     assert "<p>hello</p>" in page and page.rstrip().endswith("</html>")
     assert "html" not in engine.extract_pages(df, repartition=False).columns
+
+
+def test_job_runs_from_any_cwd(tmp_path):
+    """``python job.py`` started outside the repo imports the package
+    through the script's directory, which the executors cannot see: the
+    job ships the package itself, and its report prints counts as ints."""
+    job = pathlib.Path(__file__).resolve().parents[1] / "job.py"
+    proc = subprocess.run(
+        [sys.executable, str(job), "--input", pages_mod.ensure_pages(40),
+         "--output", str(tmp_path / "out"), "--buckets", "4",
+         "--group-size", "2"],
+        cwd=tmp_path, env={**os.environ, "TMPDIR": str(tmp_path)},
+        capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    report = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert report["docs"] == 40 and type(report["docs"]) is int

@@ -74,7 +74,7 @@ def test_engine_dispatch_total_on_corrupted_binaries():
     import pathlib
     import random
 
-    import pandas as pd
+    import pyarrow as pa
 
     from docling_spark.engine import _extract_batches
 
@@ -98,8 +98,8 @@ def test_engine_dispatch_total_on_corrupted_binaries():
             flipped[pos] ^= 1 << rng.randrange(8)
         rows_url.append(f"https://f/flip/{name}")
         rows_raw.append(bytes(flipped))
-    batch = pd.DataFrame({"url": rows_url, "html": rows_raw})
-    outs = list(_extract_batches([batch]))
+    batch = pa.RecordBatch.from_pydict({"url": rows_url, "html": rows_raw})
+    outs = [o.to_pandas() for o in _extract_batches([batch])]
     total = sum(len(o) for o in outs)
     assert total == len(rows_url)
     for o in outs:
@@ -171,7 +171,7 @@ def test_legacy_parsers_enveloped_by_engine_dispatch():
     import pathlib
     import random
 
-    import pandas as pd
+    import pyarrow as pa
 
     from docling_spark.engine import _extract_batches
 
@@ -192,8 +192,8 @@ def test_legacy_parsers_enveloped_by_engine_dispatch():
             cut = rng.randrange(1, len(raw))
             urls.append(f"https://f/cut{i}/{name}")
             raws.append(raw[:cut])
-    batch = pd.DataFrame({"url": urls, "html": raws})
-    outs = list(_extract_batches([batch]))
+    batch = pa.RecordBatch.from_pydict({"url": urls, "html": raws})
+    outs = [o.to_pandas() for o in _extract_batches([batch])]
     assert sum(len(o) for o in outs) == len(urls)
     for o in outs:
         assert set(o["status"]) <= {"success", "failure"}

@@ -91,16 +91,17 @@ def test_never_raises_on_garbage():
 def test_engine_multifile_arxiv_inputs():
     """Multi-file arXiv projects convert byte-identically THROUGH the
     Spark engine via the latex side input."""
-    import pandas as pd
+    import pyarrow as pa
 
     from docling_spark.engine import _extract_batches
     base = SRC / "2310.06825"
     inputs = {f.name: f.read_bytes() for f in base.rglob("*")
               if f.is_file() and f.suffix in (".tex", ".sty", ".bbl")}
-    df = pd.DataFrame({"url": ["https://x.test/2310.06825.tex"],
-                       "html": [(base / "main.tex").read_bytes()]})
+    df = pa.RecordBatch.from_pydict({
+        "url": ["https://x.test/2310.06825.tex"],
+        "html": [(base / "main.tex").read_bytes()]})
     out = next(_extract_batches(
-        [df], side_inputs={"latex": {"2310.06825": inputs}}))
+        [df], side_inputs={"latex": {"2310.06825": inputs}})).to_pandas()
     assert out["status"][0] == "success", out["error"][0]
     exp = (GT / "2310.06825_main.tex.md").read_text()
     assert out["md"][0] == exp

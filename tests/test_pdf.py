@@ -181,13 +181,14 @@ def test_bookmark_outline():
 
 @needs_corpus
 def test_engine_dispatch_pdf():
-    import pandas as pd
+    import pyarrow as pa
 
     from docling_spark.engine import _extract_batches
     raw = (SRC / "code_and_formula.pdf").read_bytes()
-    df = pd.DataFrame({"url": ["https://x.test/a/code_and_formula.pdf"],
-                       "html": [raw]})
-    out = next(_extract_batches([df]))
+    df = pa.RecordBatch.from_pydict({
+        "url": ["https://x.test/a/code_and_formula.pdf"],
+        "html": [raw]})
+    out = next(_extract_batches([df])).to_pandas()
     assert out["status"][0] == "success"
     assert out["n_texts"][0] > 10
     expected = (GT / "code_and_formula.md").read_text(encoding="utf-8")
@@ -196,32 +197,35 @@ def test_engine_dispatch_pdf():
 
 @needs_reference("ebcdic/sources")
 def test_engine_dispatch_ebcdic_layout_mapping():
-    import pandas as pd
+    import pyarrow as pa
 
     from docling_spark.engine import _extract_batches
     ebc_src = pathlib.Path("/root/reference/tests/data/ebcdic/sources")
     ebc = next(iter(sorted(ebc_src.glob("*.ebc"))))
     layout = (ebc_src / (ebc.name.replace(".ebc", ".layout.json"))
               ).read_text()
-    df = pd.DataFrame({"url": [f"https://x.test/{ebc.name}"],
-                       "html": [ebc.read_bytes()]})
+    df = pa.RecordBatch.from_pydict({
+        "url": [f"https://x.test/{ebc.name}"],
+        "html": [ebc.read_bytes()]})
     out = next(_extract_batches(
-        [df], side_inputs={"ebcdic": {ebc.stem: layout}}))
+        [df], side_inputs={"ebcdic": {ebc.stem: layout}})).to_pandas()
     assert out["status"][0] == "success", out["error"][0]
     assert out["n_tables"][0] >= 1
     # without a layout the row fails with an envelope, not a crash
-    out2 = next(_extract_batches([df], side_inputs={"ebcdic": {}}))
+    out2 = next(_extract_batches(
+        [df], side_inputs={"ebcdic": {}})).to_pandas()
     assert out2["status"][0] == "failure"
 
 
 def test_engine_dispatch_deepseek_sniff():
-    import pandas as pd
+    import pyarrow as pa
 
     from docling_spark.engine import _extract_batches
     raw = ("<|ref|>title<|/ref|><|det|>[[10,10,500,40]]<|/det|>\n"
            "# Hello\n").encode()
-    df = pd.DataFrame({"url": ["https://x.test/page.md"], "html": [raw]})
-    out = next(_extract_batches([df]))
+    df = pa.RecordBatch.from_pydict({"url": ["https://x.test/page.md"],
+                                     "html": [raw]})
+    out = next(_extract_batches([df])).to_pandas()
     assert out["status"][0] == "success", out["error"][0]
 
 

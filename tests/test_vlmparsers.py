@@ -94,8 +94,11 @@ class TestChandra:
         assert "WordStar" in items[2].text
         assert "Microsoft Word" in items[3].text
 
-    def test_all_files_parse(self):
-        for path in sorted(CHANDRA.glob("*.html")):
+    @needs_reference("html_chandra/sources")
+    def test_all_corpus_files_parse(self):
+        paths = sorted(CHANDRA.glob("*.html"))
+        assert paths, f"no .html files in {CHANDRA}"
+        for path in paths:
             doc = parse_chandra_html(path.read_text(), 612, 792, 1,
                                      path.name)
             assert len(doc.texts) + len(doc.tables) + len(doc.pictures) > 0
@@ -169,8 +172,11 @@ class TestDots:
         doc = parse_dots_json(content, 612, 792, 1, "mixed.json")
         assert len(doc.texts) == 1
 
-    def test_all_files_parse(self):
-        for path in sorted(DOTS.glob("*.json")):
+    @needs_reference("json_dots/sources")
+    def test_all_corpus_files_parse(self):
+        paths = sorted(DOTS.glob("*.json"))
+        assert paths, f"no .json files in {DOTS}"
+        for path in paths:
             doc = parse_dots_json(path.read_text(), 612, 792, 1, path.name)
             assert len(doc.texts) + len(doc.tables) + len(doc.pictures) > 0
 

@@ -118,16 +118,17 @@ def test_fact_graph_values():
 
 @needs_corpus
 def test_engine_dispatch_xbrl():
-    import pandas as pd
+    import pyarrow as pa
 
     from docling_spark.engine import _extract_batches
     raw = (SRC / "mlac-20251231.xml").read_bytes()
     tax = {f.name: f.read_bytes() for f in (SRC / "mlac-taxonomy").iterdir()
            if f.is_file()}
-    df = pd.DataFrame({"url": ["https://x.test/mlac-20251231.xml"],
-                       "html": [raw]})
+    df = pa.RecordBatch.from_pydict({
+        "url": ["https://x.test/mlac-20251231.xml"],
+        "html": [raw]})
     out = next(_extract_batches(
-        [df], side_inputs={"xbrl": {"mlac-20251231": tax}}))
+        [df], side_inputs={"xbrl": {"mlac-20251231": tax}})).to_pandas()
     assert out["status"][0] == "success", out["error"][0]
     expected = (GT / "mlac-20251231.xml.md").read_text()
     assert out["md"][0] == expected
@@ -153,7 +154,7 @@ def test_metsgbs_page_count_and_text_in_rect():
 
 @needs_reference("mets_gbs/sources/32044009881525_select.tar.gz")
 def test_metsgbs_convert_and_engine_dispatch():
-    import pandas as pd
+    import pyarrow as pa
 
     from docling_spark.engine import _extract_batches
     from docling_spark.metsgbs import convert_metsgbs, looks_like_metsgbs
@@ -164,9 +165,10 @@ def test_metsgbs_convert_and_engine_dispatch():
     assert len(doc.pages) == 3
     assert len(doc.texts) > 50
     assert all(t.prov for t in doc.texts)
-    df = pd.DataFrame({"url": ["https://x.test/32044009881525.tar.gz"],
-                       "html": [raw]})
-    out = next(_extract_batches([df]))
+    df = pa.RecordBatch.from_pydict({
+        "url": ["https://x.test/32044009881525.tar.gz"],
+        "html": [raw]})
+    out = next(_extract_batches([df])).to_pandas()
     assert out["status"][0] == "success", out["error"][0]
     assert out["n_texts"][0] > 50
 

@@ -2,20 +2,20 @@
 """Package docling_spark for spark-submit --py-files."""
 
 import pathlib
-import zipfile
+import sys
 
 REPO = pathlib.Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
+
+from docling_spark import zip_package  # noqa: E402
 
 
 def main() -> str:
     dist = REPO / "dist"
     dist.mkdir(exist_ok=True)
-    out = dist / "docling_spark.zip"
-    with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as zf:
-        for py in sorted((REPO / "docling_spark").glob("*.py")):
-            zf.write(py, f"docling_spark/{py.name}")
+    out = zip_package(dist / "docling_spark.zip")
     print(out)
-    return str(out)
+    return out
 
 
 if __name__ == "__main__":

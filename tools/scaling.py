@@ -66,7 +66,8 @@ times = time_job(full)
 # slim variant: IDENTICAL per-doc compute (md/itxt/json all produced in
 # the worker) but only ~60 bytes/doc cross the python->JVM socket -
 # isolates the single-VM result-stream tax (per-node on a real cluster)
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql.types import (StructType, StructField, StringType,
                                IntegerType)
 SLIM = StructType([StructField("url", StringType()),
@@ -74,12 +75,12 @@ SLIM = StructType([StructField("url", StringType()),
                    StructField("md_len", IntegerType())])
 from docling_spark.engine import _extract_batches
 def _slim(batches):
-    for pdf in _extract_batches(batches):
-        yield pd.DataFrame({{"url": pdf["url"], "status": pdf["status"],
-                            "md_len": pdf["md"].str.len().fillna(0)
-                            .astype("int32")}})
+    for out in _extract_batches(batches):
+        yield pa.RecordBatch.from_pydict({{
+            "url": out["url"], "status": out["status"],
+            "md_len": pc.utf8_length(out["md"]).fill_null(0)}})
 cols = engine.partition_pages(pages.select("url", "html"))
-slim_times = time_job(cols.mapInPandas(_slim, schema=SLIM))
+slim_times = time_job(cols.mapInArrow(_slim, schema=SLIM))
 
 best = min(times)
 sbest = min(slim_times)

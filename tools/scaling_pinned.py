@@ -31,7 +31,8 @@ RUNNER = r"""
 import json, os, sys, time
 sys.path.insert(0, "{repo}")
 from pyspark.sql import SparkSession
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 n_workers = int(sys.argv[1]); pages_path = sys.argv[2]; reps = int(sys.argv[3])
 worker_lo = int(sys.argv[4])  # first worker core (JVM keeps 0..lo-1)
@@ -53,10 +54,10 @@ def _pinned(batches):
         os.sched_setaffinity(0, WORKER_CORES)
     except OSError:
         pass
-    for pdf in _extract_batches(batches):
-        yield pd.DataFrame({{"url": pdf["url"], "status": pdf["status"],
-                            "md_len": pdf["md"].str.len().fillna(0)
-                            .astype("int32")}})
+    for out in _extract_batches(batches):
+        yield pa.RecordBatch.from_pydict({{
+            "url": out["url"], "status": out["status"],
+            "md_len": pc.utf8_length(out["md"]).fill_null(0)}})
 
 pages = spark.read.parquet(pages_path)
 warm = (spark.range(n_workers * 4)
@@ -64,11 +65,11 @@ warm = (spark.range(n_workers * 4)
                     "cast('<p>warm</p>' as binary) html")
         .repartition(n_workers))
 warm_cols = engine.partition_pages(warm)
-warm_cols.mapInPandas(_pinned, "url string, status string, md_len int").count()
+warm_cols.mapInArrow(_pinned, "url string, status string, md_len int").count()
 
 n_docs = pages.count()
 cols = engine.partition_pages(pages.select("url", "html"))
-job = cols.mapInPandas(_pinned, "url string, status string, md_len int")
+job = cols.mapInArrow(_pinned, "url string, status string, md_len int")
 ts = []
 for _ in range(reps):
     t0 = time.perf_counter()
