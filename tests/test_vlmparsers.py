@@ -13,6 +13,9 @@ from conftest import needs_reference
 
 CHANDRA = pathlib.Path("/root/reference/tests/data/html_chandra/sources")
 DOTS = pathlib.Path("/root/reference/tests/data/json_dots/sources")
+# small prediction samples shipped with the tests, so the sweeps below
+# always parse something, with or without the Docling corpus
+SAMPLES = pathlib.Path(__file__).resolve().parent / "data"
 
 
 class TestChandra:
@@ -94,11 +97,10 @@ class TestChandra:
         assert "WordStar" in items[2].text
         assert "Microsoft Word" in items[3].text
 
-    @needs_reference("html_chandra/sources")
-    def test_all_corpus_files_parse(self):
-        paths = sorted(CHANDRA.glob("*.html"))
-        assert paths, f"no .html files in {CHANDRA}"
-        for path in paths:
+    def test_all_files_parse(self):
+        shipped = sorted((SAMPLES / "html_chandra").glob("*.html"))
+        assert shipped, f"no .html files in {SAMPLES / 'html_chandra'}"
+        for path in shipped + sorted(CHANDRA.glob("*.html")):
             doc = parse_chandra_html(path.read_text(), 612, 792, 1,
                                      path.name)
             assert len(doc.texts) + len(doc.tables) + len(doc.pictures) > 0
@@ -172,11 +174,10 @@ class TestDots:
         doc = parse_dots_json(content, 612, 792, 1, "mixed.json")
         assert len(doc.texts) == 1
 
-    @needs_reference("json_dots/sources")
-    def test_all_corpus_files_parse(self):
-        paths = sorted(DOTS.glob("*.json"))
-        assert paths, f"no .json files in {DOTS}"
-        for path in paths:
+    def test_all_files_parse(self):
+        shipped = sorted((SAMPLES / "json_dots").glob("*.json"))
+        assert shipped, f"no .json files in {SAMPLES / 'json_dots'}"
+        for path in shipped + sorted(DOTS.glob("*.json")):
             doc = parse_dots_json(path.read_text(), 612, 792, 1, path.name)
             assert len(doc.texts) + len(doc.tables) + len(doc.pictures) > 0
 
