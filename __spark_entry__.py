@@ -56,7 +56,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: extract every page of the synthetic pages table, return
     structured results (driver checks rows>0 + stable schema)."""
     pages = _fixture_pages(spark, 64)
-    results = engine.extract_pages(pages, repartition=True)
+    results = engine.extract_pages(pages, repartition=True, exports=("md",))
     return results.select(
         "url", "status", "n_texts", "n_tables", "n_pictures",
         F.length("md").alias("md_len"), "error")
@@ -267,7 +267,7 @@ def _q_doc_chunks_hier(spark, sf_dir):
     pages - structure-dependent, rows-only at the driver; unit tests pin
     hand-derived chunkings."""
     pages = _fixture_pages(spark, 40)
-    res = engine.extract_pages(pages, repartition=False)
+    res = engine.extract_pages(pages, repartition=False, exports=("doc_json",))
     ch = chunking.chunks_view(res)
     return ch.select("url", "chunk_id", "label", "n_tokens",
                      F.md5("text").alias("chunk_md5"))
@@ -1250,7 +1250,7 @@ def _q_crawl_pipeline(spark, sf_dir):
         .where(~F.col("is_boilerplate")).select("url"),
         "url", "left_semi")
     ok = (engine.extract_pages(clean.select("url", "html"),
-                               repartition=False)
+                               repartition=False, exports=("itxt",))
           .where(F.col("status") == "success"))
     docs = ok.select(
         F.conv(F.substring(F.md5("url"), 1, 15), 16, 10)
@@ -1339,7 +1339,7 @@ def _q_emb_knn_ivf(spark, sf_dir):
 
 def _q_extract_fixtures(spark, sf_dir):
     pages = _fixture_pages(spark, 48)
-    res = engine.extract_pages(pages, repartition=False)
+    res = engine.extract_pages(pages, repartition=False, exports=("md",))
     return res.select("url", "status", "n_texts", "n_tables", "n_pictures",
                       F.length("md").alias("md_len"))
 
@@ -1348,98 +1348,71 @@ def _q_extract_spans(spark, sf_dir):
     """Histogram over ALL item kinds (texts, tables, pictures, groups)
     via engine.items_view - the widened spans side-view."""
     pages = _fixture_pages(spark, 40)
-    res = engine.extract_pages(pages, repartition=False)
+    res = engine.extract_pages(pages, repartition=False, exports=("doc_json",))
     return (engine.items_view(res).groupBy("kind", "label")
             .agg(F.count(F.lit(1)).alias("n_spans")))
+
+
+def _extract_reference_fixtures(spark, specs, rows=(), side_inputs=None):
+    """The reference's own fixtures through the Spark engine: every file of
+    the reference corpus's ``<folder>/sources`` matching ``glob``, per
+    ``(folder, glob)`` spec, as a ``https://fixtures.test/<folder>/<name>``
+    row, then the given ``(url, bytes)`` rows -> extraction envelopes with
+    the md digest (only md is exported)."""
+    _ensure_shipped(spark)
+    fixtures = []
+    for folder, glob in specs:
+        # FIXTURE_DIR is <corpus data>/html/sources
+        src = pages_mod.FIXTURE_DIR.parents[1] / folder / "sources"
+        fixtures += [(f"https://fixtures.test/{folder}/{p.name}",
+                      p.read_bytes())
+                     for p in sorted(src.glob(glob)) if p.is_file()]
+    pages = spark.createDataFrame(fixtures + list(rows),
+                                  "url string, html binary")
+    res = engine.extract_pages(pages, repartition=False,
+                               side_inputs=side_inputs, exports=("md",))
+    return res.select("url", "status", "n_texts", "n_tables", "n_pictures",
+                      F.md5("md").alias("md_md5"))
 
 
 def _q_extract_docx(spark, sf_dir):
     """DOCX backend through the Spark engine: the reference's own docx
     fixtures as (url, bytes) rows -> extraction envelopes (rows-only;
     byte-identity vs goldens is pinned by tests/test_msword.py)."""
-    import pathlib
-    _ensure_shipped(spark)
-    src = pathlib.Path("/root/reference/tests/data/docx/sources")
-    rows = [(f"https://fixtures.test/docx/{p.name}", p.read_bytes())
-            for p in sorted(src.glob("*.docx"))]
-    pages = spark.createDataFrame(rows, "url string, html binary")
-    res = engine.extract_pages(pages, repartition=False)
-    return res.select("url", "status", "n_texts", "n_tables", "n_pictures",
-                      F.md5("md").alias("md_md5"))
+    return _extract_reference_fixtures(spark, [("docx", "*.docx")])
 
 
 def _q_extract_xlsx(spark, sf_dir):
     """XLSX backend through the Spark engine: the reference's own xlsx/xlsm
     fixtures as (url, bytes) rows -> extraction envelopes (rows-only;
     byte-identity vs goldens is pinned by tests/test_msexcel.py)."""
-    import pathlib
-    _ensure_shipped(spark)
-    src = pathlib.Path("/root/reference/tests/data/xlsx/sources")
-    rows = [(f"https://fixtures.test/xlsx/{p.name}", p.read_bytes())
-            for p in sorted(src.glob("*.xls[xm]"))]
-    pages = spark.createDataFrame(rows, "url string, html binary")
-    res = engine.extract_pages(pages, repartition=False)
-    return res.select("url", "status", "n_texts", "n_tables", "n_pictures",
-                      F.md5("md").alias("md_md5"))
+    return _extract_reference_fixtures(spark, [("xlsx", "*.xls[xm]")])
 
 
 def _q_extract_pptx(spark, sf_dir):
     """PPTX backend through the Spark engine: the reference's own pptx
     fixtures as (url, bytes) rows -> extraction envelopes (rows-only;
     byte-identity vs goldens is pinned by tests/test_mspptx.py)."""
-    import pathlib
-    _ensure_shipped(spark)
-    src = pathlib.Path("/root/reference/tests/data/pptx/sources")
-    rows = [(f"https://fixtures.test/pptx/{p.name}", p.read_bytes())
-            for p in sorted(src.glob("*.pptx"))]
-    pages = spark.createDataFrame(rows, "url string, html binary")
-    res = engine.extract_pages(pages, repartition=False)
-    return res.select("url", "status", "n_texts", "n_tables", "n_pictures",
-                      F.md5("md").alias("md_md5"))
+    return _extract_reference_fixtures(spark, [("pptx", "*.pptx")])
 
 
 def _q_extract_odf(spark, sf_dir):
     """ODF backends (odt/ods/odp) through the Spark engine (rows-only;
     byte-identity vs goldens is pinned by tests/test_odf.py)."""
-    import pathlib
-    _ensure_shipped(spark)
-    src = pathlib.Path("/root/reference/tests/data/odf/sources")
-    rows = [(f"https://fixtures.test/odf/{p.name}", p.read_bytes())
-            for p in sorted(src.iterdir())
-            if p.suffix in (".odt", ".ods", ".odp")]
-    pages = spark.createDataFrame(rows, "url string, html binary")
-    res = engine.extract_pages(pages, repartition=False)
-    return res.select("url", "status", "n_texts", "n_tables", "n_pictures",
-                      F.md5("md").alias("md_md5"))
+    return _extract_reference_fixtures(spark, [("odf", "*.od[tsp]")])
 
 
 def _q_extract_jats(spark, sf_dir):
     """JATS scientific-article backend through the Spark engine (rows-only;
     byte-identity vs goldens is pinned by tests/test_jats.py)."""
-    import pathlib
-    _ensure_shipped(spark)
-    src = pathlib.Path("/root/reference/tests/data/jats/sources")
-    rows = [(f"https://fixtures.test/jats/{p.name}", p.read_bytes())
-            for p in sorted(src.iterdir())
-            if p.suffix in (".xml", ".nxml")]
-    pages = spark.createDataFrame(rows, "url string, html binary")
-    res = engine.extract_pages(pages, repartition=False)
-    return res.select("url", "status", "n_texts", "n_tables", "n_pictures",
-                      F.md5("md").alias("md_md5"))
+    return _extract_reference_fixtures(spark, [("jats", "*.xml"),
+                                               ("jats", "*.nxml")])
 
 
 def _q_extract_uspto(spark, sf_dir):
     """USPTO patent backends (4 formats) through the Spark engine
     (rows-only; byte-identity vs goldens pinned by tests/test_uspto.py)."""
-    import pathlib
-    _ensure_shipped(spark)
-    src = pathlib.Path("/root/reference/tests/data/uspto/sources")
-    rows = [(f"https://fixtures.test/uspto/{p.name}", p.read_bytes())
-            for p in sorted(src.iterdir()) if p.is_file()]
-    pages = spark.createDataFrame(rows, "url string, html binary")
-    res = engine.extract_pages(pages, repartition=False)
-    return res.select("url", "status", "n_texts", "n_tables", "n_pictures",
-                      F.md5("md").alias("md_md5"))
+    return _extract_reference_fixtures(spark, [("uspto", "*")])
 
 
 def _q_extract_misc(spark, sf_dir):
@@ -1448,15 +1421,7 @@ def _q_extract_misc(spark, sf_dir):
     EBCDIC rides the engine's broadcastable {basename: layout} mapping -
     the Spark analog of the reference's sidecar .layout.json files."""
     import pathlib
-    _ensure_shipped(spark)
-    rows = []
-    for folder, pattern in (("boxnote", "*.boxnote"), ("latex", "*.tex"),
-                            ("xls", "*.xls"), ("doc", "*.doc"),
-                            ("ppt", "*.ppt")):
-        src = pathlib.Path(f"/root/reference/tests/data/{folder}/sources")
-        rows += [(f"https://fixtures.test/{folder}/{p.name}",
-                  p.read_bytes()) for p in sorted(src.glob(pattern))]
-    layouts = {}
+    rows, layouts = [], {}
     ebc_src = pathlib.Path("/root/reference/tests/data/ebcdic/sources")
     for p in sorted(ebc_src.glob("*.ebc")):
         side = ebc_src / p.name.replace(".ebc", ".layout.json")
@@ -1464,11 +1429,10 @@ def _q_extract_misc(spark, sf_dir):
             rows.append((f"https://fixtures.test/ebcdic/{p.name}",
                          p.read_bytes()))
             layouts[p.stem] = side.read_text()
-    pages = spark.createDataFrame(rows, "url string, html binary")
-    res = engine.extract_pages(pages, repartition=False,
-                               side_inputs={"ebcdic": layouts})
-    return res.select("url", "status", "n_texts", "n_tables", "n_pictures",
-                      F.md5("md").alias("md_md5"))
+    return _extract_reference_fixtures(
+        spark, [("boxnote", "*.boxnote"), ("latex", "*.tex"),
+                ("xls", "*.xls"), ("doc", "*.doc"), ("ppt", "*.ppt")],
+        rows, side_inputs={"ebcdic": layouts})
 
 
 def _q_extract_vlm(spark, sf_dir):
@@ -1476,19 +1440,9 @@ def _q_extract_vlm(spark, sf_dir):
     predictions through the Spark engine's content-sniff dispatch
     (rows-only; fixture assertions pinned by tests/test_vlmparsers.py
     and tests/test_deepseekocr.py)."""
-    import pathlib
-    _ensure_shipped(spark)
-    rows = []
-    for folder, pattern in (("html_chandra", "*.html"),
-                            ("json_dots", "*.json"),
-                            ("md_deepseek", "*.md")):
-        src = pathlib.Path(f"/root/reference/tests/data/{folder}/sources")
-        rows += [(f"https://fixtures.test/{folder}/{p.name}",
-                  p.read_bytes()) for p in sorted(src.glob(pattern))]
-    pages = spark.createDataFrame(rows, "url string, html binary")
-    res = engine.extract_pages(pages, repartition=False)
-    return res.select("url", "status", "n_texts", "n_tables", "n_pictures",
-                      F.md5("md").alias("md_md5"))
+    return _extract_reference_fixtures(
+        spark, [("html_chandra", "*.html"), ("json_dots", "*.json"),
+                ("md_deepseek", "*.md")])
 
 
 def _q_extract_arxiv(spark, sf_dir):
@@ -1497,7 +1451,6 @@ def _q_extract_arxiv(spark, sf_dir):
     \\input resolution (rows-only; 6/8 byte-identity pinned by
     tests/test_latex.py + tools/latex_diff.py)."""
     import pathlib
-    _ensure_shipped(spark)
     src = pathlib.Path("/root/reference/tests/data/latex/sources")
     rows, inputs_map = [], {}
     for proj in sorted(p for p in src.iterdir() if p.is_dir()):
@@ -1509,11 +1462,8 @@ def _q_extract_arxiv(spark, sf_dir):
         inputs_map[proj.name] = {
             f.name: f.read_bytes() for f in proj.rglob("*")
             if f.is_file() and f.suffix in (".tex", ".sty", ".bbl")}
-    pages = spark.createDataFrame(rows, "url string, html binary")
-    res = engine.extract_pages(pages, repartition=False,
-                               side_inputs={"latex": inputs_map})
-    return res.select("url", "status", "n_texts", "n_tables", "n_pictures",
-                      F.md5("md").alias("md_md5"))
+    return _extract_reference_fixtures(spark, [], rows,
+                                       side_inputs={"latex": inputs_map})
 
 
 def _q_extract_xbrl(spark, sf_dir):
@@ -1521,7 +1471,6 @@ def _q_extract_xbrl(spark, sf_dir):
     engine (rows-only; md/itxt byte-identity pinned by tests/test_xbrl.py,
     one documented reference artifact)."""
     import pathlib
-    _ensure_shipped(spark)
     src = pathlib.Path("/root/reference/tests/data/xbrl/sources")
     rows, taxes = [], {}
     for inst in sorted(src.glob("*.xml")):
@@ -1537,11 +1486,8 @@ def _q_extract_xbrl(spark, sf_dir):
         if taxdir is not None:
             taxes[stem] = {f.name: f.read_bytes()
                            for f in taxdir.iterdir() if f.is_file()}
-    pages = spark.createDataFrame(rows, "url string, html binary")
-    res = engine.extract_pages(pages, repartition=False,
-                               side_inputs={"xbrl": taxes})
-    return res.select("url", "status", "n_texts", "n_tables", "n_pictures",
-                      F.md5("md").alias("md_md5"))
+    return _extract_reference_fixtures(spark, [], rows,
+                                       side_inputs={"xbrl": taxes})
 
 
 def _q_pdf_text_cells(spark, sf_dir):
@@ -1549,15 +1495,7 @@ def _q_pdf_text_cells(spark, sf_dir):
     corpus as (url, bytes) rows -> extraction envelopes (rows-only;
     markdown byte-identity vs 3 reference goldens pinned by
     tests/test_pdf.py)."""
-    import pathlib
-    _ensure_shipped(spark)
-    src = pathlib.Path("/root/reference/tests/data/pdf/sources")
-    rows = [(f"https://fixtures.test/pdf/{p.name}", p.read_bytes())
-            for p in sorted(src.glob("*.pdf"))]
-    pages = spark.createDataFrame(rows, "url string, html binary")
-    res = engine.extract_pages(pages, repartition=False)
-    return res.select("url", "status", "n_texts", "n_tables", "n_pictures",
-                      F.md5("md").alias("md_md5"))
+    return _extract_reference_fixtures(spark, [("pdf", "*.pdf")])
 
 
 def _q_minhash_near_dups(spark, sf_dir):

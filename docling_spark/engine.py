@@ -11,7 +11,9 @@ North-rule machinery (SURVEY.md §3.4, §4):
   against one result schema (no pandas). Each document is converted by the
   first matching row of one ordered format table (extension plus content
   sniff); per-format side inputs travel as one ``{format: {basename:
-  value}}`` map, and each optional export adds one column.
+  value}}`` map. One ``exports`` tuple names the serialized columns
+  (doc_json, md, itxt by default; doctags, html on request): an export
+  that is not named is neither computed nor emitted.
 - **Per-partition lineage/metrics**: (partition_id, doc_count,
   byte_count, failure list, parse/serialize ms) rows aggregated from the
   results' own columns.
@@ -57,7 +59,9 @@ from pyspark.sql.types import (
 
 # ------------------------------------------------------------------ schema
 
-EXTRACT_SCHEMA = StructType([
+# Every extraction output column, in output order. The ``EXPORTS`` among
+# them are emitted only when requested (``_result_schema``).
+RESULT_COLUMNS = StructType([
     StructField("url", StringType(), False),
     StructField("status", StringType(), False),
     StructField("doc_json", StringType(), True),
@@ -72,6 +76,8 @@ EXTRACT_SCHEMA = StructType([
     StructField("serialize_ms", DoubleType(), True),
     StructField("error", StringType(), True),
     StructField("partition_id", IntegerType(), True),
+    StructField("doctags", StringType(), True),
+    StructField("html", StringType(), True),
 ])
 
 # The lineage aggregates of a set of results rows (``_metrics_aggs``): one
@@ -87,29 +93,34 @@ METRICS_SCHEMA = StructType([
 ])
 
 
-# The formats that take a side input, and the optional export columns.
+# The export columns, the default request, and the formats that take a
+# side input.
+EXPORTS = ("doc_json", "md", "itxt", "doctags", "html")
+DEFAULT_EXPORTS = ("doc_json", "md", "itxt")
 SIDE_INPUT_FORMATS = ("pdf", "ebcdic", "xbrl", "latex")
-EXTRA_EXPORTS = ("doctags", "html")
 
 
 def _check_options(side_inputs: Optional[dict],
-                   extra_exports: tuple[str, ...]) -> tuple[str, ...]:
+                   exports: tuple[str, ...]) -> tuple[str, ...]:
     """Reject unknown side-input formats and export names; return the
-    requested exports in ``EXTRA_EXPORTS`` order."""
+    requested exports in ``EXPORTS`` order, each once."""
     for what, given, known in (
             ("side_inputs", side_inputs or {}, SIDE_INPUT_FORMATS),
-            ("extra_exports", extra_exports, EXTRA_EXPORTS)):
+            ("exports", exports, EXPORTS)):
         bad = sorted(set(given) - set(known))
         if bad:
             raise ValueError(f"unknown {what} {bad}; expected {known}")
-    return tuple(e for e in EXTRA_EXPORTS if e in extra_exports)
+    return tuple(e for e in EXPORTS if e in exports)
 
 
 def _result_schema(exports: tuple[str, ...]) -> StructType:
-    """The extraction output: ``EXTRACT_SCHEMA`` and then one nullable
-    string column per export, in the given order."""
-    return StructType(EXTRACT_SCHEMA.fields + [
-        StructField(e, StringType(), True) for e in exports])
+    """``RESULT_COLUMNS`` without the exports that were not requested."""
+    return StructType([f for f in RESULT_COLUMNS.fields
+                       if f.name not in EXPORTS or f.name in exports])
+
+
+# The default output: the result rows of every run that names no exports.
+EXTRACT_SCHEMA = _result_schema(DEFAULT_EXPORTS)
 
 
 def _format_table() -> list:
@@ -216,26 +227,28 @@ def _format_table() -> list:
 
 def _extract_batches(batches: Iterable[pa.RecordBatch],
                      side_inputs: Optional[dict] = None,
-                     extra_exports: tuple[str, ...] = ()
+                     exports: tuple[str, ...] = DEFAULT_EXPORTS
                      ) -> Iterator[pa.RecordBatch]:
     """mapInArrow worker: one call per Arrow batch of ``(url, html)``, one
-    output batch of ``_result_schema(extra_exports)`` per input batch and
-    one row per document (a failure envelope when its conversion or any
-    export raises). The options are those of ``extract_pages``, already
+    output batch of ``_result_schema(exports)`` per input batch and one
+    row per document (a failure envelope, its exports null, when its
+    conversion or any export raises). Only the requested exports are
+    serialized. The options are those of ``extract_pages``, already
     checked there."""
     import hashlib
 
     from pyspark import TaskContext
 
-    from .serialize import (to_doctags, to_indented_text, to_json,
-                            to_markdown)
-    from .serialize_html import to_html
+    from . import serialize, serialize_html
 
-    exporters = {"doctags": to_doctags, "html": to_html}
-    exports = [exporters[e] for e in extra_exports]
-    schema = to_arrow_schema(_result_schema(extra_exports))
+    serializers = {"doc_json": serialize.to_json,
+                   "md": serialize.to_markdown,
+                   "itxt": serialize.to_indented_text,
+                   "doctags": serialize.to_doctags,
+                   "html": serialize_html.to_html}
+    exporters = [(e, serializers[e]) for e in exports]
+    schema = to_arrow_schema(_result_schema(exports))
     side_inputs = side_inputs or {}
-    no_exports = (None,) * len(exports)
     tc = TaskContext.get()
     pid = tc.partitionId() if tc is not None else -1
     table = _format_table()
@@ -255,7 +268,10 @@ def _extract_batches(batches: Iterable[pa.RecordBatch],
                     raw = bytes(html)
                 elif html is not None:
                     raw = str(html).encode("utf-8")
-                tail = url.rsplit("/", 1)[-1].split("#")[0] or "page"
+                # the file name: the last path segment, without the query
+                # string and the fragment
+                tail = (url.split("#", 1)[0].split("?", 1)[0]
+                        .rsplit("/", 1)[-1] or "page")
                 ext = (tail.rsplit(".", 1)[-1].lower()
                        if "." in tail else "html")
                 name = tail.rsplit(".", 1)[0] if "." in tail else tail
@@ -269,23 +285,25 @@ def _extract_batches(batches: Iterable[pa.RecordBatch],
                 doc = convert(raw, name, tail, bh,
                               side.get(name) or side.get(tail))
                 t1 = time.perf_counter()
-                md = to_markdown(doc)
-                itxt = to_indented_text(doc)
-                doc_json = to_json(doc)
+                row = {e: export(doc) for e, export in exporters}
                 t2 = time.perf_counter()
-                row = (url, "success", doc_json, md, itxt, len(doc.texts),
-                       len(doc.tables), len(doc.pictures), len(doc.pages),
-                       len(raw), (t1 - t0) * 1e3, (t2 - t1) * 1e3, None,
-                       pid, *(export(doc) for export in exports))
+                row.update(
+                    url=url, status="success", n_texts=len(doc.texts),
+                    n_tables=len(doc.tables), n_pictures=len(doc.pictures),
+                    n_pages=len(doc.pages), html_bytes=len(raw),
+                    parse_ms=(t1 - t0) * 1e3,
+                    serialize_ms=(t2 - t1) * 1e3,
+                    partition_id=pid)
             except Exception as exc:  # never fail the task for one doc
-                row = (url, "failure", None, None, None, 0, 0, 0, 0,
-                       len(raw), (time.perf_counter() - t0) * 1e3, 0.0,
-                       f"{type(exc).__name__}: {exc}", pid, *no_exports)
+                row = dict(
+                    url=url, status="failure", n_texts=0, n_tables=0,
+                    n_pictures=0, n_pages=0, html_bytes=len(raw),
+                    parse_ms=(time.perf_counter() - t0) * 1e3,
+                    serialize_ms=0.0, error=f"{type(exc).__name__}: {exc}",
+                    partition_id=pid)
             rows.append(row)
-        columns = zip(*rows) if rows else [()] * len(schema)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(c, f.type) for c, f in zip(columns, schema)],
-            schema=schema)
+        # a column a row leaves out (its error, a failure's exports) is null
+        yield pa.RecordBatch.from_pylist(rows, schema=schema)
 
 
 def load_pages(spark, source: str, fmt: str = "auto") -> DataFrame:
@@ -351,7 +369,7 @@ def extract_pages(
     pages: DataFrame,
     repartition: bool = True,
     side_inputs: Optional[dict] = None,
-    extra_exports: tuple[str, ...] = (),
+    exports: tuple[str, ...] = DEFAULT_EXPORTS,
 ) -> DataFrame:
     """The main job: pages(url, html, ...) -> extraction results.
 
@@ -365,17 +383,19 @@ def extract_pages(
     value}``: pdf passwords, EBCDIC copybook layouts, XBRL ``{path: bytes}``
     taxonomies, LaTeX ``{filename: bytes}`` input files. The basename is
     tried without, then with, its extension. The map rides the worker
-    function to the executors, so it must be small. ``extra_exports`` adds
-    a nullable string column after ``EXTRACT_SCHEMA`` per named export
-    (``"doctags"``, ``"html"``); md, itxt and json are always emitted.
+    function to the executors, so it must be small. ``exports`` names the
+    ``EXPORTS`` columns to serialize and emit (``"doc_json"``, ``"md"``,
+    ``"itxt"``, ``"doctags"``, ``"html"``), in any order and each counted
+    once; they take their ``RESULT_COLUMNS`` places, and an export that is
+    not named is never computed. The default gives ``EXTRACT_SCHEMA``.
     Unknown format or export names raise ``ValueError``.
     """
-    names = _check_options(side_inputs, extra_exports)
+    names = _check_options(side_inputs, exports)
     cols = pages.select("url", "html")
     if repartition:
         cols = partition_pages(cols)
     fn = functools.partial(_extract_batches, side_inputs=side_inputs,
-                           extra_exports=names)
+                           exports=names)
     return cols.mapInArrow(fn, schema=_result_schema(names))
 
 
@@ -706,7 +726,8 @@ def spans_view(results: DataFrame) -> DataFrame:
 def items_view(results: DataFrame) -> DataFrame:
     """Queryable side-view over ALL item kinds (texts, tables, pictures,
     groups) exploded from doc_json - one unified schema so span queries
-    don't re-walk HTML for non-text items either.
+    don't re-walk HTML for non-text items either. A result without
+    doc_json (``exports`` that leave it out) raises ``AnalysisException``.
 
     Columns: (url, kind, self_ref, label, content_layer, text, name,
     num_rows, num_cols, n_captions). JVM-side from_json only, no Python.

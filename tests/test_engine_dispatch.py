@@ -8,6 +8,7 @@ direct call of that format's converter with the engine's kwargs.
 
 import hashlib
 import json
+import time
 
 import pyarrow as pa
 import pytest
@@ -70,6 +71,16 @@ PARITY = [
      b"a,b\n1,2\n3,4\n",
      lambda r, h: convert_csv(r, name="t", filename="t.csv",
                               binary_hash=h)),
+    # the file name is the url path's last segment: a query string or a
+    # fragment after it does not change the format row
+    ("https://x/a/t.csv?dl=1#top",
+     b"a,b\n1,2\n3,4\n",
+     lambda r, h: convert_csv(r, name="t", filename="t.csv",
+                              binary_hash=h)),
+    ("https://x/a/n.md?x=1",
+     b"# Title\n\nSome text.\n",
+     lambda r, h: convert_markdown(r, name="n", filename="n.md",
+                                   binary_hash=h)),
     ("https://x/a/subs.vtt",
      b"WEBVTT\n\n00:00:00.000 --> 00:00:01.000\nHello there\n",
      lambda r, h: convert_vtt(r, name="subs", filename="subs.vtt",
@@ -148,7 +159,8 @@ def test_raising_export_fails_only_its_document(monkeypatch):
 
     monkeypatch.setattr(serialize, "to_doctags", flaky)
     out = _run(["https://x/good.html", "https://x/bad.html"],
-               [b"<p>good</p>", b"<p>bad</p>"], extra_exports=("doctags",))
+               [b"<p>good</p>", b"<p>bad</p>"],
+               exports=(*engine.DEFAULT_EXPORTS, "doctags"))
     assert list(out["status"]) == ["success", "failure"]
     assert out["doctags"][0].startswith("<doctag>")
     assert out["error"][1] == "RuntimeError: doctags broke"
@@ -188,16 +200,66 @@ def test_unknown_option_names_raise_on_the_driver(spark):
     with pytest.raises(ValueError, match=r"\['pfd'\]"):
         engine.extract_pages(df, side_inputs={"pfd": {"a": "1234"}})
     with pytest.raises(ValueError, match=r"\['doctag'\]"):
-        engine.extract_pages(df, extra_exports=("doctag",))
+        engine.extract_pages(df, exports=("doctag",))
 
 
-def test_extra_exports_columns_follow_the_schema(spark):
+def test_export_columns_follow_the_schema(spark):
     df = spark.createDataFrame([("https://x/a.html", b"<p>a</p>")],
                                "url string, html binary")
     res = engine.extract_pages(df, repartition=False,
-                               extra_exports=("html", "doctags"))
+                               exports=("html", "doctags",
+                                        *engine.DEFAULT_EXPORTS))
     assert res.columns == (engine.EXTRACT_SCHEMA.fieldNames()
                            + ["doctags", "html"])
+    # a repeated name is one column, in its declared place
+    res = engine.extract_pages(df, repartition=False,
+                               exports=("md", "doc_json", "md"))
+    assert res.columns == [c for c in engine.EXTRACT_SCHEMA.fieldNames()
+                           if c != "itxt"]
+
+
+def test_default_exports_keep_the_result_columns(spark):
+    """Naming no exports gives the same columns, in the same order and
+    of the same types, as the fixed md/itxt/doc_json output did."""
+    df = spark.createDataFrame([("https://x/a.html", b"<p>a</p>")],
+                               "url string, html binary")
+    res = engine.extract_pages(df)
+    assert res.columns == [
+        "url", "status", "doc_json", "md", "itxt", "n_texts", "n_tables",
+        "n_pictures", "n_pages", "html_bytes", "parse_ms", "serialize_ms",
+        "error", "partition_id"]
+    assert res.schema == engine.EXTRACT_SCHEMA
+
+
+def test_unrequested_export_is_never_serialized(monkeypatch):
+    """An md-only run neither calls the json serializer nor emits its
+    column: with ``to_json`` raising, every document still succeeds."""
+    from docling_spark import serialize
+
+    def broken(doc):
+        raise AssertionError("to_json called")
+
+    monkeypatch.setattr(serialize, "to_json", broken)
+    out = _run(["https://x/a.html", "https://x/t.csv"],
+               [b"<h1>T</h1><p>a</p>", b"a,b\n1,2\n"], exports=("md",))
+    assert list(out["status"]) == ["success", "success"]
+    assert "doc_json" not in out.columns and "itxt" not in out.columns
+    assert out["md"][0] == "# T\n\na"
+
+
+def test_serialize_ms_covers_every_requested_export(monkeypatch):
+    from docling_spark import serialize
+
+    real = serialize.to_doctags
+
+    def slow(doc):
+        time.sleep(0.05)
+        return real(doc)
+
+    monkeypatch.setattr(serialize, "to_doctags", slow)
+    out = _run(["https://x/a.html"], [b"<p>a</p>"], exports=("doctags",))
+    assert out["status"][0] == "success"
+    assert out["serialize_ms"][0] >= 50
 
 
 def test_pdf_password_side_input_in_spark(spark):

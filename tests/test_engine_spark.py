@@ -362,6 +362,7 @@ def test_checkpoint_one_file_per_small_group(spark, tmp_path, monkeypatch,
     # every column but the timings and the task's partition id
     cols = [c for c in engine.EXTRACT_SCHEMA.fieldNames()
             if c not in ("parse_ms", "serialize_ms", "partition_id")]
+    assert {"doc_json", "md", "itxt"} <= set(cols)
     got = spark.read.parquet(ck.results_path).select(cols)
     want = engine.extract_pages(pages).select(cols)
     assert got.count() == want.count() == 40
@@ -462,6 +463,7 @@ def test_checkpoint_empty_pages(spark, tmp_path):
     res = spark.read.parquet(ck.results_path)
     assert res.count() == 0
     assert set(engine.EXTRACT_SCHEMA.fieldNames()) <= set(res.columns)
+    assert {"doc_json", "md", "itxt"} <= set(res.columns)
     # one zero metrics row per group, observed on the write or, once
     # deleted, rebuilt by the next run from no result rows
     for rebuilt in (False, True):
@@ -529,13 +531,28 @@ def test_items_view_all_kinds(spark):
     assert group["label"] == "list"
 
 
+def test_doc_json_views_reject_a_result_without_it(spark):
+    """The views that re-open doc_json fail at analysis on a result that
+    does not export it, naming the column, instead of returning no rows."""
+    from pyspark.errors import AnalysisException
+
+    from docling_spark import chunking
+
+    res = engine.extract_pages(_pages(spark, 4), repartition=False,
+                               exports=("md",))
+    for view in (engine.items_view, engine.spans_view, chunking.chunks_view):
+        with pytest.raises(AnalysisException, match="doc_json"):
+            view(res)
+
+
 def test_extract_pages_with_doctags_column(spark):
     """Opt-in doctags export column (reference OutputFormat doctags)."""
     rows = [("https://x/a.html",
              b"<html><body><h1>T</h1><p>hello world</p></body></html>")]
     df = spark.createDataFrame(rows, "url string, html binary")
-    out = engine.extract_pages(df, repartition=False,
-                               extra_exports=("doctags",)).collect()[0]
+    out = engine.extract_pages(
+        df, repartition=False,
+        exports=(*engine.DEFAULT_EXPORTS, "doctags")).collect()[0]
     assert out["status"] == "success"
     dt = out["doctags"]
     assert dt.startswith("<doctag>") and dt.endswith("</doctag>")
@@ -565,8 +582,9 @@ def test_extract_pages_with_html_column(spark):
     rows = [("https://x/a.html",
              b"<html><body><h2>T</h2><p>hello</p></body></html>")]
     df = spark.createDataFrame(rows, "url string, html binary")
-    out = engine.extract_pages(df, repartition=False,
-                               extra_exports=("html",)).collect()[0]
+    out = engine.extract_pages(
+        df, repartition=False,
+        exports=(*engine.DEFAULT_EXPORTS, "html")).collect()[0]
     assert out["status"] == "success"
     page = out["html"]
     assert page.startswith("<!DOCTYPE html>")
