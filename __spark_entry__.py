@@ -1420,9 +1420,8 @@ def _q_extract_misc(spark, sf_dir):
     byte-identity pinned by tests/test_boxnote_ebcdic.py, test_latex.py).
     EBCDIC rides the engine's broadcastable {basename: layout} mapping -
     the Spark analog of the reference's sidecar .layout.json files."""
-    import pathlib
     rows, layouts = [], {}
-    ebc_src = pathlib.Path("/root/reference/tests/data/ebcdic/sources")
+    ebc_src = pages_mod.FIXTURE_DIR.parents[1] / "ebcdic" / "sources"
     for p in sorted(ebc_src.glob("*.ebc")):
         side = ebc_src / p.name.replace(".ebc", ".layout.json")
         if side.exists():
@@ -1450,10 +1449,10 @@ def _q_extract_arxiv(spark, sf_dir):
     project's main.tex plus an {filename: bytes} inputs mapping for
     \\input resolution (rows-only; 6/8 byte-identity pinned by
     tests/test_latex.py + tools/latex_diff.py)."""
-    import pathlib
-    src = pathlib.Path("/root/reference/tests/data/latex/sources")
+    # FIXTURE_DIR is <corpus data>/html/sources; no corpus, no rows
+    src = pages_mod.FIXTURE_DIR.parents[1] / "latex" / "sources"
     rows, inputs_map = [], {}
-    for proj in sorted(p for p in src.iterdir() if p.is_dir()):
+    for proj in sorted(p for p in src.glob("*") if p.is_dir()):
         main = proj / "main.tex"
         if not main.exists():
             continue
@@ -1470,8 +1469,7 @@ def _q_extract_xbrl(spark, sf_dir):
     """XBRL instances + in-memory taxonomy packages through the Spark
     engine (rows-only; md/itxt byte-identity pinned by tests/test_xbrl.py,
     one documented reference artifact)."""
-    import pathlib
-    src = pathlib.Path("/root/reference/tests/data/xbrl/sources")
+    src = pages_mod.FIXTURE_DIR.parents[1] / "xbrl" / "sources"
     rows, taxes = [], {}
     for inst in sorted(src.glob("*.xml")):
         stem = inst.stem

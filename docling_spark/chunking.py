@@ -30,6 +30,7 @@ import json
 import re
 from typing import Iterable, Iterator, Optional
 
+from . import keep_spark_archives
 from .model import (
     BODY, Doc, Formatting, GroupItem, ListItemItem, PictureItem,
     SectionHeaderItem, TableCell, TableData, TableItem, TextItem,
@@ -399,6 +400,7 @@ def chunks_view(results, max_tokens: Optional[int] = None):
     ])
 
     def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        keep_spark_archives()
         for pdf in batches:
             out = {f.name: [] for f in schema.fields}
             for url, doc_json in zip(pdf["url"], pdf["doc_json"]):

@@ -20,11 +20,12 @@ North-rule machinery (SURVEY.md §3.4, §4):
 - **Checkpoint manifest + resume**: the input is read once and staged by
   url-hash commit group; when the groups can fill the task slots, staging
   is rebalanced so a small group is one file. Groups run concurrently,
-  each reading its staged files without a shuffle. Each group's output is
-  written as a unit, its metrics row observed on that write, and then
-  the metrics row and the manifest commit are driver-side files (no Spark
-  job); resume skips the committed buckets. Spark jobs do only the
-  extraction work, one job per group, plus one staging pass per run.
+  largest first, each reading its staged files without a shuffle. Each
+  group's output is written as a unit, its metrics row observed on that
+  write, and then the metrics row and the manifest commit are driver-side
+  files (no Spark job); resume skips the committed buckets. Spark jobs do
+  only the extraction work, one job per group, plus one staging pass per
+  run.
 
 Reference lifecycle being mirrored: ``DocumentConverter.convert_all``
 (``/root/reference/docling/document_converter.py:505-590``) with structured
@@ -56,6 +57,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from . import keep_spark_archives
 
 # ------------------------------------------------------------------ schema
 
@@ -235,6 +238,7 @@ def _extract_batches(batches: Iterable[pa.RecordBatch],
     conversion or any export raises). Only the requested exports are
     serialized. The options are those of ``extract_pages``, already
     checked there."""
+    keep_spark_archives()
     import hashlib
 
     from pyspark import TaskContext
@@ -426,8 +430,8 @@ def partition_metrics(results: DataFrame,
 # ----------------------------------------------------- checkpointed runs
 
 # Commit groups extracted at once, at least. One group alone leaves cores
-# idle: every Python task pays a fixed cost before engine code runs (README
-# "Scale design"), and each group waits on its own straggler. A run of 16
+# idle: each group waits on its own straggler, and its slot idles while it
+# commits and the next group is planned (about 0.3 s a group). A run of 16
 # one-task groups over 1,200 crawl pages on a 4-vCPU VM (4 interleaved
 # reps) took a median 15.3 s with 2 in flight, 9.6 s with 4 and 9.0 s with
 # 8, inside the 8.0-11.2 s spread of 4.
@@ -451,15 +455,17 @@ class CheckpointedExtraction:
     ``pmod(xxhash64(url), num_buckets)``, and the buckets into fixed commit
     groups of ``group_size``. ``run()`` reads the input ONCE: the pending
     groups' ``(url, html)`` are staged into ``staged/``, partitioned by
-    group. Groups run ``_groups_in_flight()`` at a time, in threads that
-    carry the caller's job group, description and tags. Each group's
-    extraction reads only its own directory, with no shuffle, one task per
-    staged file split. When there are at least as many pending groups as
-    task slots, staging is rebalanced by group (one shuffle), so a small
-    group is one file and one Python task, and a large one is files of
-    about ``spark.sql.adaptive.advisoryPartitionSizeInBytes``. With fewer
-    groups it is not: every input split leaves a file in each group it
-    holds rows of, so the groups still spread over the slots.
+    group. Groups run ``_groups_in_flight()`` at a time, the largest
+    staged group first (by its staged bytes, from one file listing; ties in
+    gid order), in threads that carry the caller's job group, description
+    and tags. Each group's extraction reads only its own directory, with
+    no shuffle, one task per staged file split. When there are at least
+    as many pending groups as task slots, staging is rebalanced by group
+    (one shuffle), so a small group is one file and one Python task, and
+    a large one is files of about
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``. With fewer groups
+    it is not: every input split leaves a file in each group it holds rows
+    of, so the groups still spread over the slots.
 
     A group's metrics are observed on its results write (a
     ``pyspark.sql.Observation``, no extra pass), and its failures list
@@ -614,11 +620,22 @@ class CheckpointedExtraction:
         holds a driver thread and a running job."""
         return max(MIN_GROUPS_IN_FLIGHT, self._task_slots())
 
+    def _staged_bytes(self) -> dict[int, int]:
+        """Bytes staged per commit group, from one listing of ``staged/``
+        through the Hadoop FileSystem: no Spark job, no scan."""
+        fs, pattern = self._hadoop(f"{self.staged_path}/grp=*/[^_.]*")
+        sizes: dict[int, int] = {}
+        for s in fs.globStatus(pattern) or []:
+            gid = int(s.getPath().getParent().getName().split("=", 1)[1])
+            sizes[gid] = sizes.get(gid, 0) + s.getLen()
+        return sizes
+
     def _extract_groups(self, staged: DataFrame, pending: dict) -> None:
         """Extract, write and commit every pending group, at most
-        ``_groups_in_flight()`` at a time. Once a group fails, no further
-        group starts; the groups in flight finish and commit, and then the
-        first error is re-raised."""
+        ``_groups_in_flight()`` at a time, largest staged group first (ties
+        in gid order), so the group with the most work is not the run's
+        tail. Once a group fails, no further group starts; the groups in
+        flight finish and commit, and then the first error is re-raised."""
 
         def extract(gid: int, group: list[int]) -> None:
             # Re-extract the WHOLE fixed group, not just its pending
@@ -643,7 +660,10 @@ class CheckpointedExtraction:
             self._put_metrics(gid, obs.get)
             self._commit(gid, group)
 
-        todo = iter(pending.items())
+        sizes = self._staged_bytes()
+        # sorted() is stable and pending is in gid order
+        todo = iter(sorted(pending.items(),
+                           key=lambda item: -sizes.get(item[0], 0)))
         running: set[Future] = set()
         error: Optional[BaseException] = None
         slots = self._groups_in_flight()

@@ -28,6 +28,8 @@ import re
 from dataclasses import dataclass, field
 from typing import Iterable, Iterator, Optional
 
+from . import keep_spark_archives
+
 # ------------------------------------------------------------- geometry
 
 
@@ -527,6 +529,7 @@ def process_page_layout(df):
     import pandas as pd
 
     def batches(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        keep_spark_archives()
         for pdf in it:
             rows = {"url": [], "page_no": [], "parse_score": [],
                     "elements": []}

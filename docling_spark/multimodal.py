@@ -37,6 +37,8 @@ from pyspark.sql.types import (
     StructField, StructType,
 )
 
+from . import keep_spark_archives
+
 MEDIA_SCHEMA = StructType([
     StructField("media_id", LongType(), False),
     StructField("kind", StringType(), False),      # image | audio | video
@@ -1438,6 +1440,7 @@ def _fake_decode(payload: bytes, kind: str) -> dict:
 
 
 def _feature_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    keep_spark_archives()
     for pdf in batches:
         out = {f.name: [] for f in FEATURE_SCHEMA.fields}
         for mid, kind, payload in zip(pdf["media_id"], pdf["kind"],
@@ -1574,6 +1577,7 @@ DHASH_SCHEMA = StructType([
 
 
 def _dhash_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    keep_spark_archives()
     for pdf in batches:
         out = {"media_id": [], "dhash": [], "width": [], "height": []}
         for mid, payload in zip(pdf["media_id"], pdf["payload"]):

@@ -16,6 +16,8 @@ import random
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from . import keep_spark_archives
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -124,6 +126,7 @@ def _sketch_keys_udf(dim, n_planes: int, seeds: list, masks=None):
 
     @pandas_udf("array<long>")
     def keys(emb: pd.Series) -> pd.Series:
+        keep_spark_archives()
         if len(emb) == 0:
             return pd.Series([], dtype=object)
         mat = np.array(emb.tolist(), dtype=np.float64)      # (n, dim)
@@ -680,6 +683,7 @@ def _with_assign_pandas(embeddings: DataFrame, cents: list,
 
     @pandas_udf("int")
     def assign(emb: pd.Series) -> pd.Series:
+        keep_spark_archives()
         c = bc.value                              # (k, dim)
         if len(emb) == 0:
             return pd.Series([], dtype="int32")

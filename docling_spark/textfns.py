@@ -14,6 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from . import keep_spark_archives
+
 # Tiny embedded stopword lists - deterministic language-ID heuristic.
 STOPWORDS = {
     "en": ["the", "and", "of", "to", "in", "is", "that", "it", "was", "for"],
@@ -310,6 +312,7 @@ def compression_quality(documents: DataFrame,
     import pandas as pd  # noqa: F401  (executor-side import)
 
     def _batches(batches):
+        keep_spark_archives()
         import zlib
 
         import pandas as pd

@@ -27,6 +27,8 @@ import zlib
 
 from pyspark.sql import DataFrame
 
+from . import keep_spark_archives
+
 WARC_SCHEMA = ("url string, warc_ts timestamp, html binary, "
                "text string, lang string, warc_type string, "
                "source_file string")
@@ -255,6 +257,7 @@ def _parse_record(blob: bytes, source_file: str):
 
 
 def _warc_batches(batches):
+    keep_spark_archives()
     import pandas as pd
     for pdf in batches:
         out = {k: [] for k in ("url", "warc_ts", "html", "text", "lang",
@@ -290,6 +293,7 @@ CDX_SCHEMA = ("url string, warc_ts timestamp, digest string, "
 
 
 def _cdx_batches(batches):
+    keep_spark_archives()
     import hashlib
 
     import pandas as pd
@@ -336,6 +340,7 @@ METRICS_SCHEMA = ("source_file string, n_records long, "
 
 
 def _metrics_batches(batches):
+    keep_spark_archives()
     import pandas as pd
     for pdf in batches:
         out = {k: [] for k in ("source_file", "n_records",

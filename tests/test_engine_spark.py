@@ -272,9 +272,12 @@ def test_checkpoint_group_failure_resume(spark, tmp_path, monkeypatch):
     out = str(tmp_path / "fail")
     ck = engine.CheckpointedExtraction(spark, out, num_buckets=4,
                                        group_size=1)
-    # two slots for four groups, so groups 2 and 3 wait for a free slot
+    # two slots for four groups, so groups 2 and 3 wait for a free slot;
+    # groups 0 and 1 are the largest, so they start first
     monkeypatch.setattr(engine.CheckpointedExtraction, "_groups_in_flight",
                         lambda self: 2)
+    monkeypatch.setattr(engine.CheckpointedExtraction, "_staged_bytes",
+                        lambda self: {0: 4, 1: 3, 2: 2, 3: 1})
     real_commit = engine.CheckpointedExtraction._commit
     failed = threading.Event()
     attempted = []
@@ -309,6 +312,55 @@ def test_checkpoint_group_failure_resume(spark, tmp_path, monkeypatch):
     assert res.select("url").distinct().count() == 40
     assert _metrics_docs(spark, ck) == 40
     assert ck.committed_buckets() == {0, 1, 2, 3}
+
+
+def test_checkpoint_starts_largest_group_first(spark, tmp_path, monkeypatch):
+    """Groups start in order of their staged bytes, largest first, with
+    ties in gid order; ``processed`` stays in gid order. One group at a
+    time, so the commit order is the start order."""
+    base = _pages(spark, 40)
+    bucket = F.pmod(F.xxhash64("url"), F.lit(4))
+    big_url = (spark.createDataFrame(
+        [(f"https://big.test/{i}",) for i in range(32)], "url string")
+        .where(bucket == 2).first()["url"])
+    # random hex does not compress: 256 KB staged, several times the
+    # rest of the table
+    page = b"<p>" + os.urandom(128 * 1024).hex().encode() + b"</p>"
+    pages = base.select("url", "html").unionByName(spark.createDataFrame(
+        [(big_url, page)], "url string, html binary"))
+    monkeypatch.setattr(engine.CheckpointedExtraction, "_groups_in_flight",
+                        lambda self: 1)
+    real_commit = engine.CheckpointedExtraction._commit
+    real_sizes = engine.CheckpointedExtraction._staged_bytes
+    commits, sizes = [], {}
+
+    def commit(self, gid, buckets):
+        commits.append(gid)
+        real_commit(self, gid, buckets)
+
+    def staged_bytes(self):
+        sizes.update(real_sizes(self))
+        return sizes
+
+    monkeypatch.setattr(engine.CheckpointedExtraction, "_commit", commit)
+    monkeypatch.setattr(engine.CheckpointedExtraction, "_staged_bytes",
+                        staged_bytes)
+    ck = engine.CheckpointedExtraction(spark, str(tmp_path / "big"),
+                                       num_buckets=4, group_size=1)
+    assert ck.run(pages)["processed"] == [0, 1, 2, 3]
+    assert set(sizes) == {0, 1, 2, 3}
+    assert sizes[2] > sum(sizes.values()) - sizes[2]
+    assert commits[0] == 2
+    assert commits == sorted(sizes, key=lambda g: (-sizes[g], g))
+    assert spark.read.parquet(ck.results_path).count() == 41
+    # equal sizes: gid order
+    commits.clear()
+    monkeypatch.setattr(engine.CheckpointedExtraction, "_staged_bytes",
+                        lambda self: dict.fromkeys(range(4), 1))
+    ck = engine.CheckpointedExtraction(spark, str(tmp_path / "tie"),
+                                       num_buckets=4, group_size=1)
+    assert ck.run(pages)["processed"] == [0, 1, 2, 3]
+    assert commits == [0, 1, 2, 3]
 
 
 def _input_files_per_group(pages, ck):
@@ -606,3 +658,60 @@ def test_job_runs_from_any_cwd(tmp_path):
     assert proc.returncode == 0, proc.stderr[-3000:]
     report = json.loads(proc.stdout.strip().splitlines()[-1])
     assert report["docs"] == 40 and type(report["docs"]) is int
+
+
+def test_worker_keeps_spark_archives_across_tasks(spark, tmp_path):
+    """After ``keep_spark_archives`` runs in a Python worker, the next task
+    in that worker does not re-read ``pyspark.zip``'s directory (Spark's
+    per-task ``importlib.invalidate_caches()``), but still re-reads a zip
+    added with ``addPyFile``, so a re-shipped package is seen."""
+    import zipfile
+    mod = f"archive_probe_{uuid.uuid4().hex}"
+    user_zip = tmp_path / f"{mod}.zip"
+    with zipfile.ZipFile(user_zip, "w") as zf:
+        zf.writestr(f"{mod}.py", "VALUE = 1\n")
+    sc = spark.sparkContext
+    sc.addPyFile(str(user_zip))
+
+    def probe(rows):
+        # The first task in a worker runs the helper and starts logging
+        # zipimport's directory reads; the next one reports the reads
+        # made since (Spark's invalidation runs before the task's code)
+        # and stops logging. A task that leaves input unread ends its
+        # worker, so the probe drains its rows.
+        list(rows)
+        import importlib
+        import os
+        import sys
+        import zipimport
+
+        from docling_spark import keep_spark_archives
+        keep_spark_archives()
+        importlib.import_module(mod)
+        reads = getattr(zipimport, "_probe_reads", None)
+        if reads is None:
+            stock = zipimport._read_directory
+            zipimport._probe_stock, zipimport._probe_reads = stock, []
+            zipimport._read_directory = lambda path: (
+                zipimport._probe_reads.append(path), stock(path))[1]
+            yield os.getpid(), None, []
+            return
+        zipimport._read_directory = zipimport._probe_stock
+        del zipimport._probe_reads, zipimport._probe_stock
+        archives = sorted({imp.archive for imp in sys.path_importer_cache
+                           .values() if isinstance(imp, zipimport.zipimporter)})
+        yield os.getpid(), reads, archives
+
+    seen = set()
+    for _ in range(12):
+        pid, reads, archives = sc.parallelize([0], 1).mapPartitions(
+            probe).collect()[0]
+        if reads is not None and pid in seen:
+            break
+        seen.add(pid)
+    else:
+        pytest.fail(f"no two of 12 one-task jobs shared a worker: {seen}")
+    spark_zips = [a for a in archives if a.endswith("pyspark.zip")]
+    assert spark_zips, archives
+    assert not set(spark_zips) & set(reads), reads
+    assert [r for r in reads if r.endswith(user_zip.name)], reads

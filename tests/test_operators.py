@@ -1047,6 +1047,27 @@ def test_twinned_name_set_matches_oracle_sql():
     assert e._TWINNED_QUERIES == frozenset(e.oracle_sql())
 
 
+def test_extract_arxiv_reads_the_corpus_root(spark, tmp_path, monkeypatch):
+    """``extract_arxiv`` finds its projects under the corpus root that
+    ``pages.FIXTURE_DIR`` names, and returns zero rows, not an error, when
+    the corpus is absent."""
+    import __spark_entry__ as e
+    from docling_spark import pages as pages_mod
+    data = tmp_path / "data"
+    monkeypatch.setattr(pages_mod, "FIXTURE_DIR", data / "html" / "sources")
+    assert e._q_extract_arxiv(spark, None).count() == 0
+    proj = data / "latex" / "sources" / "2401.00001"
+    proj.mkdir(parents=True)
+    (proj / "main.tex").write_bytes(
+        b"\\documentclass{article}\\begin{document}"
+        b"\\input{intro}\\end{document}")
+    (proj / "intro.tex").write_bytes(b"Hello from the introduction.")
+    rows = e._q_extract_arxiv(spark, None).collect()
+    assert [(r.url, r.status) for r in rows] == [
+        ("https://fixtures.test/arxiv/2401.00001.tex", "success")]
+    assert rows[0].n_texts == 1
+
+
 def test_registry_orders_oracle_twinned_first():
     """Driver-visibility contract: a harness that samples a bounded
     prefix of queries() must land on hash-checkable (oracle-twinned)
