@@ -2,10 +2,11 @@
 
 North-rule machinery (SURVEY.md §3.4, §4):
 
-- **Round-robin repartition** (``partition_pages``) over one scan, so
-  every task gets the same number of rows, whatever the mix of hosts in
-  the urls. That count balance is the skew handling: a separate band for
-  oversized rows bought no wall time (README "Scale design").
+- **Largest-first partitioning** (``partition_pages``) over one scan and
+  one shuffle: each scan split is sorted by html length and dealt in
+  snake order, from a task of its own, over ``TASKS_PER_SLOT`` tasks a
+  slot, so the heaviest rows start first and the slots that run them get
+  fewer of the rest. That is the skew handling (README "Scale design").
 - **Arrow-batched extraction** via ``mapInArrow`` - one Python invocation
   per record batch, never per row, reading and building pyarrow arrays
   against one result schema (no pandas). Each document is converted by the
@@ -355,18 +356,66 @@ def write_bucketed(df: DataFrame, table: str, bucket_by: str = "url",
     w.saveAsTable(table)
 
 
-def partition_pages(pages: DataFrame) -> DataFrame:
-    """Round-robin repartition into ``spark.sql.shuffle.partitions`` tasks
-    of equal row count, over one scan; the columns are unchanged.
+# Extraction tasks per task slot in ``partition_pages``. More tasks than
+# slots let the scheduler give the slot that runs the heavy task fewer of
+# the other rows; each Python task costs about 30-40 ms. perfbench
+# ``html_crawl`` on a 4-vCPU VM, one Spark session per seed (seeds 1-6),
+# median of 7 alternating reps: 3 a slot 1.76/1.53/1.63/1.48/1.50/1.53 s,
+# 4 a slot 1.67/1.55/1.55/1.49/1.53/1.53 s. Another run over the same
+# seeds: 4 a slot 1.71/1.65/1.56/1.62/1.64/1.76 s, 1 a slot 2.07/1.98/
+# 1.69/1.99/1.82/2.05 s, 4 equal-count unsorted tasks 1.92/1.86/1.78/
+# 1.79/2.01/2.24 s.
+TASKS_PER_SLOT = 4
 
-    No length band for oversized rows: one cost a second scan and mostly
-    empty tasks and won no wall time (10 interleaved perfbench
-    ``html_crawl`` pairs, README "Scale design"). Round-robin, not a url
-    hash: extraction is row-independent, and the checkpointed path buckets
-    by url itself.
+
+def _task_slots(spark: SparkSession) -> int:
+    """Tasks the executors registered now can run at once (their cores
+    over ``spark.task.cpus``). Unlike ``defaultParallelism`` it ignores
+    ``spark.default.parallelism``. Under dynamic allocation it counts only
+    the executors already up, so a job planned before the executors scale
+    out is sized for the ones it has."""
+    sc = spark.sparkContext._jsc.sc()
+    return sc.maxNumConcurrentTasks(
+        sc.resourceProfileManager().defaultResourceProfile())
+
+
+def partition_pages(pages: DataFrame) -> DataFrame:
+    """Deal ``pages`` largest first over ``max(spark.sql.shuffle.partitions,
+    TASKS_PER_SLOT x task slots)`` tasks, over one scan and one shuffle;
+    the columns are unchanged.
+
+    Each scan split is sorted by ``length(html)``, largest first (ties by
+    url, then html, so a retried map task deals every row to the same
+    task), and split s deals its rows in snake order from task s: rank r
+    has place ``p = (r + s) mod 2n`` and goes to task ``p`` if ``p < n``,
+    else ``2n - 1 - p``. With no more splits than slots, the splits'
+    heaviest rows land in the first tasks, which Spark launches first, and
+    the slots that run them get fewer of the many small tasks; with more,
+    the heavy rows still spread over all the tasks. An equal-count deal
+    over one task per slot left the task with the 0.65 s page as the
+    run's tail (README "Scale design"). An input with fewer rows than
+    tasks runs empty tasks. Extraction is row-independent, so no url
+    hash; the checkpointed path buckets by url itself.
     """
-    n = int(pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return pages.repartition(n)
+    spark = pages.sparkSession
+    n = max(int(spark.conf.get("spark.sql.shuffle.partitions")),
+            TASKS_PER_SLOT * _task_slots(spark))
+    # A row's place: its rank (the id's low 33 bits, taken after the sort)
+    # plus its split's index, modulo two rounds. It is a column of its own
+    # because every reference to the id expression counts rows by itself.
+    # The snake (a plain ``(r + s) mod n`` deal gives the first tasks the
+    # heavier row of every round) measured the same or faster: perfbench
+    # ``html_crawl`` on a 4-vCPU VM, one session per seed (seeds 1-6),
+    # median of 7 alternating reps, snake 1.68/1.43/1.44/1.48/1.43/1.39 s,
+    # plain 1.67/1.44/1.46/1.46/1.49/1.49 s.
+    lap = 2 * n
+    deal = F.col("_deal")
+    return (pages.sortWithinPartitions(F.length("html").desc(), "url", "html")
+            .withColumn("_deal", (F.monotonically_increasing_id()
+                                  .bitwiseAND((1 << 33) - 1)
+                                  + F.spark_partition_id()) % lap)
+            .repartitionById(n, F.least(deal, lap - 1 - deal).cast("int"))
+            .select(*pages.columns))
 
 
 def extract_pages(
@@ -379,10 +428,10 @@ def extract_pages(
 
     Column pruning: only (url, html) are shipped into the Python workers -
     Catalyst prunes the parquet scan down to those two columns, read once.
-    ``repartition`` deals the rows over ``partition_pages``' equal-count
-    tasks, with no band for oversized rows (one won no wall time, README
-    "Scale design"); without it the tasks are the input's own splits. Each
-    document goes to the first matching row of ``_format_table``.
+    ``repartition`` deals the rows over ``partition_pages``' tasks, largest
+    first (README "Scale design"); without it the tasks are the input's
+    own splits. Each document goes to the first matching row of
+    ``_format_table``.
     ``side_inputs`` maps a ``SIDE_INPUT_FORMATS`` name to ``{basename:
     value}``: pdf passwords, EBCDIC copybook layouts, XBRL ``{path: bytes}``
     taxonomies, LaTeX ``{filename: bytes}`` input files. The basename is
@@ -589,7 +638,7 @@ class CheckpointedExtraction:
         staged = (pages.select("url", "html")
                   .withColumn("grp", (bucket - bucket % size).cast("int"))
                   .where(F.col("grp").isin(list(pending))))
-        if len(pending) >= self._task_slots():
+        if len(pending) >= _task_slots(self.spark):
             # Enough groups to fill the task slots with one task each:
             # shuffle by group first, so a group lands as one file (AQE
             # splits one that outgrows its advisory size) instead of a
@@ -603,22 +652,12 @@ class CheckpointedExtraction:
         # leaves no grp=<gid> directory to infer it from.
         return self.spark.read.schema(staged.schema).parquet(self.staged_path)
 
-    def _task_slots(self) -> int:
-        """Tasks the executors registered now can run at once (their cores
-        over ``spark.task.cpus``). Unlike ``defaultParallelism`` it ignores
-        ``spark.default.parallelism``. Under dynamic allocation it counts
-        only the executors already up, so a run that starts before the
-        executors scale out stages and schedules for the ones it has."""
-        sc = self.spark.sparkContext._jsc.sc()
-        return sc.maxNumConcurrentTasks(
-            sc.resourceProfileManager().defaultResourceProfile())
-
     def _groups_in_flight(self) -> int:
         """Commit groups extracted at once: ``MIN_GROUPS_IN_FLIGHT``, or one
         per task slot where there are more slots, so one-task groups can
         fill them. Above 4 slots this is unmeasured; each group in flight
         holds a driver thread and a running job."""
-        return max(MIN_GROUPS_IN_FLIGHT, self._task_slots())
+        return max(MIN_GROUPS_IN_FLIGHT, _task_slots(self.spark))
 
     def _staged_bytes(self) -> dict[int, int]:
         """Bytes staged per commit group, from one listing of ``staged/``

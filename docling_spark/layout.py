@@ -522,7 +522,7 @@ def process_page_layout(df):
     cells json, clusters json) -> assembled elements per page.
 
     Grouped per Arrow batch via mapInPandas; each page is independent so
-    partitioning is free (round-robin at scale, as in engine.partition_pages).
+    any partitioning works (extraction's is engine.partition_pages).
     """
     import json
 

@@ -1527,8 +1527,9 @@ def extract_media_features(media: DataFrame) -> DataFrame:
     """mapInPandas feature extraction over opaque media payloads.
 
     Arrow batches bound by ``spark.sql.execution.arrow.maxRecordsPerBatch``;
-    for multi-MB payloads, spread the rows first with
-    ``engine.partition_pages``' round-robin count balance.
+    for multi-MB payloads, spread the rows first with a ``repartition``
+    (``engine.partition_pages`` deals by ``length(html)``, which media rows
+    do not have).
     """
     return media.select("media_id", "kind", "payload").mapInPandas(
         _feature_batches, schema=FEATURE_SCHEMA)

@@ -6,8 +6,8 @@ No external data: payloads come from the reference's own HTML test corpus
 (``/root/reference/tests/data/html/sources``) plus seeded template
 expansion. The fixture rows are present only when that directory exists;
 without it every row is synthetic. Every ``skew_every``-th row is an
-oversized html blob, the long tail that round-robin partitioning must
-spread (FIXTURES.md §1).
+oversized html blob, the long tail that largest-first partitioning
+(``engine.partition_pages``) must start first (FIXTURES.md §1).
 
 Generation is pure-Python + pyarrow (no JVM needed) and cached on disk, so
 tests and bench runs share identical bytes.

@@ -117,7 +117,10 @@ def stream_dedup_pages(spark, pages_path: str,
             .dropDuplicatesWithinWatermark(["digest"]))
 
 
+# The open session of one user: its first and last event, in
+# microseconds, its event count and its value sum.
 SESSION_STATE_SCHEMA = StructType([
+    StructField("start_ts", LongType()),
     StructField("last_ts", LongType()),
     StructField("n_events", LongType()),
     StructField("total_value", DoubleType()),
@@ -132,41 +135,52 @@ SESSION_OUTPUT_SCHEMA = StructType([
 ])
 
 
+def _sessions_frame(user_id: int, sessions: list) -> pd.DataFrame:
+    """``SESSION_OUTPUT_SCHEMA`` rows of ``(start_us, last_us, n_events,
+    total_value)`` sessions."""
+    return pd.DataFrame(
+        [(user_id, pd.Timestamp(start, unit="us"),
+          pd.Timestamp(last, unit="us"), n, total)
+         for start, last, n, total in sessions],
+        columns=SESSION_OUTPUT_SCHEMA.fieldNames())
+
+
 def _sessionize_group(key: Tuple, pdfs: Iterable[pd.DataFrame],
                       state: GroupState):
-    """Custom stateful operator: 30-minute-gap sessionization."""
+    """Custom stateful operator: 30-minute-gap sessionization.
+
+    The user's open session is the group state, so a session that spans
+    micro-batches keeps its first event's start. A session is emitted when
+    an event comes more than the gap after it, or when its key times out
+    (an hour without events): Spark then calls with no rows, and the state
+    is removed."""
     gap_us = 30 * 60 * 1_000_000
     (user_id,) = key
-    rows = pd.concat(list(pdfs)).sort_values("ts")
+    if state.hasTimedOut:
+        session = state.get
+        state.remove()
+        yield _sessions_frame(user_id, [session])
+        return
+    frames = [pdf for pdf in pdfs if len(pdf)]
+    if not frames:
+        return
+    rows = pd.concat(frames).sort_values("ts")
+    session = list(state.get) if state.exists else None
     sessions = []
-    if state.exists:
-        last_ts, n_events, total_value = state.get
-        start_ts = last_ts  # approximation: previous session continues
-    else:
-        last_ts = None
-        n_events = 0
-        total_value = 0.0
-        start_ts = None
     for ts, value in zip(rows["ts"], rows["value"]):
         ts_us = int(ts.value // 1000)
-        if last_ts is not None and ts_us - last_ts > gap_us:
-            sessions.append((user_id, pd.Timestamp(start_ts, unit="us"),
-                             pd.Timestamp(last_ts, unit="us"),
-                             n_events, total_value))
-            n_events = 0
-            total_value = 0.0
-            start_ts = ts_us
-        if start_ts is None:
-            start_ts = ts_us
-        last_ts = ts_us
-        n_events += 1
-        total_value += float(value or 0.0)
-    state.update((last_ts, n_events, total_value))
+        if session is not None and ts_us - session[1] > gap_us:
+            sessions.append(tuple(session))
+            session = None
+        if session is None:
+            session = [ts_us, ts_us, 0, 0.0]
+        session[1] = ts_us
+        session[2] += 1
+        session[3] += float(value or 0.0)
+    state.update(tuple(session))
     state.setTimeoutDuration(60 * 60 * 1000)
     if sessions:
-        yield pd.DataFrame(sessions, columns=[
-            "user_id", "session_start", "session_end", "n_events",
-            "total_value"])
+        yield _sessions_frame(user_id, sessions)
 
 
 def stream_sessionize(spark, events_path: str) -> DataFrame:

@@ -1,4 +1,4 @@
-"""End-to-end Spark tests: extraction job, one-scan round-robin
+"""End-to-end Spark tests: extraction job, one-scan largest-first
 partitioning, metrics, resume, parallelism invariance (SURVEY.md §7 v2
 machinery)."""
 
@@ -82,28 +82,69 @@ def test_generate_pages_oversized_rows_are_html():
     assert all(r["html"].startswith(b"<!DOCTYPE html>") for r in big)
 
 
-def test_one_scan_round_robin_partitioning(spark):
-    """The default extraction plan reads its input once; ``partition_pages``
-    deals the rows evenly over ``spark.sql.shuffle.partitions`` tasks, and
-    the oversized rows extract like the rest."""
-    pages = spark.read.parquet(
-        pages_mod.ensure_pages(48, skew_every=16, skew_repeat=32))
+def test_one_scan_largest_first_partitioning(spark, tmp_path):
+    """The default extraction plan reads its input once and shuffles once;
+    ``partition_pages`` deals each scan split's rows largest first over
+    ``max(spark.sql.shuffle.partitions, TASKS_PER_SLOT x task slots)``
+    tasks, starting split s's deal at task s, so the splits' largest rows
+    land in the first tasks, the same tasks on every evaluation. The
+    oversized rows extract like the rest."""
+    src = str(tmp_path / "src")
+    spark.read.parquet(
+        pages_mod.ensure_pages(48, skew_every=16, skew_repeat=32)
+    ).repartition(3).write.parquet(src)
+    pages = spark.read.parquet(src)
     res = engine.extract_pages(pages)
     plan = res._jdf.queryExecution().executedPlan().toString()
     assert plan.count("FileScan") == 1
+    assert plan.count("Exchange") == 1
 
-    out = engine.partition_pages(pages.select("url", "html"))
-    assert set(out.columns) == {"url", "html"}
-    counts = out.rdd.glom().map(len).collect()
-    assert len(counts) == int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert sum(counts) == 48 and max(counts) - min(counts) <= 1
+    cols = pages.select("url", "html")
+    out = engine.partition_pages(cols)
+    assert out.columns == cols.columns
+    n = max(int(spark.conf.get("spark.sql.shuffle.partitions")),
+            engine.TASKS_PER_SLOT * engine._task_slots(spark))
+    assert out.rdd.getNumPartitions() == n
 
-    rows = res.select("url", "status", "html_bytes").collect()
+    def task_of_url(df):
+        return dict(df.select("url", F.spark_partition_id()).rdd
+                    .map(tuple).collect())
+
+    first = task_of_url(out)
+    assert len(first) == 48 and first == task_of_url(out)
+    split_rows = cols.select("url", F.length("html").alias("len"),
+                             F.spark_partition_id().alias("split")).collect()
+    largest = {}  # split -> its first row in the deal's order
+    for r in split_rows:
+        key = (-r["len"], r["url"])
+        largest[r["split"]] = min(largest.get(r["split"], key), key)
+    assert {split: first[url] for split, (_, url) in largest.items()} == {
+        0: 0, 1: 1, 2: 2}
+
+    rows = res.select("url", "status", "html_bytes", "partition_id").collect()
     assert len(rows) == 48
     assert all(r["status"] == "success" for r in rows)
-    synth = sorted(r["html_bytes"] for r in rows
-                   if r["url"].startswith("https://synth.test/"))
-    assert synth[-1] > 10 * statistics.median(synth)  # an oversized row
+    synth = sorted((r["html_bytes"], r["url"], r["partition_id"])
+                   for r in rows if r["url"].startswith("https://synth.test/"))
+    assert synth[-1][0] > 10 * statistics.median(b for b, _, _ in synth)
+    assert synth[-1][2] == first[synth[-1][1]] < 3  # it ran in a first task
+
+
+def test_largest_first_deal_spreads_one_heavy_row_per_split(spark):
+    """With more scan splits than tasks, each split's one oversized row
+    goes to a different task until every task has one: the deal's start
+    moves with the split."""
+    n = max(int(spark.conf.get("spark.sql.shuffle.partitions")),
+            engine.TASKS_PER_SLOT * engine._task_slots(spark))
+    splits = n + 5
+    pages = spark.range(0, 3 * splits, numPartitions=splits).selectExpr(
+        "concat('u', id) url",
+        "cast(repeat('x', if(id % 3 = 0, 10000, 10)) as binary) html")
+    out = engine.partition_pages(pages).select(
+        F.length("html").alias("len"), F.spark_partition_id().alias("t"))
+    tasks = [r["t"] for r in out.collect() if r["len"] > 10]
+    assert len(tasks) == splits
+    assert len(set(tasks)) == n  # every task got one, five got two
 
 
 def test_partition_metrics_cover_all_docs(spark):
@@ -394,8 +435,7 @@ def test_checkpoint_one_file_per_small_group(spark, tmp_path, monkeypatch,
     ck = engine.CheckpointedExtraction(spark, str(tmp_path / "ck"),
                                        num_buckets=4, group_size=2)
     # two groups on a two-slot cluster
-    monkeypatch.setattr(engine.CheckpointedExtraction, "_task_slots",
-                        lambda self: 2)
+    monkeypatch.setattr(engine, "_task_slots", lambda spark: 2)
     key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     before = spark.conf.get(key)
     if advisory:
@@ -431,7 +471,7 @@ def test_checkpoint_fewer_groups_than_slots_keep_split_files(spark, tmp_path):
     pages = spark.read.parquet(src)
     ck = engine.CheckpointedExtraction(spark, str(tmp_path / "ck"),
                                        num_buckets=4, group_size=2)
-    assert ck._task_slots() > 2
+    assert engine._task_slots(spark) > 2
     assert ck.run(pages)["processed"] == [0, 1, 2, 3]
     spans = _input_files_per_group(pages, ck)
     assert {gid: _results_files(ck, gid) for gid in (0, 2)} == spans
@@ -443,8 +483,7 @@ def test_checkpoint_without_aqe(spark, tmp_path, monkeypatch):
     """The staging rebalance is a layout hint only: with AQE off, the run
     still extracts every page once and commits every bucket."""
     # as many groups as slots, so staging asks for the rebalance
-    monkeypatch.setattr(engine.CheckpointedExtraction, "_task_slots",
-                        lambda self: 2)
+    monkeypatch.setattr(engine, "_task_slots", lambda spark: 2)
     key = "spark.sql.adaptive.enabled"
     before = spark.conf.get(key)
     spark.conf.set(key, "false")

@@ -60,12 +60,13 @@ def _pinned(batches):
             "md_len": pc.utf8_length(out["md"]).fill_null(0)}})
 
 pages = spark.read.parquet(pages_path)
+# One warm-up task per worker: these rows are all the same size, so they
+# are spread by count, not by partition_pages' size deal.
 warm = (spark.range(n_workers * 4)
         .selectExpr("cast(id as string) url",
                     "cast('<p>warm</p>' as binary) html")
         .repartition(n_workers))
-warm_cols = engine.partition_pages(warm)
-warm_cols.mapInArrow(_pinned, "url string, status string, md_len int").count()
+warm.mapInArrow(_pinned, "url string, status string, md_len int").count()
 
 n_docs = pages.count()
 cols = engine.partition_pages(pages.select("url", "html"))
