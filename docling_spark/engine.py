@@ -22,11 +22,11 @@ North-rule machinery (SURVEY.md §3.4, §4):
   url-hash commit group; when the groups can fill the task slots, staging
   is rebalanced so a small group is one file. Groups run concurrently,
   largest first, each reading its staged files without a shuffle. Each
-  group's output is written as a unit, its metrics row observed on that
-  write, and then the metrics row and the manifest commit are driver-side
-  files (no Spark job); resume skips the committed buckets. Spark jobs do
-  only the extraction work, one job per group, plus one staging pass per
-  run.
+  group's output is written as a unit, its metrics observed on that
+  write, and then its commit is one driver-side manifest file (no Spark
+  job) that carries those metrics; resume skips the committed buckets.
+  Spark jobs do only the extraction work, one job per group, plus one
+  staging pass per run.
 
 Reference lifecycle being mirrored: ``DocumentConverter.convert_all``
 (``/root/reference/docling/document_converter.py:505-590``) with structured
@@ -86,7 +86,7 @@ RESULT_COLUMNS = StructType([
 
 # The lineage aggregates of a set of results rows (``_metrics_aggs``): one
 # row per partition from ``partition_metrics``, one row per commit group in
-# a checkpointed run's ``metrics/``.
+# a checkpointed run's manifest.
 METRICS_SCHEMA = StructType([
     StructField("doc_count", LongType(), False),
     StructField("byte_count", LongType(), False),
@@ -469,11 +469,10 @@ def _metrics_aggs() -> list:
     ]
 
 
-def partition_metrics(results: DataFrame,
-                      by: tuple[str, ...] = ("partition_id",)) -> DataFrame:
-    """Per-partition lineage rows (north rule): the ``by`` key(s) and
-    ``METRICS_SCHEMA``'s columns, one row per key."""
-    return results.groupBy(*by).agg(*_metrics_aggs())
+def partition_metrics(results: DataFrame) -> DataFrame:
+    """Per-partition lineage rows (north rule): ``partition_id`` and
+    ``METRICS_SCHEMA``'s columns, one row per partition."""
+    return results.groupBy("partition_id").agg(*_metrics_aggs())
 
 
 # ----------------------------------------------------- checkpointed runs
@@ -486,15 +485,13 @@ def partition_metrics(results: DataFrame,
 # 8, inside the 8.0-11.2 s spread of 4.
 MIN_GROUPS_IN_FLIGHT = 4
 
-# One row per committed bucket; the driver writes it, Spark reads it.
+# One row per committed group: its buckets and the metrics observed on
+# its results write. The driver writes it, Spark reads it.
 MANIFEST_SCHEMA = StructType([
-    StructField("bucket", IntegerType(), False),
+    StructField("grp", IntegerType(), False),
+    StructField("buckets", ArrayType(IntegerType()), False),
     StructField("committed_at", DoubleType(), False),
-])
-
-# results/ as read back: the extraction columns plus the commit group.
-RESULTS_SCHEMA = StructType(
-    EXTRACT_SCHEMA.fields + [StructField("grp", IntegerType(), True)])
+] + METRICS_SCHEMA.fields)
 
 
 class CheckpointedExtraction:
@@ -519,21 +516,22 @@ class CheckpointedExtraction:
     A group's metrics are observed on its results write (a
     ``pyspark.sql.Observation``, no extra pass), and its failures list
     reaches the driver that way, bounded by the group's failures. After
-    the write, the driver replaces ``metrics/grp=<gid>`` with that one row
-    and then appends the group's manifest rows, each one parquet file put
+    the write, the driver commits the group: ONE ``MANIFEST_SCHEMA`` row
+    (its gid, its buckets and those metrics) put as one parquet file
     through the Hadoop FileSystem (an Iceberg snapshot commit in
-    production) - no Spark job per commit, and every committed group has
-    its metrics. ``metrics/`` holds ONE row per commit group, not per
+    production) - no Spark job per commit, and a committed group always
+    has its metrics. The manifest holds one row per commit group, not per
     extraction task (``partition_metrics`` gives per-partition rows of any
     ``extract_pages`` result); ``summary()`` totals it. When a group
     fails, no further group starts; the groups in flight finish and
     commit, and ``run()`` re-raises. ``staged/`` is deleted either way. A
     re-run skips the buckets the manifest holds, so it resumes from the
-    committed groups, and rebuilds from ``results/`` only the metrics rows
-    that are missing.
+    committed groups.
 
-    Layout under ``out_dir``: ``results/grp=<gid>``, ``metrics/grp=<gid>``,
-    ``manifest/`` and, while a run is in flight, ``staged/grp=<gid>``.
+    Layout under ``out_dir``: ``results/grp=<gid>``, ``manifest/`` and,
+    while a run is in flight, ``staged/grp=<gid>``. Output directories
+    written in the earlier layout (a ``metrics/`` directory and one
+    manifest row per bucket) are not read back.
     """
 
     def __init__(self, spark: SparkSession, out_dir: str,
@@ -543,7 +541,6 @@ class CheckpointedExtraction:
         self.num_buckets = num_buckets
         self.group_size = group_size
         self.results_path = f"{self.out_dir}/results"
-        self.metrics_path = f"{self.out_dir}/metrics"
         self.manifest_path = f"{self.out_dir}/manifest"
         self.staged_path = f"{self.out_dir}/staged"
 
@@ -560,8 +557,8 @@ class CheckpointedExtraction:
         if not fs.exists(path):
             return set()
         rows = self.spark.read.schema(MANIFEST_SCHEMA).parquet(
-            self.manifest_path).collect()
-        return {r["bucket"] for r in rows}
+            self.manifest_path).select(F.explode("buckets")).collect()
+        return {r[0] for r in rows}
 
     def _put(self, directory: str, name: str, rows: dict,
              schema: StructType) -> None:
@@ -583,24 +580,15 @@ class CheckpointedExtraction:
         if not fs.rename(tmp, final):
             raise IOError(f"rename failed: {tmp} -> {final}")
 
-    def _commit(self, gid: int, buckets: list[int]) -> None:
-        """Append the group's manifest rows as one ``_put`` file: a crash
-        can lose the whole group's commit but never expose half of it."""
+    def _commit(self, gid: int, buckets: list[int], metrics: dict) -> None:
+        """Append the group's one manifest row, with its ``METRICS_SCHEMA``
+        ``metrics``, as one ``_put`` file: a crash can lose the whole
+        commit but never expose half of it or a commit without metrics."""
+        row = {"grp": gid, "buckets": buckets, "committed_at": time.time(),
+               **{k: metrics[k] for k in METRICS_SCHEMA.fieldNames()}}
         self._put(self.manifest_path,
                   f"commit-{gid}-{uuid.uuid4().hex}.parquet",
-                  {"bucket": buckets,
-                   "committed_at": [time.time()] * len(buckets)},
-                  MANIFEST_SCHEMA)
-
-    def _put_metrics(self, gid: int, row: dict) -> None:
-        """Replace ``metrics/grp=<gid>`` with the one ``METRICS_SCHEMA`` row
-        ``row``, as one ``_put`` file."""
-        directory = f"{self.metrics_path}/grp={gid}"
-        fs, path = self._hadoop(directory)
-        fs.delete(path, True)
-        self._put(directory, "metrics.parquet",
-                  {k: [row[k]] for k in METRICS_SCHEMA.fieldNames()},
-                  METRICS_SCHEMA)
+                  {k: [v] for k, v in row.items()}, MANIFEST_SCHEMA)
 
     def run(self, pages: DataFrame) -> dict:
         done = self.committed_buckets()
@@ -622,7 +610,6 @@ class CheckpointedExtraction:
             # the transient copy of the pending input, also after a failure
             fs, path = self._hadoop(self.staged_path)
             fs.delete(path, True)
-        self._write_metrics()
         return {
             "resumed_from": sorted(done),
             "processed": [b for group in pending.values() for b in group],
@@ -691,13 +678,11 @@ class CheckpointedExtraction:
             # directory that the resumed run simply overwrites - no
             # duplicate rows, no inflated metrics. Readers of results_path
             # see `grp` as a discovered partition column. The group's
-            # metrics are observed on this write and put before the
-            # commit, so a committed group always has its metrics row.
+            # metrics are observed on this write and ride its commit.
             obs = Observation()
             results.observe(obs, *_metrics_aggs()).write.mode(
                 "overwrite").parquet(f"{self.results_path}/grp={gid}")
-            self._put_metrics(gid, obs.get)
-            self._commit(gid, group)
+            self._commit(gid, group, obs.get)
 
         sizes = self._staged_bytes()
         # sorted() is stable and pending is in gid order
@@ -730,37 +715,14 @@ class CheckpointedExtraction:
         if error is not None:
             raise error
 
-    def _write_metrics(self) -> None:
-        """Repair: put the metrics row of every commit group whose
-        ``metrics/grp=<gid>`` holds no readable file (the metrics were
-        deleted, or a crash fell between the delete and the put), from one
-        pass over those groups' results. A group without result rows gets
-        a zero row. A clean run observed every row on its writes, so this
-        issues no Spark job."""
-        fs, pattern = self._hadoop(f"{self.metrics_path}/grp=*/[^_.]*")
-        have = {s.getPath().getParent().getName()
-                for s in fs.globStatus(pattern) or []}
-        todo = [gid for gid in range(0, self.num_buckets, self.group_size)
-                if f"grp={gid}" not in have]
-        if not todo:
-            return
-        results = self.spark.read.schema(RESULTS_SCHEMA).parquet(
-            self.results_path).where(F.col("grp").isin(todo))
-        rows = {r["grp"]: r.asDict()
-                for r in partition_metrics(results, by=("grp",)).collect()}
-        zero = {"doc_count": 0, "byte_count": 0, "failure_count": 0,
-                "failures": [], "parse_ms": 0.0, "serialize_ms": 0.0}
-        for gid in todo:
-            self._put_metrics(gid, rows.get(gid, zero))
-
     def summary(self) -> dict:
-        """Run totals from ``metrics/`` alone, without a pass over
+        """Run totals from the manifest alone, without a pass over
         ``results/``: docs, bytes, ok (docs less failures), and the mean
         parse and serialize ms per document (None with no documents)."""
         sums = ("doc_count", "byte_count", "failure_count", "parse_ms",
                 "serialize_ms")
-        row = self.spark.read.schema(METRICS_SCHEMA).parquet(
-            self.metrics_path).agg(*(F.sum(c).alias(c) for c in sums)).first()
+        row = self.spark.read.schema(MANIFEST_SCHEMA).parquet(
+            self.manifest_path).agg(*(F.sum(c).alias(c) for c in sums)).first()
         docs = row["doc_count"] or 0
         return {
             "docs": docs,

@@ -2,22 +2,13 @@
 
 Batch twins of each streaming query live beside the stream factories so the
 DuckDB oracle can check semantics on the parquet snapshot; the streaming
-variants add watermarks for late data. Stateful sessionization uses
-``applyInPandasWithState`` - the Spark analog of a custom stateful operator.
+variants add watermarks for late data. Sessionization has a batch form only
+(``batch_sessionize``, window functions).
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Tuple
-
-import pandas as pd
-
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType, IntegerType, LongType, StringType, StructField,
-    StructType, TimestampType,
-)
 
 
 # ------------------------------------------------------------ batch twins
@@ -43,17 +34,6 @@ def hourly_event_counts(events: DataFrame) -> DataFrame:
             "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"),
              decimal_sum("value").alias("total_value"))
-    )
-
-
-def tumbling_window_counts(events: DataFrame, minutes: int = 15) -> DataFrame:
-    """window() based agg - identical shape in batch and streaming."""
-    return (
-        events.groupBy(F.window("ts", f"{minutes} minutes"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("window.start").alias("window_start"),
-                F.col("window.end").alias("window_end"),
-                "event_type", "n_events")
     )
 
 
@@ -115,89 +95,6 @@ def stream_dedup_pages(spark, pages_path: str,
             .withColumn("digest", F.sha2(F.col("html"), 256))
             .withWatermark("warc_ts", watermark)
             .dropDuplicatesWithinWatermark(["digest"]))
-
-
-# The open session of one user: its first and last event, in
-# microseconds, its event count and its value sum.
-SESSION_STATE_SCHEMA = StructType([
-    StructField("start_ts", LongType()),
-    StructField("last_ts", LongType()),
-    StructField("n_events", LongType()),
-    StructField("total_value", DoubleType()),
-])
-
-SESSION_OUTPUT_SCHEMA = StructType([
-    StructField("user_id", LongType()),
-    StructField("session_start", TimestampType()),
-    StructField("session_end", TimestampType()),
-    StructField("n_events", LongType()),
-    StructField("total_value", DoubleType()),
-])
-
-
-def _sessions_frame(user_id: int, sessions: list) -> pd.DataFrame:
-    """``SESSION_OUTPUT_SCHEMA`` rows of ``(start_us, last_us, n_events,
-    total_value)`` sessions."""
-    return pd.DataFrame(
-        [(user_id, pd.Timestamp(start, unit="us"),
-          pd.Timestamp(last, unit="us"), n, total)
-         for start, last, n, total in sessions],
-        columns=SESSION_OUTPUT_SCHEMA.fieldNames())
-
-
-def _sessionize_group(key: Tuple, pdfs: Iterable[pd.DataFrame],
-                      state: GroupState):
-    """Custom stateful operator: 30-minute-gap sessionization.
-
-    The user's open session is the group state, so a session that spans
-    micro-batches keeps its first event's start. A session is emitted when
-    an event comes more than the gap after it, or when its key times out
-    (an hour without events): Spark then calls with no rows, and the state
-    is removed."""
-    gap_us = 30 * 60 * 1_000_000
-    (user_id,) = key
-    if state.hasTimedOut:
-        session = state.get
-        state.remove()
-        yield _sessions_frame(user_id, [session])
-        return
-    frames = [pdf for pdf in pdfs if len(pdf)]
-    if not frames:
-        return
-    rows = pd.concat(frames).sort_values("ts")
-    session = list(state.get) if state.exists else None
-    sessions = []
-    for ts, value in zip(rows["ts"], rows["value"]):
-        ts_us = int(ts.value // 1000)
-        if session is not None and ts_us - session[1] > gap_us:
-            sessions.append(tuple(session))
-            session = None
-        if session is None:
-            session = [ts_us, ts_us, 0, 0.0]
-        session[1] = ts_us
-        session[2] += 1
-        session[3] += float(value or 0.0)
-    state.update(tuple(session))
-    state.setTimeoutDuration(60 * 60 * 1000)
-    if sessions:
-        yield _sessions_frame(user_id, sessions)
-
-
-def stream_sessionize(spark, events_path: str) -> DataFrame:
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
-    stream = spark.readStream.schema(schema).parquet(events_path)
-    return (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _sessionize_group,
-            outputStructType=SESSION_OUTPUT_SCHEMA,
-            stateStructType=SESSION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
-    )
 
 
 def batch_sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:

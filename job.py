@@ -12,9 +12,11 @@ Submit with:
 The job is resumable: re-submitting with the same --output continues from
 the last committed bucket group (engine.CheckpointedExtraction manifest).
 Results land in <output>/results partitioned by commit group, each group
-as it commits, and each group's lineage row (observed on its results
-write) in <output>/metrics just before its commit; the printed report
-totals <output>/metrics, without a pass over the results. The input is
+as it commits. A group's commit is one row in <output>/manifest that
+carries its lineage metrics (observed on its results write); the printed
+report totals the manifest, without a pass over the results. An output
+written before that layout (with a <output>/metrics directory) is not
+read back. The input is
 read once into the transient <output>/staged, deleted at the end of the
 run (also a failed one), so the output needs scratch space about equal
 to the pending input. When the pending groups are at least as many as

@@ -12,7 +12,6 @@ import sys
 import threading
 import uuid
 
-import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -171,16 +170,11 @@ def test_checkpoint_resume(spark, tmp_path):
     assert r2["processed"] == []
     assert sorted(r2["resumed_from"]) == [0, 1, 2, 3]
     assert spark.read.parquet(ck.results_path).count() == 40
-    # missing metrics rows (deleted, or a crash between a row's delete and
-    # its put) are rebuilt by the next run without re-extracting
-    shutil.rmtree(ck.metrics_path)
-    r3 = ck2.run(pages)
-    assert r3["processed"] == []
     assert _metrics_docs(spark, ck) == 40
 
 
 def _metrics_docs(spark, ck):
-    return spark.read.parquet(ck.metrics_path).agg(
+    return spark.read.parquet(ck.manifest_path).agg(
         F.sum("doc_count")).first()[0]
 
 
@@ -194,22 +188,17 @@ def _pages_with_poison(spark, n=40):
 
 
 def _metrics_by_group(spark, ck):
-    rows = spark.read.parquet(ck.metrics_path).collect()
+    rows = spark.read.parquet(ck.manifest_path).collect()
     return {r["grp"]: r for r in rows}
 
 
-def test_checkpoint_metrics_observed_on_write(spark, tmp_path, monkeypatch):
-    """A clean run observes each group's metrics on its results write: no
-    aggregation pass over ``results/`` (``partition_metrics`` raises), and
-    each ``metrics/grp=<gid>`` is one row equal to that group's results."""
-    def no_pass(*args, **kwargs):
-        raise AssertionError("partition_metrics called on a clean run")
-
-    monkeypatch.setattr(engine, "partition_metrics", no_pass)
+def test_checkpoint_metrics_observed_on_write(spark, tmp_path):
+    """A run observes each group's metrics on its results write and
+    commits them with the group: each group's one manifest row equals an
+    aggregate over that group's results."""
     ck = engine.CheckpointedExtraction(spark, str(tmp_path / "obs"),
                                        num_buckets=4, group_size=2)
     assert ck.run(_pages_with_poison(spark))["processed"] == [0, 1, 2, 3]
-    monkeypatch.undo()
     failed = F.col("status") != "success"
     want = {r["grp"]: r for r in spark.read.parquet(ck.results_path)
             .groupBy("grp").agg(
@@ -223,9 +212,10 @@ def test_checkpoint_metrics_observed_on_write(spark, tmp_path, monkeypatch):
                 F.sum("serialize_ms").alias("serialize_ms")).collect()}
     got = _metrics_by_group(spark, ck)
     assert sorted(got) == sorted(want) == [0, 2]
-    assert spark.read.parquet(ck.metrics_path).count() == 2
+    assert spark.read.parquet(ck.manifest_path).count() == 2
     for gid, w in want.items():
         g = got[gid]
+        assert sorted(g["buckets"]) == [gid, gid + 1]
         for c in ("doc_count", "byte_count", "failure_count"):
             assert g[c] == w[c], (gid, c)
         assert sorted(g["failures"]) == w["failures"]
@@ -236,7 +226,7 @@ def test_checkpoint_metrics_observed_on_write(spark, tmp_path, monkeypatch):
 
 
 def test_checkpoint_summary_matches_results(spark, tmp_path):
-    """``summary()`` totals ``metrics/`` to the same figures an aggregate
+    """``summary()`` totals the manifest to the same figures an aggregate
     over ``results/`` gives, without reading ``results/``."""
     ck = engine.CheckpointedExtraction(spark, str(tmp_path / "sum"),
                                        num_buckets=4, group_size=2)
@@ -247,7 +237,7 @@ def test_checkpoint_summary_matches_results(spark, tmp_path):
         F.sum((F.col("status") == "success").cast("long")).alias("ok"),
         F.avg("parse_ms").alias("avg_parse_ms"),
         F.avg("serialize_ms").alias("avg_serialize_ms")).first()
-    shutil.rmtree(ck.results_path)  # the summary reads metrics/ alone
+    shutil.rmtree(ck.results_path)  # the summary reads the manifest alone
     got = ck.summary()
     assert set(got) == set(want.asDict())
     assert (got["docs"], got["bytes"], got["ok"]) == (41, want["bytes"], 40)
@@ -274,10 +264,11 @@ def test_checkpoint_resume_on_uri_output(spark, tmp_path):
 
 
 def test_checkpoint_jobs_per_commit_group(spark, tmp_path):
-    """Staging is per run, and metrics rows and manifest commits run no
-    Spark job: doubling the commit groups adds at most one job per extra group.  Every
-    job, including those of groups run in worker threads, carries the
-    caller's job group, and the caller's description is left untouched."""
+    """Staging is per run, and the manifest commits run no Spark job:
+    doubling the commit groups adds at most one job per extra group.
+    Every job, including those of groups run in worker threads, carries
+    the caller's job group, and the caller's description is left
+    untouched."""
     pages = _pages(spark, 40)
     sc = spark.sparkContext
 
@@ -323,14 +314,14 @@ def test_checkpoint_group_failure_resume(spark, tmp_path, monkeypatch):
     failed = threading.Event()
     attempted = []
 
-    def commit(self, gid, buckets):
+    def commit(self, gid, buckets, metrics):
         attempted.append(gid)
         if gid == 0:
             failed.set()
             raise RuntimeError("commit of group 0 failed")
         # group 1 commits only after group 0 has failed
         assert failed.wait(120)
-        real_commit(self, gid, buckets)
+        real_commit(self, gid, buckets, metrics)
 
     monkeypatch.setattr(engine.CheckpointedExtraction, "_commit", commit)
     with pytest.raises(RuntimeError, match="commit of group 0 failed"):
@@ -351,7 +342,11 @@ def test_checkpoint_group_failure_resume(spark, tmp_path, monkeypatch):
     res = spark.read.parquet(ck.results_path)
     assert res.count() == 40
     assert res.select("url").distinct().count() == 40
-    assert _metrics_docs(spark, ck) == 40
+    # the summary of both runs' commits equals the results' own totals
+    want = res.agg(F.sum("html_bytes"), F.sum(
+        (F.col("status") == "success").cast("long"))).first()
+    got = ck.summary()
+    assert (got["docs"], got["bytes"], got["ok"]) == (40, want[0], want[1])
     assert ck.committed_buckets() == {0, 1, 2, 3}
 
 
@@ -375,9 +370,9 @@ def test_checkpoint_starts_largest_group_first(spark, tmp_path, monkeypatch):
     real_sizes = engine.CheckpointedExtraction._staged_bytes
     commits, sizes = [], {}
 
-    def commit(self, gid, buckets):
+    def commit(self, gid, buckets, metrics):
         commits.append(gid)
-        real_commit(self, gid, buckets)
+        real_commit(self, gid, buckets, metrics)
 
     def staged_bytes(self):
         sizes.update(real_sizes(self))
@@ -502,44 +497,62 @@ def test_checkpoint_without_aqe(spark, tmp_path, monkeypatch):
 
 
 def test_checkpoint_torn_manifest_resume(spark, tmp_path):
-    """A crash that commits only SOME buckets of a group must not lose or
-    duplicate rows on resume: group ids come from a fixed bucket-range
-    partition and the whole fixed group is re-extracted + overwritten
-    (round-2 advice: order-dependent gids left stale grp dirs)."""
+    """A crash between a group's results write and its commit leaves the
+    group's results but no commit file, maybe a ``_``-prefixed temp file
+    that readers must not see. Resume re-extracts only that group, whose
+    fixed bucket range keeps its ``grp=<gid>`` directory, and overwrites
+    it: no row lost or duplicated, and one manifest row per group."""
     pages = _pages(spark, 40)
     out = str(tmp_path / "torn")
     ck = engine.CheckpointedExtraction(spark, out, num_buckets=4,
                                        group_size=2)
     ck.run(pages)
-    total = spark.read.parquet(ck.results_path).count()
-    assert total == 40
-    # simulate a torn commit: drop bucket 1's manifest row (group {0,1}
-    # is now half-committed) but leave the results directory intact
-    mf = spark.read.parquet(ck.manifest_path)
-    kept = mf.where("bucket <> 1")
-    tmp_mf = str(tmp_path / "mf_tmp")
-    kept.coalesce(1).write.mode("overwrite").parquet(tmp_mf)
-    shutil.rmtree(ck.manifest_path)
-    shutil.move(tmp_mf, ck.manifest_path)
-    # a commit torn before its rename leaves a `_`-prefixed temp file that
-    # readers must not see
-    pq.write_table(pa.table({"bucket": pa.array([1], pa.int32()),
-                             "committed_at": [0.0]}),
-                   f"{ck.manifest_path}/_commit-torn.parquet")
+    assert spark.read.parquet(ck.results_path).count() == 40
+    # group 0's commit was created but never renamed into place
+    manifest = pathlib.Path(ck.manifest_path)
+    (commit0,) = [p for p in manifest.glob("commit-*.parquet")
+                  if pq.read_table(p).column("grp").to_pylist() == [0]]
+    commit0.rename(manifest / f"_{commit0.name}")
+    kept = sorted(p.name for p in pathlib.Path(
+        ck.results_path, "grp=2").glob("part-*"))
     ck2 = engine.CheckpointedExtraction(spark, out, num_buckets=4,
                                         group_size=2)
-    assert sorted(ck2.committed_buckets()) == [0, 2, 3]
+    assert ck2.committed_buckets() == {2, 3}
     r = ck2.run(pages)
-    # only the torn group's pending bucket is (re)committed...
-    assert r["processed"] == [1]
+    # only the uncommitted group is re-extracted...
+    assert r["processed"] == [0, 1]
+    assert sorted(p.name for p in pathlib.Path(
+        ck.results_path, "grp=2").glob("part-*")) == kept
     # ...and the results hold exactly one row per input, no dupes/loss
     res = spark.read.parquet(ck.results_path)
     assert res.count() == 40
     assert res.select("url").distinct().count() == 40
-    # the re-extracted group's metrics replace, not add to, the old ones
-    assert _metrics_docs(spark, ck) == 40
+    # the temp file adds no row: one commit, with its metrics, per group
+    assert ck2.summary()["docs"] == 40
+    assert sorted(_metrics_by_group(spark, ck)) == [0, 2]
+    assert spark.read.parquet(ck.manifest_path).count() == 2
     assert not (tmp_path / "torn" / "staged").exists()
-    assert sorted(ck2.committed_buckets()) == [0, 1, 2, 3]
+    assert ck2.committed_buckets() == {0, 1, 2, 3}
+
+
+def test_checkpoint_one_put_per_group(spark, tmp_path, monkeypatch):
+    """A run's driver-side bookkeeping is one ``_put`` file per committed
+    group, into the manifest; no ``metrics/`` directory is made."""
+    real_put = engine.CheckpointedExtraction._put
+    puts = []
+
+    def put(self, directory, name, rows, schema):
+        puts.append(directory)
+        real_put(self, directory, name, rows, schema)
+
+    monkeypatch.setattr(engine.CheckpointedExtraction, "_put", put)
+    ck = engine.CheckpointedExtraction(spark, str(tmp_path / "puts"),
+                                       num_buckets=4, group_size=1)
+    assert ck.run(_pages(spark, 40))["processed"] == [0, 1, 2, 3]
+    assert puts == [ck.manifest_path] * 4
+    assert len(list(pathlib.Path(ck.manifest_path).glob("*.parquet"))) == 4
+    assert not (tmp_path / "puts" / "metrics").exists()
+    assert ck.summary()["docs"] == 40
 
 
 def test_checkpoint_empty_pages(spark, tmp_path):
@@ -555,19 +568,15 @@ def test_checkpoint_empty_pages(spark, tmp_path):
     assert res.count() == 0
     assert set(engine.EXTRACT_SCHEMA.fieldNames()) <= set(res.columns)
     assert {"doc_json", "md", "itxt"} <= set(res.columns)
-    # one zero metrics row per group, observed on the write or, once
-    # deleted, rebuilt by the next run from no result rows
-    for rebuilt in (False, True):
-        if rebuilt:
-            shutil.rmtree(ck.metrics_path)
-            assert ck.run(pages)["processed"] == []
-        got = _metrics_by_group(spark, ck)
-        assert sorted(got) == [0, 2]
-        assert spark.read.parquet(ck.metrics_path).count() == 2
-        for r in got.values():
-            assert (r["doc_count"], r["byte_count"], r["failure_count"],
-                    r["failures"], r["parse_ms"], r["serialize_ms"]) == (
-                        0, 0, 0, [], 0.0, 0.0)
+    # one manifest row per group, its metrics observed on the write as
+    # zeros
+    got = _metrics_by_group(spark, ck)
+    assert sorted(got) == [0, 2]
+    assert spark.read.parquet(ck.manifest_path).count() == 2
+    for r in got.values():
+        assert (r["doc_count"], r["byte_count"], r["failure_count"],
+                r["failures"], r["parse_ms"], r["serialize_ms"]) == (
+                    0, 0, 0, [], 0.0, 0.0)
     assert ck.summary() == {"docs": 0, "bytes": 0, "ok": 0,
                             "avg_parse_ms": None, "avg_serialize_ms": None}
 

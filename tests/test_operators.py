@@ -121,82 +121,6 @@ def test_streaming_batch_twins(spark, events):
     assert sessions.agg(F.sum("n_events")).collect()[0][0] == events.count()
 
 
-class _StubGroupState:
-    """The part of ``GroupState`` that ``_sessionize_group`` uses."""
-
-    def __init__(self, value=None, timed_out=False):
-        self.value = value
-        self.hasTimedOut = timed_out
-
-    @property
-    def exists(self):
-        return self.value is not None
-
-    @property
-    def get(self):
-        return self.value
-
-    def update(self, value):
-        self.value = tuple(value)
-
-    def remove(self):
-        self.value = None
-
-    def setTimeoutDuration(self, ms):
-        pass
-
-
-def _session_tuples(frames):
-    return [(r.user_id, r.session_start.to_pydatetime(),
-             r.session_end.to_pydatetime(), r.n_events, r.total_value)
-            for pdf in frames for r in pdf.itertuples()]
-
-
-def test_sessionize_timeout_emits_the_open_session():
-    """A timed-out key is called with no rows: the open session is emitted
-    once and its state removed, instead of concatenating nothing."""
-    import pandas as pd
-    start = pd.Timestamp("2024-01-01 10:00").value // 1000
-    last = pd.Timestamp("2024-01-01 10:20").value // 1000
-    state = _StubGroupState((start, last, 3, 4.5), timed_out=True)
-    out = list(streaming._sessionize_group((7,), iter([]), state))
-    assert _session_tuples(out) == [(7, pd.Timestamp("2024-01-01 10:00"),
-                                     pd.Timestamp("2024-01-01 10:20"),
-                                     3, 4.5)]
-    assert not state.exists
-
-
-def test_sessionize_across_calls_matches_batch(spark):
-    """A session split over two micro-batches keeps its first event's
-    start, as ``batch_sessionize`` reports it over the same events."""
-    import datetime as dt
-
-    import pandas as pd
-    t0 = dt.datetime(2024, 1, 1, 10, 0)
-    events = [(t0 + dt.timedelta(minutes=m), float(v))
-              for m, v in [(0, 1), (10, 2), (25, 3), (40, 4), (120, 5)]]
-    calls = [events[:2], events[2:]]
-    state = _StubGroupState()
-    out = []
-    for call in calls:
-        pdf = pd.DataFrame({"ts": pd.to_datetime([t for t, _ in call]),
-                            "value": [v for _, v in call]})
-        out += streaming._sessionize_group((7,), iter([pdf]), state)
-    state.hasTimedOut = True
-    out += streaming._sessionize_group((7,), iter([]), state)
-    got = _session_tuples(out)
-    df = spark.createDataFrame(
-        [(i, t, 7, "view", v, None) for i, (t, v) in enumerate(events)],
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string")
-    want = [(r["user_id"], r["session_start"], r["session_end"],
-             r["n_events"], r["total_value"])
-            for r in streaming.batch_sessionize(df)
-            .orderBy("session_start").collect()]
-    assert got == want
-    assert got[0][1] == t0 and got[0][3] == 4
-
-
 def test_streaming_extraction_runs(spark, tmp_path):
     """stream_extract_pages: the batch extraction UDF under readStream -
     files landing in the source dir are extracted with per-doc error
